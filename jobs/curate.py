@@ -319,10 +319,16 @@ def _run(
     # estimate (operators/dedup.near_dups_vs_history).
     # --- per-host cap (host-spam guard) -------------------------------
     # Applied AFTER within-batch dedup (a host's near-dup copies must
-    # not consume its budget) and BEFORE history dedup (capped-out
-    # docs are dropped either way — skipping the history join for
-    # them is free accuracy-neutral work avoided; they never enter
-    # the fingerprint store because they are not curated).
+    # not consume its budget) and BEFORE history dedup, which keeps
+    # the history join off the capped-out docs. That order is NOT
+    # accuracy-neutral: a doc that history dedup later drops has
+    # already taken one of its host's K slots, so the host can end
+    # the batch with fewer than K curated docs while fresh docs of it
+    # were capped out. With quarantine on, the capped-out docs are
+    # quarantined (reason host_cap) and resume's seen-set bars them
+    # from every later batch, so the under-fill is permanent. Capping
+    # after history dedup would fill the budget at the cost of
+    # joining every survivor against history.
     n_host_capped = 0
     cap_losers = None
     if host_cap is not None:

@@ -384,7 +384,14 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--outdir", required=True)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument(
+        "--partitions", type=int, default=None,
+        help="task count of the extraction UDF stage (default: the session's "
+        "spark.sql.shuffle.partitions). Always applied as an explicit "
+        "repartition: the stage is CPU-bound Python, and adaptive execution "
+        "would otherwise size it by shuffle bytes and merge it into fewer, "
+        "longer tasks",
+    )
     ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--url-buckets", type=int, default=None)
     ap.add_argument("--snapshots", action="store_true")

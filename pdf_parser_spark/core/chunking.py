@@ -39,6 +39,11 @@ from .text import (
 )
 
 _CAPTION_MENTION = re.compile(r"\b(Table|Figure)\b", re.IGNORECASE)
+# cheap gate before norm_caption_line's seven substitutions: they only
+# rewrite whitespace and dashes (never letters), so a normalized line
+# can hold a Figure/Table caption only if the raw line spells the
+# keyword with at most whitespace between its letters
+_CAPTION_KEYWORD = re.compile(r"(?i)t\s*a\s*b\s*l\s*e|f\s*i\s*g\s*u\s*r\s*e")
 _NUMBERED_HEADING_SHAPE = re.compile(r"^\d+(?:\.\d+)*\s+.+")
 _BRAND_LINE = re.compile(
     r"Universal Serial Bus Power Delivery Specification", re.IGNORECASE
@@ -109,6 +114,8 @@ def enrich_captions(chunks: list[dict]) -> None:
         if not ch["content"]:
             continue
         for line in ch["content"].splitlines():
+            if not _CAPTION_KEYWORD.search(line):
+                continue
             ln = norm_caption_line(line)
             m = FIGURE_CAPTION.search(ln)
             if m:

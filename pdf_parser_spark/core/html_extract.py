@@ -229,6 +229,10 @@ class _MetadataParser(HTMLParser):
         self._title_parts: list[str] = []
 
     def handle_starttag(self, tag: str, attrs) -> None:
+        if self._in_title:
+            # a title holds text only: an unclosed <title> ends at the
+            # next element instead of swallowing the rest of the page
+            self._end_title()
         tag = tag.lower()
         a = {(k or "").lower(): ("" if v is None else v) for k, v in attrs}
         if tag == "html" and a.get("lang"):
@@ -259,9 +263,12 @@ class _MetadataParser(HTMLParser):
 
     def handle_endtag(self, tag: str) -> None:
         if tag.lower() == "title" and self._in_title:
-            self._in_title = False
-            self._title_done = True
-            self.meta.setdefault("title", "".join(self._title_parts).strip())
+            self._end_title()
+
+    def _end_title(self) -> None:
+        self._in_title = False
+        self._title_done = True
+        self.meta.setdefault("title", "".join(self._title_parts).strip())
 
     def handle_data(self, data: str) -> None:
         if self._in_title:

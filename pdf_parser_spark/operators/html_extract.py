@@ -215,8 +215,9 @@ def boilerplate_stats(blocks: DataFrame) -> DataFrame:
     )
 
 
-# anchor href value: quoted either way or bare-unquoted
-_HREF_RX = "(?i)<a\\b[^>]*\\bhref\\s*=\\s*(\"[^\"]*\"|'[^']*'|[^\\s>]+)"
+# anchor href value: quoted either way or bare-unquoted; the name is
+# anchored so a hyphenated `data-href=` never reads as the href
+_HREF_RX = "(?i)<a\\b[^>]*(?<![\\w-])href\\s*=\\s*(\"[^\"]*\"|'[^']*'|[^\\s>]+)"
 
 
 def html_outlinks(docs: DataFrame, html_col: str = "html", url_col: str = "url") -> DataFrame:

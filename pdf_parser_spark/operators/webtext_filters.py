@@ -240,13 +240,22 @@ def canonicalize_url(url: Column) -> Column:
 
 
 # a robots meta tag asking not to index: name/content in either
-# attribute order, either quoting, directive list containing the
-# word noindex or the none shorthand (= noindex,nofollow)
-_ROBOTS_VAL = "(\"[^\"]*\\b(?:noindex|none)\\b[^\"]*\"|'[^']*\\b(?:noindex|none)\\b[^']*')"
-_ROBOTS_NAME = "(\"robots\"|'robots'|robots)"
+# attribute order, double-, single- or un-quoted, directive list
+# containing the word noindex or the none shorthand (= noindex,nofollow).
+# An unquoted value runs to whitespace or '>' (as the HTML parser reads
+# it), so a bare name must end there too: `name=robotsXYZ` is not robots.
+# Attribute names are anchored so `data-content=` / `data-name=` decoys
+# never stand in for the real attributes.
+_ROBOTS_VAL = (
+    "(\"[^\"]*\\b(?:noindex|none)\\b[^\"]*\"|'[^']*\\b(?:noindex|none)\\b[^']*'"
+    "|(?![\"'])[^\\s>]*\\b(?:noindex|none)\\b[^\\s>]*)"
+)
+_ROBOTS_NAME = "(\"robots\"|'robots'|robots(?=[\\s>]))"
+_NAME_ATTR = "(?<![\\w-])name\\s*=\\s*"
+_CONTENT_ATTR = "(?<![\\w-])content\\s*=\\s*"
 _ROBOTS_NOINDEX_RX = (
-    f"(?is)<meta\\b(?:[^>]*\\bname\\s*=\\s*{_ROBOTS_NAME}[^>]*\\bcontent\\s*=\\s*{_ROBOTS_VAL}"
-    f"|[^>]*\\bcontent\\s*=\\s*{_ROBOTS_VAL}[^>]*\\bname\\s*=\\s*{_ROBOTS_NAME})"
+    f"(?is)<meta\\b(?:[^>]*{_NAME_ATTR}{_ROBOTS_NAME}[^>]*{_CONTENT_ATTR}{_ROBOTS_VAL}"
+    f"|[^>]*{_CONTENT_ATTR}{_ROBOTS_VAL}[^>]*{_NAME_ATTR}{_ROBOTS_NAME})"
 )
 
 

@@ -1,8 +1,12 @@
 """SparkSession factory tuned for the extraction workload (SURVEY §4).
 
 Scale rationale (targets a 1000-executor cluster; local[N] here):
-  - AQE on: runtime coalescing + skew-join splitting absorb the
-    document-size skew the corpus is built with (mega-docs, hot hosts).
+  - AQE on: runtime coalescing + skew-join splitting serve the native
+    (byte-bound) stages. AQE sizes partitions by shuffle BYTES, which
+    says little about the CPU-bound Python extraction stage (13 MB of
+    shuffled text took about a minute of task time on 4 cores), so that
+    stage gets an explicit repartition count AQE leaves alone
+    (operators/extract.salted_repartition, default: shuffle.partitions).
   - Arrow batches capped so a batch of page-text blobs fits executor
     memory (html/text rows are KB-MB scale, unlike typical columns).
   - shuffle.partitions sized for local test runs; production submit
@@ -21,7 +25,8 @@ from pyspark.sql import SparkSession
 
 # At 100 TB / ~128 MB splits there are ~800k scan tasks; shuffle
 # partitions should track cluster cores × 2-3, set at submit time.
-# Locally: cores × 2 keeps all 32 threads busy without tiny-task spam.
+# Locally: cores × 2 keeps every core busy without tiny-task spam, and
+# is the extraction stage's default task count.
 _LOCAL_DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

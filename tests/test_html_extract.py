@@ -255,6 +255,17 @@ def test_metadata_first_occurrence_wins_and_missing_none():
     assert all(v is None for v in extract_metadata(None).values())
 
 
+def test_metadata_unclosed_title_ends_at_next_tag():
+    """A title holds text only, so an unclosed <title> ends at the next
+    element instead of swallowing the rest of the page."""
+    from pdf_parser_spark.core.html_extract import extract_metadata
+
+    unclosed = "<html><head><title>x<body><p>the whole page body</p></body></html>"
+    assert extract_metadata(unclosed)["title"] == "x"
+    # a later <title> after the cut-off one still never overrides it
+    assert extract_metadata("<title>a<meta name=x><title>b</title>")["title"] == "a"
+
+
 def test_metadata_truncated_and_hostile_bytes():
     from pdf_parser_spark.core.html_extract import extract_metadata
 
@@ -371,9 +382,10 @@ def test_fuzz_columnar_robots_grammar_matches_parser():
     _ROBOTS_NOINDEX_RX, a Spark/Java pattern that also compiles under
     Python re) must agree with the DOM parser's harvested robots
     field across generated meta-tag spellings — attribute order,
-    quoting style, casing, directive lists and decoy tags. Divergence
-    means the funnel drops (or keeps) pages the metadata table
-    contradicts."""
+    quoting style (unquoted too), casing, directive lists, other meta
+    names that start with `robots`, and a `data-content` decoy.
+    Divergence means the funnel drops (or keeps) pages the metadata
+    table contradicts."""
     import re
 
     from hypothesis import given, settings
@@ -388,7 +400,7 @@ def test_fuzz_columnar_robots_grammar_matches_parser():
         ["noindex", "nofollow", "none", "index", "noarchive", "nosnippet"]
     )
     directives = st.lists(directive, min_size=1, max_size=3)
-    quote = st.sampled_from(['"', "'"])
+    quote = st.sampled_from(['"', "'", ""])
     case = st.sampled_from([str.lower, str.upper])
 
     @settings(max_examples=150, deadline=None)
@@ -398,16 +410,19 @@ def test_fuzz_columnar_robots_grammar_matches_parser():
         content_first=st.booleans(),
         fn=case,
         pad=st.sampled_from(["", " ", "  "]),
+        name=st.sampled_from(["robots", "robots", "robotsxyz", "robots-x"]),
+        decoy=st.sampled_from(["", 'data-content="noindex" ']),
     )
-    def run(ds, q, content_first, fn, pad):
-        content = ", ".join(ds)
-        name_attr = fn(f"name={pad}{q}robots{q}")
-        content_attr = fn(f"content={pad}{q}{content}{q}")
+    def run(ds, q, content_first, fn, pad, name, decoy):
+        # an unquoted value ends at whitespace, so its list has no spaces
+        content = ("," if q == "" else ", ").join(ds)
+        name_attr = fn(f"name={pad}{q}{name}{q}")
+        content_attr = fn(f"{decoy}content={pad}{q}{content}{q}")
         attrs = (
             f"{content_attr} {name_attr}" if content_first else f"{name_attr} {content_attr}"
         )
         html = f"<html><head><meta {attrs}><title>t</title></head></html>"
-        want = any(d in ("noindex", "none") for d in ds)
+        want = name == "robots" and any(d in ("noindex", "none") for d in ds)
         # parser ground truth: the robots STRING it harvests implies
         # the same keep/drop decision (case-insensitive word match)
         harvested = extract_metadata(html)["robots"] or ""
@@ -445,8 +460,9 @@ def test_fuzz_columnar_href_grammar_matches_parser():
         q=st.sampled_from(['"', "'", ""]),
         fn=st.sampled_from([str.lower, str.upper]),
         decoy_first=st.booleans(),
+        decoy_name=st.sampled_from(["class", "data-href", "x-href"]),
     )
-    def run(hrefs, q, fn, decoy_first):
+    def run(hrefs, q, fn, decoy_first, decoy_name):
         from hypothesis import assume
 
         # HTML5 forbids '=' inside UNQUOTED attribute values (the
@@ -457,7 +473,8 @@ def test_fuzz_columnar_href_grammar_matches_parser():
             # case transform applies to markup names only — attribute
             # VALUES are case-significant and must round-trip raw
             attr = f"{fn('href')}={q}{h}{q}"
-            decoy = f"{fn('class')}=\"x\""
+            # hyphenated names ending in href are other attributes
+            decoy = f"{fn(decoy_name)}=\"/decoy\""
             attrs = f"{decoy} {attr}" if decoy_first else f"{attr} {decoy}"
             parts.append(f"<{fn('a')} {attrs}>t</{fn('a')}>")
         parts.append("<a>bare anchor</a><p>filler</p>")

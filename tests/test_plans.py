@@ -76,6 +76,28 @@ def test_column_pruning_extraction_path(spark):
     assert "html" not in plan.split("MapInPandas")[0], "html must be pruned before the UDF"
 
 
+def test_salted_repartition_count_survives_aqe(spark):
+    """The extraction shuffle's task count is explicit: with no count
+    given it is the session's shuffle.partitions, and adaptive execution
+    must not coalesce it by bytes (a few MB of text is tens of seconds
+    of CPU-bound UDF time, and a merged partition becomes the stage's
+    straggler). A tiny frame is the case AQE would merge hardest."""
+    from pyspark.sql import functions as F
+
+    from pdf_parser_spark.operators.extract import salted_repartition
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    docs = spark.range(0, 400).select(F.concat(F.lit("https://h/"), F.col("id")).alias("url"))
+    tagged = salted_repartition(docs).select("url", F.spark_partition_id().alias("pid"))
+    # execute THIS DataFrame's QueryExecution so the adaptive plan finalizes
+    rows = tagged.collect()
+    plan = tagged._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "AQEShuffleRead" not in plan, plan
+    assert len(rows) == 400
+    assert {r["pid"] for r in rows} == set(range(n))
+
+
 @pytest.mark.parametrize(
     "name",
     ["q01_pricing_summary", "q22_maxima_total", "q28_quality_summary"],
