@@ -10,6 +10,8 @@ synthetic corpus, and prints ONE JSON line:
 
 Full materialization is forced with the noop sink (no collect, no
 disk) so timings measure the plan, not the driver.
+$SPARK_GRAFT_CPUS defaults to the host's core count: a larger local[N]
+oversubscribes the cores and measures contention, not the plan.
 """
 
 from __future__ import annotations
@@ -140,7 +142,7 @@ def _scaling_evidence() -> dict | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000"))
     spark = get_spark(app_name="bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")

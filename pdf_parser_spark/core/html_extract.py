@@ -155,10 +155,12 @@ def segment_blocks(html: str | bytes | None) -> list[Block]:
     return [b for b in parser.state.blocks if b.n_chars > 0]
 
 
-# <meta charset=utf-8> and the legacy
-# <meta http-equiv=Content-Type content="text/html; charset=...">
-# both reduce to a charset= token inside a meta tag
-_CHARSET_RX = re.compile(rb"(?is)<meta[^>]*charset\s*=\s*[\"']?\s*([a-z0-9_\-:.]+)")
+# a meta tag's attribute list (quoted values may hold '>'), one
+# attribute in it, and the codec-name token of a declaration
+_META_RX = re.compile(rb"""(?is)<meta\b((?:[^>"']|"[^"]*"|'[^']*')*)""")
+_ATTR_RX = re.compile(rb"""([^\s"'>/=]+)(?:\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+)))?""")
+_CODEC_RX = re.compile(rb"(?i)\s*([a-z0-9_\-:.]+)")
+_CONTENT_CHARSET_RX = re.compile(rb"(?i)charset\s*=\s*[\"']?")
 
 
 def sniff_charset(head: bytes) -> str | None:
@@ -170,8 +172,22 @@ def sniff_charset(head: bytes) -> str | None:
         return "utf-8-sig"
     if head.startswith(b"\xff\xfe") or head.startswith(b"\xfe\xff"):
         return "utf-16"  # BOM-aware: picks the right endianness itself
-    m = _CHARSET_RX.search(head)
-    if m:
+    for tag in _META_RX.finditer(head):
+        attrs: dict[bytes, bytes] = {}
+        for a in _ATTR_RX.finditer(tag.group(1)):
+            attrs.setdefault(a.group(1).lower(), a.group(2) or a.group(3) or a.group(4) or b"")
+        # <meta charset=utf-8>, or the legacy <meta http-equiv=Content-Type
+        # content="text/html; charset=...">; a charset= inside any other
+        # attribute value (a description, say) declares nothing
+        if b"charset" in attrs:
+            m = _CODEC_RX.match(attrs[b"charset"])
+        elif attrs.get(b"http-equiv", b"").strip().lower() == b"content-type":
+            c = _CONTENT_CHARSET_RX.search(attrs.get(b"content", b""))
+            m = c and _CODEC_RX.match(attrs[b"content"], c.end())
+        else:
+            continue
+        if not m:
+            continue
         name = m.group(1).decode("ascii", errors="replace")
         try:
             codecs.lookup(name)

@@ -212,8 +212,3 @@ def looks_like_heading(num: str, title: str) -> bool:
     if _BINARY_RUN.search(t):
         return False
     return True
-
-
-def title_looks_like_table(t: str | None) -> bool:
-    """True when a title starts with 'Table <n>'. orchestrate.py:183-184."""
-    return bool(re.match(r"^\s*Table\s+\d+", (t or ""), flags=re.IGNORECASE))

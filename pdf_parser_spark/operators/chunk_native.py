@@ -113,13 +113,6 @@ def extract_headings_native(
     )
 
 
-def gate_headings_by_toc(headings: DataFrame, toc: DataFrame) -> DataFrame:
-    """J7: keep detected headings whose id the ToC promises (broadcast
-    left-semi) — chunk.py:169-170."""
-    ids = toc.select("url", "section_id")
-    return headings.join(F.broadcast(ids), on=["url", "section_id"], how="left_semi")
-
-
 def override_titles_from_toc(headings: DataFrame, toc: DataFrame) -> DataFrame:
     """J8: replace detected titles with ToC titles when present
     (broadcast left join + coalesce) — chunk.py:171-172."""

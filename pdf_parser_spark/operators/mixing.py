@@ -296,47 +296,6 @@ def host_of(url: Column) -> Column:
     )
 
 
-def top_n_per_key(df: DataFrame, key_col: str, n: int, order_cols: list) -> DataFrame:
-    """Exact top-n rows per key as an EXPLICIT two-stage construction.
-
-    On Spark >= 3.5 you rarely need this: a plain
-    `row_number().over(Window.partitionBy(key).orderBy(...)) <= n`
-    filter compiles to Partial/Final WindowGroupLimit — Catalyst's
-    own two-phase top-n, which keeps n per key per input partition
-    BEFORE the exchange, so a mega-key's post-shuffle group is
-    bounded at n x P rows (host_cap below uses that form, and
-    test_plans locks the Partial node in). This manual form exists
-    for shapes the pushdown cannot see — the rank filter separated
-    from its window by other operators, rank expressions beyond
-    row_number/rank/dense_rank, or engines without the rule:
-
-      stage 1: rank within (input-partition, key) and keep n — group
-               size is bounded by the PARTITION, never by the key;
-      stage 2: rank the <= n x P survivors per key globally.
-
-    Exact for any input partitioning: a key's global top-n rows are
-    each in some partition's top-n (anything that beats them there
-    beats them globally), so stage 1 never prunes a final survivor
-    (test_mixing proves value-identity across layouts).
-    `order_cols` must be a deterministic total order (break ties!)
-    or row_number ranks arbitrarily within ties."""
-    from pyspark.sql import Window
-
-    w1 = Window.partitionBy("_tnk_pid", key_col).orderBy(*order_cols)
-    pruned = (
-        df.withColumn("_tnk_pid", F.spark_partition_id())
-        .withColumn("_tnk_rn", F.row_number().over(w1))
-        .where(F.col("_tnk_rn") <= n)
-        .drop("_tnk_pid", "_tnk_rn")
-    )
-    w2 = Window.partitionBy(key_col).orderBy(*order_cols)
-    return (
-        pruned.withColumn("_tnk_rn", F.row_number().over(w2))
-        .where(F.col("_tnk_rn") <= n)
-        .drop("_tnk_rn")
-    )
-
-
 def host_cap(
     df: DataFrame,
     max_per_host: int,
@@ -359,7 +318,7 @@ def host_cap(
     partition BEFORE the exchange, bounding a mega-host's one-task
     group at n x P rows instead of its full page count
     (test_plans.test_host_cap_window_group_limit locks the Partial
-    node in; top_n_per_key above is the explicit fallback form)."""
+    node in)."""
     from pyspark.sql import Window
 
     ordered = df.withColumn("_hc_host", host_of(F.col(url_col))).withColumn(

@@ -11,21 +11,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import text_metrics as tm
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token counts, quality ratios, fingerprint, language guess."""
-    c = F.col(text_col)
-    return (
-        df.withColumn("tokens", tm.token_count(c))
-        .withColumn("tokens_bpe", tm.bpe_ish_token_count(c))
-        .withColumn("punct_ratio", tm.punct_ratio(c))
-        .withColumn("mean_word_len", tm.mean_word_length(c))
-        .withColumn("stopword_ratio", tm.stopword_ratio(c))
-        .withColumn("quality", tm.quality_score(c))
-        .withColumn("fingerprint", tm.fingerprint(c))
-        .withColumn("lang_guess", tm.language_guess(c))
-    )
-
-
 def quality_summary(df: DataFrame, text_col: str = "text", by: str = "lang") -> DataFrame:
     """Per-group quality/token rollup (single hash agg).
 

@@ -106,14 +106,14 @@ WHERE rn <= 20
 
 @register("q96_host_cap", _Q96_ORACLE)
 def q96(spark, sf):
-    """Per-host document cap (mixing.host_cap over top_n_per_key):
-    keep the 20 smallest (portable_hash(url), url) per host — the
-    host-spam guard, implemented as the EXACT two-stage partial
-    top-n so a mega-host never serializes into one window task
-    (docs/PLANS.md). Spark derives 7-host urls from doc_id; the
-    oracle replays the survivor set with a single SQL window — a
-    green row proves the two-stage plan is value-identical to the
-    naive global window it replaces."""
+    """Per-host document cap (mixing.host_cap): keep the 20 smallest
+    (portable_hash(url), url) per host — the host-spam guard. The
+    rank filter sits on its window, so Catalyst plans it as
+    Partial/Final WindowGroupLimit and a mega-host never serializes
+    into one window task (docs/PLANS.md). Spark derives 7-host urls
+    from doc_id; the oracle replays the survivor set with a single
+    SQL window — a green row proves the partial-limit plan is
+    value-identical to the naive global window."""
     from ..operators import mixing as mx
 
     d = _t(spark, sf, "documents")

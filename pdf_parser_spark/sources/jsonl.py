@@ -8,7 +8,8 @@ silent drop (the engine-wide parse-failure policy).
 
   read_jsonl            schema'd read + `_corrupt` column
   split_corrupt         (good_rows, corrupt_rows) pair
-  toc_schema / chunk_schema   the two reference record shapes
+  TOC_SCHEMA            the reference ToC record shape
+  coerce_chunks_column  legacy/export chunk records → modern shape
 """
 
 from __future__ import annotations
@@ -26,17 +27,6 @@ TOC_SCHEMA = T.StructType(
         T.StructField("level", T.IntegerType()),
         T.StructField("parent_id", T.StringType()),
         T.StructField("full_path", T.StringType()),
-    ]
-)
-
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("section_path", T.StringType()),
-        T.StructField("start_heading", T.StringType()),
-        T.StructField("content", T.StringType()),
-        T.StructField("tables", T.ArrayType(T.StringType())),
-        T.StructField("figures", T.ArrayType(T.StringType())),
-        T.StructField("page_range", T.ArrayType(T.IntegerType())),
     ]
 )
 
@@ -83,10 +73,6 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def read_toc_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     return split_corrupt(read_jsonl(spark, path, TOC_SCHEMA))
-
-
-def read_chunks_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
-    return split_corrupt(read_jsonl(spark, path, CHUNK_SCHEMA))
 
 
 def coerce_chunks_column(

@@ -363,6 +363,15 @@ def test_decode_html_honors_declared_charset():
     ).encode("windows-1251")
     assert "привет" in extract_main_text(cyr)
 
+    # a charset= inside another attribute's value declares nothing: this
+    # valid UTF-8 page must not be decoded as shift_jis
+    decoy = (
+        '<head><meta name="description" content="use charset=shift_jis">'
+        "</head><body><p>café — naïve</p></body>"
+    ).encode("utf-8")
+    assert sniff_charset(decoy) is None
+    assert "café — naïve" in extract_main_text(decoy)
+
     # BOMs beat (absent) declarations; utf-8 BOM is stripped
     u16 = "<title>wide</title>".encode("utf-16")  # emits a BOM
     assert extract_metadata(u16)["title"] == "wide"

@@ -767,12 +767,16 @@ def test_curate_host_cap_stage(spark, tmp_path):
 def test_curate_all_stages_compose(spark, tmp_path):
     """Every funnel stage enabled at once — robots opt-out, quality,
     PII, exact dedup, transitive near-dup closure, host cap, history
-    dedup — in one run plus a resume: the accounting identity closes
-    with every stage's counter in it, quarantine reasons partition
-    the dropped set, and the fingerprint store tracks exactly the
-    curated survivors."""
+    dedup — in one run, a no-op resume and a resume with a second batch
+    that makes every stage drop: the accounting identity closes with every stage's counter in
+    it, quarantine reasons partition the dropped set, the fingerprint
+    store tracks exactly the curated survivors, and every returned
+    count equals the rows that run wrote for it."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
+    from jobs.curate import REASONS
     from jobs.curate import run as run_curate
 
     corpus = str(tmp_path / "alldocs.parquet")
@@ -792,14 +796,29 @@ def test_curate_all_stages_compose(spark, tmp_path):
         host_cap=4,
         history_dedup=True,
     )
+    written = {"curated": 0, "reasons": Counter()}
+
+    def check_counts_match_writes(m):
+        """The run's returned counts equal the rows it appended: per
+        quarantine reason, and curated."""
+        q_now = Counter(
+            {
+                r["reason"]: r["count"]
+                for r in spark.read.parquet(f"{out}/quarantine").groupBy("reason").count().collect()
+            }
+        )
+        cur_now = spark.read.parquet(f"{out}/curated").count()
+        assert {r: m[f"dropped_{r}"] for r in REASONS} == {
+            r: q_now[r] - written["reasons"][r] for r in REASONS
+        }
+        assert m["newly_curated"] == cur_now - written["curated"]
+        assert set(q_now) <= set(REASONS)
+        written.update(curated=cur_now, reasons=q_now)
+
     r = run_curate(corpus, out, spark=spark, resume=False, **kw)
-    drops = [
-        "dropped_robots_noindex", "dropped_gopher", "dropped_dup_lines",
-        "dropped_exact_dup", "dropped_near_dup", "dropped_host_cap",
-        "dropped_exact_dup_history", "dropped_near_dup_history",
-    ]
-    assert sum(r[k] for k in drops) + r["newly_curated"] == r["new_docs"] == 40
+    assert sum(r[f"dropped_{k}"] for k in REASONS) + r["newly_curated"] == r["new_docs"] == 40
     assert r["dropped_robots_noindex"] > 0 and r["dropped_host_cap"] > 0
+    check_counts_match_writes(r)
 
     curated = spark.read.parquet(f"{out}/curated")
     q = spark.read.parquet(f"{out}/quarantine")
@@ -813,3 +832,42 @@ def test_curate_all_stages_compose(spark, tmp_path):
 
     r2 = run_curate(corpus, out, spark=spark, resume=True, **kw)
     assert r2["new_docs"] == 0 and r2["newly_curated"] == 0
+    check_counts_match_writes(r2)
+
+    # batch 2: exact and near twins of the longest curated docs, an
+    # in-batch exact pair and near pair, a doc of repeated lines (each on
+    # a host of its own, so the cap never touches them), and fresh docs
+    src = curated.orderBy(F.length("text").desc(), "url").limit(2).collect()
+
+    def lines(template):
+        return "\n".join(template.format(i) for i in range(30))
+
+    t_exact = lines("Section {0} explains the measured value of sample {0} in plain words.")
+    t_near = lines("Chapter {0} describes how river number {0} floods the valley each spring.")
+    t_rep = lines("Paragraph {0} mentions a quiet garden where tall {0} trees grow slowly.")
+    planted = [
+        ("https://mirror0.example/twin", src[0]["text"]),
+        ("https://mirror1.example/twin", src[1]["text"] + " One appended closing sentence."),
+        ("https://exact0.example/a", t_exact),
+        ("https://exact1.example/b", t_exact),
+        ("https://near0.example/a", t_near),
+        ("https://near1.example/b", t_near + "\nA final added line closes the chapter."),
+        ("https://repeat.example/a", t_rep + "\n" + t_rep),
+    ]
+    extra = spark.createDataFrame(
+        [(u, src[0]["warc_ts"], b"<html></html>", t, "en") for u, t in planted],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    fresh = synthetic_documents(spark, 12, seed=99).select(
+        F.concat("url", F.lit("/b2")).alias("url"), *extra.columns[1:]
+    )
+    batch2 = str(tmp_path / "alldocs2.parquet")
+    docs.unionByName(extra).unionByName(fresh).write.parquet(batch2)
+    r3 = run_curate(batch2, out, spark=spark, resume=True, **kw)
+    assert r3["new_docs"] == 19
+    assert sum(r3[f"dropped_{k}"] for k in REASONS) + r3["newly_curated"] == 19
+    check_counts_match_writes(r3)
+    # every reason fired in some run, so a count observed on the wrong
+    # frame cannot agree with the written rows by accident
+    assert all(written["reasons"][k] > 0 for k in REASONS), written["reasons"]
+    assert r3["newly_curated"] > 0

@@ -157,37 +157,6 @@ def test_dsir_weights_table_path_matches_inline(spark):
     assert a == b
 
 
-def test_top_n_per_key_equals_single_window_any_partitioning(spark):
-    """Two-stage partial top-n == the naive single global window, for
-    every input partitioning (1, 7, 32 partitions), on a skewed key
-    distribution with a deterministic total order."""
-    from pyspark.sql import Window, functions as F
-
-    from pdf_parser_spark.operators.mixing import top_n_per_key
-
-    rows = [(f"k{(i * i) % 3}", f"u{i:04d}") for i in range(500)]  # skewed keys
-    base = spark.createDataFrame(rows, "k string, u string").withColumn(
-        "o", F.xxhash64("u")
-    )
-    w = Window.partitionBy("k").orderBy(F.col("o"), F.col("u"))
-    want = sorted(
-        (r.k, r.u)
-        for r in base.withColumn("rn", F.row_number().over(w))
-        .where("rn <= 25")
-        .collect()
-    )
-    for parts in (1, 7, 32):
-        got = sorted(
-            (r.k, r.u)
-            for r in top_n_per_key(
-                base.repartition(parts), "k", 25, [F.col("o"), F.col("u")]
-            ).collect()
-        )
-        assert got == want, parts
-    # squares mod 3 hit only {0, 1}: two (skewed) keys, 25 kept each
-    assert len(want) == 50
-
-
 def test_host_cap_deterministic_and_per_host(spark):
     from pyspark.sql import functions as F
 

@@ -8,7 +8,7 @@ legs at 10x the per-round bench corpus — 50k synthetic documents
 and the partition-skew counters from the extraction lineage
 side-table to BENCH/bigscale_last_run.json.
 
-    python tools/bigscale_bench.py [--docs 50000] [--cpus 32]
+    python tools/bigscale_bench.py [--docs 50000] [--cpus N]  (default: host cores)
 
 Legs intentionally use the PRODUCTION operator paths (xxhash64 twins,
 sharded packing, banded hyperplane LSH), not the md5 oracle twins.
@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import time
 from pathlib import Path
 import sys
@@ -43,7 +44,7 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=50_000)
     ap.add_argument("--extract-docs", type=int, default=20_000)
     ap.add_argument("--vecs", type=int, default=20_000)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
     ap.add_argument(
         "--legs",
         default=None,
