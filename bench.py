@@ -176,11 +176,11 @@ def main() -> None:
             "overwrite"
         ).parquet(corpus_path)
     docs = read_documents(spark, corpus_path)
-    _force(ox.extract_documents(ox.salted_repartition(docs, cpus * 2)))  # warmup
+    _force(ox.extract_documents(ox.salted_repartition(docs)))  # warmup
     extract_sec = float("inf")
     for _ in range(2):
         t0 = time.perf_counter()
-        _force(ox.extract_documents(ox.salted_repartition(docs, cpus * 2)))
+        _force(ox.extract_documents(ox.salted_repartition(docs)))
         extract_sec = min(extract_sec, time.perf_counter() - t0)
     timings["extract_pipeline"] = round(extract_sec, 3)
 
@@ -188,11 +188,11 @@ def main() -> None:
     # corpus, html binary column through the DOM tokenizer
     from pdf_parser_spark.operators.html_extract import html_main_text
 
-    _force(html_main_text(ox.salted_repartition(docs, cpus * 2)))  # warmup
+    _force(html_main_text(ox.salted_repartition(docs)))  # warmup
     html_sec = float("inf")
     for _ in range(2):
         t0 = time.perf_counter()
-        _force(html_main_text(ox.salted_repartition(docs, cpus * 2)))
+        _force(html_main_text(ox.salted_repartition(docs)))
         html_sec = min(html_sec, time.perf_counter() - t0)
     timings["html_strip_pipeline"] = round(html_sec, 3)
 

@@ -41,6 +41,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from pdf_parser_spark.core.pipeline import STATUSES  # noqa: E402
 from pdf_parser_spark.operators import extract as ox  # noqa: E402
 from pdf_parser_spark.plans.session import get_spark  # noqa: E402
 from pdf_parser_spark.sources.corpus import read_documents  # noqa: E402
@@ -57,14 +58,15 @@ def _parquet_files(path: str) -> set[str]:
 SIDE_TABLES = ("toc", "chunks", "validation", "doc_metrics", "lineage")
 
 
-def _write_side_tables(out: Path, new_batch, batch_id: str) -> int:
+def _write_side_tables(out: Path, new_batch, batch_id: str) -> tuple[int, dict[str, int]]:
     """Derive the five side tables from one extracted batch and append,
     each partitioned by a literal batch column. The partition makes a
     batch's side rows individually addressable (<side>/batch=<id>/), so
     a crash mid-way is healed by deleting those directories and
     re-appending — idempotent, no dedup pass over corpus-sized tables.
-    Returns the batch row count (observe(): the count attests the rows
-    the WRITE itself consumed, not a separate job)."""
+    Returns the batch row count and its per-status counts (zero counts
+    omitted), both observe()d on the toc write: they attest the rows
+    the WRITE itself consumed, not a separate job."""
     from pyspark.sql import Observation
 
     for name in SIDE_TABLES:
@@ -81,7 +83,11 @@ def _write_side_tables(out: Path, new_batch, batch_id: str) -> int:
 
     tag = F.lit(batch_id).alias("batch")
     obs = Observation()
-    observed = new_batch.observe(obs, F.count(F.lit(1)).alias("rows"))
+    observed = new_batch.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        *(F.count_if(F.col("status") == s).alias(s) for s in STATUSES),
+    )
     for name, fn in (
         ("toc", ox.toc_table),
         ("chunks", ox.chunks_table),
@@ -93,7 +99,8 @@ def _write_side_tables(out: Path, new_batch, batch_id: str) -> int:
         fn(src).select("*", tag).write.mode("append").partitionBy("batch").parquet(
             str(out / name)
         )
-    return int(obs.get["rows"])
+    got = obs.get
+    return int(got["rows"]), {s: int(got[s]) for s in STATUSES if got[s]}
 
 
 def _heal_incomplete_batches(
@@ -335,11 +342,7 @@ def run(
     # exact file list / snapshot id
     _pending_marker(out, batch_id, marker_payload)
     if new_batch is not None:
-        n_new = _write_side_tables(out, new_batch, batch_id)
-        status_counts = {
-            r["status"]: r["n"]
-            for r in new_batch.groupBy("status").agg(F.count("*").alias("n")).collect()
-        }
+        n_new, status_counts = _write_side_tables(out, new_batch, batch_id)
     _finish_marker(out, batch_id, marker_payload)
     side_sec = time.perf_counter() - t_side0
 

@@ -9,12 +9,15 @@ Byte-identical to the reference validator:
 
 The greedy fuzzy phase is *stateful and sequential* (earlier ToC rows
 consume chunks) — in Spark it must stay whole-document inside one
-applyInPandas group; a cross-join + row_number approximation is NOT
-order-equivalent (SURVEY J3).
+per-document call (extraction's mapInPandas, or the per-url cogroup
+in operators/validate_dist.py); a cross-join + row_number
+approximation is NOT order-equivalent (SURVEY J3).
 
-Fuzzy scores use difflib.SequenceMatcher.ratio, the reference's
-fallback when python-Levenshtein is absent (validate.py:86-93); this
-engine standardizes on it for determinism.
+Fuzzy scores use difflib.SequenceMatcher(None, toc_title,
+chunk_title).ratio(), the reference's fallback when
+python-Levenshtein is absent (validate.py:86-93); this engine
+standardizes on it for determinism. The matcher is not symmetric, so
+the argument order is part of the contract.
 """
 
 from __future__ import annotations
@@ -55,11 +58,6 @@ _HAS_ALPHA = re.compile(r"[A-Za-z]")
 _WORD_3PLUS = re.compile(r"\b[A-Za-z]{3,}\b")
 
 _BRAND_FOLDED = "universalserialbuspowerdeliveryspecification"
-
-
-def fuzzy_ratio(a: str, b: str) -> float:
-    """Similarity in [0,1]. validate.py:86-93 difflib fallback path."""
-    return SequenceMatcher(None, a, b).ratio()
 
 
 def clean_toc_title(title: str) -> str:
@@ -211,10 +209,23 @@ def match_sections(
     Extra = never-claimed chunks (J4, anti-join analog). Out-of-order =
     matched chunk indices below the running max (W7, window analog).
     """
+    # titles repeat within a document (ToC rows, chunk titles, extra
+    # labels): clean each distinct title once per call
+    cleaned: dict[str, str] = {}
+
+    def clean(title: str) -> str:
+        s = cleaned.get(title)
+        if s is None:
+            s = cleaned[title] = clean_toc_title(title)
+        return s
+
     chunk_by_id: dict[str, int] = {
         norm_id(c["section_id"]): i for i, c in enumerate(chunks) if c.get("section_id")
     }
-    chunk_titles = [(i, clean_toc_title(c.get("title") or "").lower()) for i, c in enumerate(chunks)]
+    chunk_titles = [clean(c.get("title") or "").lower() for c in chunks]
+    # one matcher per chunk title, built on the first fuzzy probe: the
+    # chunk title is the b side, indexed once; each probe becomes the a side
+    matchers: list[SequenceMatcher] = []
 
     used: set[int] = set()
     matched_labels: list[str] = []
@@ -223,18 +234,27 @@ def match_sections(
 
     for t in toc:
         tid = norm_id(t["section_id"])
-        title_clean = clean_toc_title(t.get("title") or "")
+        title_clean = clean(t.get("title") or "")
 
         found: int | None = None
         if prefer_section_id and tid in chunk_by_id and chunk_by_id[tid] not in used:
             found = chunk_by_id[tid]
         else:
+            if not matchers:
+                matchers = [SequenceMatcher(None, "", lt) for lt in chunk_titles]
             probe = title_clean.lower()
             best_i, best_score = None, 0.0
-            for i, ltitle in chunk_titles:
+            for i, sm in enumerate(matchers):
                 if i in used:
                     continue
-                score = fuzzy_ratio(probe, ltitle)
+                sm.set_seq1(probe)
+                # ratio <= quick_ratio <= real_quick_ratio: a candidate
+                # bounded below the threshold cannot match, and one
+                # bounded below the best so far cannot win the strict `>`
+                bound = max(best_score, fuzzy_threshold)
+                if sm.real_quick_ratio() < bound or sm.quick_ratio() < bound:
+                    continue
+                score = sm.ratio()
                 if score > best_score:
                     best_i, best_score = i, score
             if best_i is not None and best_score >= fuzzy_threshold:
@@ -249,7 +269,7 @@ def match_sections(
             matched_idx.append(None)
 
     extra_labels = [
-        f"{c.get('section_id')} {clean_toc_title(c.get('title') or '')}"
+        f"{c.get('section_id')} {clean(c.get('title') or '')}"
         for i, c in enumerate(chunks)
         if i not in used
     ]

@@ -6,11 +6,11 @@ One call = the reference's full per-document lifecycle:
   validation   ↔ /root/reference/orchestrate.py:395-422
   metrics      ↔ metrics.pyc compute_metrics
 
-This function is the unit of work executed per url inside the Spark
-applyInPandas group (operators/extract.py) — the whole lifecycle stays
-document-local, so stages need zero extra shuffles and the reference's
-sequential semantics (greedy fuzzy match, ordered caption lists) hold
-exactly. Per-document exceptions are captured into the result status
+This function is the unit of work executed per url inside the
+extraction mapInPandas pass (operators/extract.py) — the whole
+lifecycle stays document-local, so stages need zero extra shuffles and
+the reference's sequential semantics (greedy fuzzy match, ordered
+caption lists) hold exactly. Per-document exceptions are captured into the result status
 (never raised) for parse-failure accounting per partition.
 
 Stage coupling note: chunking consumes the *validator-cleaned* ToC
@@ -24,6 +24,9 @@ from __future__ import annotations
 import traceback
 
 from . import chunking, doc_metrics, matching, pages, toc
+
+# every value extract_document puts in "status"
+STATUSES = ("ok", "empty", "no_toc", "error")
 
 
 def extract_document(
@@ -74,12 +77,13 @@ def extract_document(
             )
         result["toc"] = toc_records
 
-        # chunk stage re-loads the ToC through the validator cleaner
-        # (run.py:139-152) and drops rows inside the ToC page range
+        # the reference loads the ToC through the validator cleaner
+        # twice (the chunk CLI, run.py:139-152, and the report path);
+        # the cleaned rows are never mutated, so clean once and share.
+        # The chunk stage also drops rows inside the ToC page range.
         skip_pages = set(range(rng[0], rng[1] + 1)) if rng else set()
-        toc_loaded = matching.load_toc_records(toc_records)
-        if rng:
-            toc_loaded = [e for e in toc_loaded if e["page"] > rng[1]]
+        toc_clean = matching.load_toc_records(toc_records)
+        toc_loaded = [e for e in toc_clean if e["page"] > rng[1]] if rng else toc_clean
 
         if toc_loaded:
             chunks = chunking.build_chunks_from_toc(doc_pages, toc_loaded, skip_pages=skip_pages)
@@ -90,18 +94,18 @@ def extract_document(
         if not rng:
             result["status"] = "no_toc"
 
-        # validation + metrics re-load both sinks exactly like the
-        # report path (orchestrate.py:395-422): cleaned ToC vs coerced
-        # export records
-        toc_for_val = matching.load_toc_records(toc_records)
+        # validation + metrics compare what the report path loads back
+        # from both sinks (orchestrate.py:395-422): the cleaned ToC
+        # (all rows, the ToC-range filter is the chunk stage's only)
+        # vs the export records coerced back to chunks
         chunks_for_val = [matching.coerce_chunk_record(r) for r in exports]
         result["validation"] = matching.validation_report(
-            toc_for_val,
+            toc_clean,
             chunks_for_val,
             fuzzy_threshold=fuzzy_threshold,
             prefer_section_id=prefer_section_id,
         )
-        result["metrics"] = doc_metrics.compute_metrics(toc_for_val, chunks_for_val)
+        result["metrics"] = doc_metrics.compute_metrics(toc_clean, chunks_for_val)
         return result
     except Exception:
         result["status"] = "error"

@@ -16,9 +16,9 @@ The *order* of replacement steps is part of the byte-identity contract
 ligature entries are dead rows — kept for fidelity of the mapping table
 but unreachable, exactly as in the reference).
 
-All functions are plain str -> str/bool and are applied in vectorized
-batches (pd.Series.map) inside pandas UDFs; regexes compile once at
-module import (once per executor worker).
+All functions are plain str -> str/bool, called per document inside
+core.pipeline.extract_document; regexes compile once at module import
+(once per executor worker).
 """
 
 from __future__ import annotations
@@ -109,11 +109,15 @@ def normalize_text(s: str) -> str:
     """
     if not s:
         return ""
-    s = _NBSP.sub(" ", s)
-    s = _DASHES.sub("-", s)
-    for src, dst in _LIGATURE_FOLD:
-        s = s.replace(src, dst)
-    s = _HSPACE_RUN.sub(" ", s)
+    # every source character of the three folds is non-ASCII
+    if not s.isascii():
+        s = _NBSP.sub(" ", s)
+        s = _DASHES.sub("-", s)
+        for src, dst in _LIGATURE_FOLD:
+            s = s.replace(src, dst)
+    # a lone space already reads " "; only a tab or a double space can change
+    if "\t" in s or "  " in s:
+        s = _HSPACE_RUN.sub(" ", s)
     return s.strip()
 
 
@@ -153,19 +157,31 @@ def clean_content(text: str) -> str:
         return ""
     for glyph in BULLET_GLYPHS:
         text = text.replace(glyph, "- ")
-    text = _HYPHEN_WRAP_LOWER.sub(r"\1\2", text)
+    # each guarded pass runs only when the text holds a literal its
+    # pattern needs; skipping it otherwise is a no-op by construction
+    if "-\n" in text:
+        text = _HYPHEN_WRAP_LOWER.sub(r"\1\2", text)
     text = _DASH_WRAP_ANY.sub(r"\1 \2", text)
     text = text.replace('\\"', '"').replace("\\'", "'")
-    text = _LONE_SLASH.sub("", text)
+    if "/" in text:
+        text = _LONE_SLASH.sub("", text)
     text = _CAMEL_BOUNDARY.sub(r"\1 \2", text)
-    text = _QUOTED_SPAN.sub(r' "\1" ', text)
+    if '"' in text:
+        text = _QUOTED_SPAN.sub(r' "\1" ', text)
 
     kept: list[str] = []
     for line in text.splitlines():
         ln = line.rstrip()
-        ln = _LEADER_RUN_THEN_PAGE.sub("", ln)
-        ln = _LEADER_RUN.sub(" ", ln)
-        ln = _SPACE_RUN.sub(" ", ln).strip()
+        # both leader patterns need at least two of .·• in the line
+        if ln.count(".") + ln.count("·") + ln.count("•") >= 2:
+            ln = _LEADER_RUN_THEN_PAGE.sub("", ln)
+            ln = _LEADER_RUN.sub(" ", ln)
+        # after splitlines, the only ASCII whitespace left in a line is
+        # space, tab and \x1f, so an ASCII line without a tab, \x1f or a
+        # double space has no run for _SPACE_RUN to collapse
+        if not ln.isascii() or "  " in ln or "\t" in ln or "\x1f" in ln:
+            ln = _SPACE_RUN.sub(" ", ln)
+        ln = ln.strip()
         if ln:
             kept.append(ln)
     return "\n".join(kept).strip()

@@ -3,12 +3,18 @@
 from __future__ import annotations
 
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from jobs.extract import run as run_job
 from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
+
+
+def _status_counts(spark, out: str) -> dict[str, int]:
+    ex = spark.read.parquet(str(Path(out) / "extracted"))
+    return {r["status"]: r["count"] for r in ex.groupBy("status").count().collect()}
 
 
 def test_resume_skips_already_extracted(spark, tmp_path):
@@ -19,13 +25,18 @@ def test_resume_skips_already_extracted(spark, tmp_path):
     first = run_job(corpus, out, resume=False, spark=spark)
     assert first["newly_extracted"] == 24
     assert first["total_extracted"] == 24
-    # reference-faithful per-doc failure accounting reaches the summary
+    # reference-faithful per-doc failure accounting reaches the summary:
+    # the counts observed on the side-table write equal the statuses of
+    # the rows the extracted table holds, zero counts omitted
     assert sum(first["status_counts"].values()) == 24
+    assert first["status_counts"] == _status_counts(spark, out)
+    assert len(first["status_counts"]) > 1
 
     second = run_job(corpus, out, resume=True, spark=spark)
     assert second["already_extracted"] == 24
     assert second["newly_extracted"] == 0
     assert second["total_extracted"] == 24
+    assert second["status_counts"] == {}
 
     # side tables exist and line up with the extracted batch
     toc = spark.read.parquet(str(Path(out) / "toc"))
@@ -43,11 +54,15 @@ def test_resume_extracts_only_remainder(spark, tmp_path):
     write_documents(full.limit(10), corpus_half)
     write_documents(full, corpus_full)
 
-    run_job(corpus_half, out, resume=False, spark=spark)
+    first = run_job(corpus_half, out, resume=False, spark=spark)
     second = run_job(corpus_full, out, resume=True, spark=spark)
     assert second["already_extracted"] == 10
     assert second["newly_extracted"] == 10
     assert second["total_extracted"] == 20
+    # each run counts only its own batch
+    assert Counter(first["status_counts"]) + Counter(second["status_counts"]) == Counter(
+        _status_counts(spark, out)
+    )
     # idempotent per url: no duplicates after the resumed append
     ex = spark.read.parquet(str(Path(out) / "extracted"))
     assert ex.select("url").distinct().count() == 20

@@ -110,9 +110,7 @@ def main() -> None:
     ex_docs = docs.limit(args.extract_docs)
     if only is None or "extract_pipeline" in only:
         t0 = time.perf_counter()
-        extracted = ox.extract_documents(
-            ox.salted_repartition(ex_docs, args.cpus * 2)
-        ).cache()
+        extracted = ox.extract_documents(ox.salted_repartition(ex_docs)).cache()
         n_ex = extracted.count()
         ex_sec = time.perf_counter() - t0
         lineage = ox.lineage_metrics(extracted).cache()
@@ -177,7 +175,7 @@ def main() -> None:
         lineage.unpersist()
         extracted.unpersist()
 
-    leg("html_strip", lambda: _force(html_main_text(ox.salted_repartition(ex_docs, args.cpus * 2))))
+    leg("html_strip", lambda: _force(html_main_text(ox.salted_repartition(ex_docs))))
 
     # --- WARC ingest (Common Crawl's native container, r4) -----------
     def warc_ingest():
