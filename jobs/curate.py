@@ -18,10 +18,11 @@ The standard pre-training data hygiene pass, end to end:
       clusters and keeps one canonical doc)     (bucketed, no O(n²))
     → dedup vs HISTORY (--history-dedup):
       exact via stored md5 fps, near via
-      banded-LSH join against the persisted
-      signature store — historical text is
+      banded-LSH join against the stored
+      signature table — historical text is
       never re-read; the store self-bootstraps
       and self-heals from the curated table     (state ∝ docs, tiny)
+    → per-host cap (--host-cap)                 (WindowGroupLimit)
     → append (url, reason) drops to
       <outdir>/quarantine                       (the drop ledger)
     → append curated rows to <outdir>/curated   (the checkpoint)
@@ -38,13 +39,15 @@ funnel order. The quarantine table is the only record of drops: each
 `dropped_<reason>` metric is an Observation taken on the quarantine
 write itself, and `newly_curated` one on the curated write, so the
 counts are the written tables' counts and no extra action runs for
-them. `new_docs` is counted separately (it also fills the cache of the
-flagged frame), so the accounting identity new_docs = Σ dropped +
-newly_curated compares independent counts. `stage_secs` holds driver
-wall time for scan_count, quality_funnel, history_dedup (when on),
-quarantine_write, curated_write and fingerprint_store (when on). The
-dedup and host-cap stages are lazy: they run inside quarantine_write,
-or inside history_dedup when it is on.
+them. `new_docs` is counted separately (on the quality stage's
+checkpoint), so the accounting identity new_docs = Σ dropped +
+newly_curated compares independent counts. Every stage ends in an eager
+checkpoint, so `stage_secs` holds each stage's own driver wall time, in
+run order: scan_count, quality_funnel, exact_dup, near_dup, history_dedup
+(signatures and store catch-up), exact_dup_history, near_dup_history,
+host_cap, quarantine_write, curated_write, curated_count and
+fingerprint_store — each only when its stage runs. `wall_sec` covers
+the whole call.
 
 `--snapshots` commits the curated AND quarantine tables through the
 snapshot-manifest layer (sinks/snapshots.py): each run is one atomic,
@@ -82,13 +85,13 @@ REASONS = (
     "dup_lines",
     "exact_dup",
     "near_dup",
-    "host_cap",
     "exact_dup_history",
     "near_dup_history",
+    "host_cap",
 )
 (
     ROBOTS_NOINDEX, GOPHER, DUP_LINES, EXACT_DUP,
-    NEAR_DUP, HOST_CAP, EXACT_DUP_HISTORY, NEAR_DUP_HISTORY,
+    NEAR_DUP, EXACT_DUP_HISTORY, NEAR_DUP_HISTORY, HOST_CAP,
 ) = REASONS
 
 
@@ -174,271 +177,246 @@ def run(
     store_path = str(out / "fingerprints")
 
     stage_secs: dict[str, float] = {}
+    t = t0
 
-    def _mark(name: str, t_start: float) -> float:
+    def _mark(name: str) -> None:
+        nonlocal t
         now = time.perf_counter()
-        stage_secs[name] = round(now - t_start, 2)
-        return now
+        stage_secs[name] = round(now - t, 2)
+        t = now
 
-    # every persisted frame is released even when a write fails
-    # mid-job — a long-lived session must not accumulate cached
-    # copies of the corpus across retries
-    caches: list = []
-    try:
-        if input_format == "warc":
-            # Common Crawl archives: recover text via the DOM stripper so
-            # the quality/PII/dedup funnel operates on main content — one
-            # extra mapInPandas pass, still zero shuffles before the funnel
-            from pdf_parser_spark.operators.html_extract import html_main_text
-            from pdf_parser_spark.sources.warc import warc_to_documents
+    # Every stage ends in an eager localCheckpoint: later plans start at a
+    # batch-sized LogicalRDD leaf instead of re-planning the whole funnel,
+    # and a write to the curated/quarantine dirs cannot re-derive an
+    # earlier stage. Nothing is released by hand: once the frames go out
+    # of scope, the next garbage collection lets Spark's ContextCleaner
+    # free the checkpoint blocks, so a long-lived session does not
+    # accumulate them. A checkpoint cannot be recomputed, so a lost
+    # executor fails the run instead of retrying a stage — safe, because
+    # the curated table is the job's checkpoint and a rerun with --resume
+    # converges (quarantine lands before curated, and resume skips both).
+    if input_format == "warc":
+        # Common Crawl archives: recover text via the DOM stripper so
+        # the quality/PII/dedup funnel operates on main content — one
+        # extra mapInPandas pass, still zero shuffles before the funnel
+        from pdf_parser_spark.operators.html_extract import html_main_text
+        from pdf_parser_spark.sources.warc import warc_to_documents
 
-            raw = warc_to_documents(spark, input_path)
-            stripped = html_main_text(raw).select(
-                "url", F.col("extracted_text").alias("text")
-            )
-            # one url-keyed join re-attaches the metadata the stripper's
-            # narrow (url, text) contract drops — the funnel's only
-            # pre-funnel shuffle in warc mode
-            docs = raw.drop("text").join(stripped, on="url")
-            docs = docs.select("url", "warc_ts", "html", "text", "lang")
-        elif input_format == "parquet":
-            docs = read_documents(spark, input_path)
+        raw = warc_to_documents(spark, input_path)
+        stripped = html_main_text(raw).select(
+            "url", F.col("extracted_text").alias("text")
+        )
+        # one url-keyed join re-attaches the metadata the stripper's
+        # narrow (url, text) contract drops — the funnel's only
+        # pre-funnel shuffle in warc mode
+        docs = raw.drop("text").join(stripped, on="url")
+        docs = docs.select("url", "warc_ts", "html", "text", "lang")
+    elif input_format == "parquet":
+        docs = read_documents(spark, input_path)
+    else:
+        raise ValueError(f"unknown input_format {input_format!r} (parquet|warc)")
+    n_input = docs.count()
+    _mark("scan_count")
+
+    already = 0
+    if resume:
+        # resume must skip BOTH prior outcomes: curated urls (the
+        # checkpoint) and quarantined urls — otherwise every resume
+        # re-runs the full funnel on previously-dropped docs and
+        # re-appends duplicate (url, reason) quarantine rows
+        seen = None
+        cur_tbl = _read_or_none(spark, curated_path, snapshots)
+        if cur_tbl is not None:
+            done = cur_tbl.select("url").distinct()
+            already = done.count()
+            seen = done
+        q_tbl = _read_or_none(spark, quarantine_path, snapshots)
+        if q_tbl is not None:
+            q_seen = q_tbl.select("url")
+            seen = q_seen if seen is None else seen.unionByName(q_seen)
+        if seen is not None:
+            # the checkpoint cuts the parquet-path lineage: this run
+            # APPENDS to the curated/quarantine dirs below, and a
+            # re-evaluated anti-join against the re-listed dirs, which
+            # then contain this very batch, would come back EMPTY
+            seen = seen.distinct().localCheckpoint()
+            docs = docs.join(seen, on="url", how="left_anti")
+
+    # the quality stage tags each doc with its first failing reason
+    # (null = kept), in ONE pass over raw docs. The robots opt-out rides
+    # the same pass as a columnar regex column; disabled, it is a literal
+    # false that codegen folds away.
+    if drop_noindex:
+        docs = wf.robots_noindex_flag(docs)
+    rob = F.col("robots_noindex") if drop_noindex else F.lit(False)
+    flagged = (
+        wf.line_dup_stats(wf.gopher_quality_flags(docs))
+        .withColumn(
+            "reason",
+            F.when(rob, ROBOTS_NOINDEX)
+            .when(~F.col("gopher_keep"), GOPHER)
+            .when(F.col("dup_line_frac") > MAX_DUP_LINE_FRAC, DUP_LINES),
+        )
+        .localCheckpoint()
+    )
+    n_new = flagged.count()
+    _mark("quality_funnel")
+
+    # dropped rows never vanish: every stage's (url, reason) rows land
+    # in `drops`, the quarantine table, so a threshold change is
+    # auditable and rows can be re-adjudicated without re-reading the
+    # corpus
+    drops = [flagged.where(F.col("reason").isNotNull()).select("url", "reason")]
+    kept = flagged.where(F.col("reason").isNull())
+    clean = wf.pii_redact(kept).select(
+        "url", "warc_ts", "html", F.col("text_redacted").alias("text"), "lang"
+    )
+    # dedup_exact returns the survivors itself, so its losers are only
+    # recorded: no anti-join is needed. PII redaction drops no rows, so
+    # `kept` has the url set of `clean` without re-running the regexes.
+    survivors = dd.dedup_exact(clean, text_col="text", key_col="url").localCheckpoint()
+    drops.append(
+        kept.select("url")
+        .join(survivors.select("url"), on="url", how="left_anti")
+        .select("url", F.lit(EXACT_DUP).alias("reason"))
+    )
+    _mark(EXACT_DUP)
+
+    def drop(reason: str, losers):
+        """Checkpoint a stage's loser url set, record it under `reason`,
+        anti-join it off the survivors and time the stage under
+        `reason`. Returns the checkpointed set."""
+        nonlocal survivors
+        losers = losers.select("url").localCheckpoint()
+        drops.append(losers.select("url", F.lit(reason).alias("reason")))
+        survivors = survivors.join(losers, on="url", how="left_anti").localCheckpoint()
+        _mark(reason)
+        return losers
+
+    if near_dups:
+        pairs = dd.near_dup_pairs_minhash(
+            survivors, text_col="text", key_col="url", threshold=near_dup_threshold
+        )
+        if transitive_near_dups:
+            # RefinedWeb/SlimPajama cluster semantics: close the pair
+            # list transitively (O(log n) star-contraction rounds) and
+            # keep ONE canonical doc per component (the min url). The
+            # pairwise default below under-drops when two docs share a
+            # near-dup but were never paired with each other; closure
+            # charges the whole cluster to one keeper.
+            drop(NEAR_DUP, dd.connected_components(pairs).select(F.col("node").alias("url")))
         else:
-            raise ValueError(f"unknown input_format {input_format!r} (parquet|warc)")
-        n_input = docs.count()
-        t = _mark("scan_count", t0)
+            # pairwise loser-drop: pairs are id_a < id_b, so each
+            # cluster's min url is never an id_b and always survives —
+            # safe (never empties a cluster), but keeps BOTH a and c
+            # for pairs (a,b),(c,b)
+            drop(NEAR_DUP, pairs.select(F.col("id_b").alias("url")).distinct())
 
-        already = 0
-        if resume:
-            # resume must skip BOTH prior outcomes: curated urls (the
-            # checkpoint) and quarantined urls — otherwise every resume
-            # re-runs the full funnel on previously-dropped docs and
-            # re-appends duplicate (url, reason) quarantine rows
-            seen = None
-            cur_tbl = _read_or_none(spark, curated_path, snapshots)
-            if cur_tbl is not None:
-                done = cur_tbl.select("url").distinct()
-                already = done.count()
-                seen = done
-            q_tbl = _read_or_none(spark, quarantine_path, snapshots)
-            if q_tbl is not None:
-                q_seen = q_tbl.select("url")
-                seen = q_seen if seen is None else seen.unionByName(q_seen)
-            if seen is not None:
-                # localCheckpoint cuts the parquet-path lineage: this run
-                # APPENDS to the curated/quarantine dirs below, and a write
-                # to a path invalidates every cached plan that references
-                # it — without the checkpoint, each post-write action
-                # (store append, late metrics) silently re-evaluates the
-                # anti-join against the re-listed dirs, which now contain
-                # this very batch, and the whole funnel re-derives as
-                # EMPTY. Checkpoint cost is one materialization of the
-                # url set — data the anti-join was about to shuffle anyway.
-                seen = seen.distinct().localCheckpoint()
-                docs = docs.join(seen, on="url", how="left_anti")
-
-        # the quality stage tags each doc with its first failing reason
-        # (null = kept). Persisted: the count below materializes it once,
-        # and every later consumer reads the cache instead of re-running
-        # the Gopher/dup-line scan — the whole job makes ONE pass over raw
-        # docs. The robots opt-out rides the same pass as a columnar regex
-        # column; disabled, it is a literal false that codegen folds away.
-        if drop_noindex:
-            docs = wf.robots_noindex_flag(docs)
-        rob = F.col("robots_noindex") if drop_noindex else F.lit(False)
-        flagged = (
-            wf.line_dup_stats(wf.gopher_quality_flags(docs))
-            .withColumn(
-                "reason",
-                F.when(rob, ROBOTS_NOINDEX)
-                .when(~F.col("gopher_keep"), GOPHER)
-                .when(F.col("dup_line_frac") > MAX_DUP_LINE_FRAC, DUP_LINES),
-            )
-            .persist()
-        )
-        caches.append(flagged)
-        n_new = flagged.count()
-        t = _mark("quality_funnel", t)
-
-        # dropped rows never vanish: every stage's (url, reason) rows land
-        # in `drops`, the quarantine table, so a threshold change is
-        # auditable and rows can be re-adjudicated without re-reading the
-        # corpus
-        drops = [flagged.where(F.col("reason").isNotNull()).select("url", "reason")]
-        kept = flagged.where(F.col("reason").isNull())
-        clean = wf.pii_redact(kept).select(
-            "url", "warc_ts", "html", F.col("text_redacted").alias("text"), "lang"
-        )
-        # persisted post-exact-dedup survivors: the near-dup pass, the host
-        # cap and the curated write read the cache, so the md5 groupBy runs
-        # once. dedup_exact returns the survivors itself, so its losers are
-        # only recorded, not passed to drop(): that anti-join would ride
-        # along in every later plan, and it held ~60% more driver heap at
-        # the end of a call. PII redaction drops no rows, so the cached
-        # `kept` has the url set of `clean` without re-running the regexes.
-        survivors = dd.dedup_exact(clean, text_col="text", key_col="url").persist()
-        caches.append(survivors)
-        drops.append(
-            kept.select("url")
-            .join(survivors.select("url"), on="url", how="left_anti")
-            .select("url", F.lit(EXACT_DUP).alias("reason"))
-        )
-
-        def drop(reason: str, losers):
-            """Persist a stage's loser url set, record it under `reason`
-            and anti-join it off the survivors. Returns the persisted set."""
-            nonlocal survivors
-            losers = losers.select("url").persist()
-            caches.append(losers)
-            drops.append(losers.select("url", F.lit(reason).alias("reason")))
-            survivors = survivors.join(losers, on="url", how="left_anti")
-            return losers
-
-        if near_dups:
-            pairs = dd.near_dup_pairs_minhash(
-                survivors, text_col="text", key_col="url", threshold=near_dup_threshold
-            )
-            if transitive_near_dups:
-                # RefinedWeb/SlimPajama cluster semantics: close the pair
-                # list transitively (O(log n) star-contraction rounds) and
-                # keep ONE canonical doc per component (the min url). The
-                # pairwise default below under-drops when two docs share a
-                # near-dup but were never paired with each other; closure
-                # charges the whole cluster to one keeper.
-                drop(NEAR_DUP, dd.connected_components(pairs).select(F.col("node").alias("url")))
+    # --- dedup against HISTORY (incremental ingest) -------------------
+    # Each new Common-Crawl-style dump repeats earlier dumps heavily;
+    # within-batch dedup alone readmits every cross-batch duplicate.
+    # The fingerprints store holds (url, fp, signature) per curated
+    # doc — a few hundred bytes/doc, so at 10^12 docs the state is
+    # ~1-3% of corpus bytes and new batches join against IT, never
+    # against historical text: exact twins via the md5 fp, near-dups
+    # via banded-LSH bucket join + signature-agreement Jaccard
+    # estimate (operators/dedup.near_dups_vs_history).
+    healed = n_appended = 0
+    if history_dedup:
+        new_sigs = dd.doc_signatures(survivors, text_col="text", key_col="url").localCheckpoint()
+        hist = _read_or_none(spark, store_path, snapshots)
+        cur_tbl = _read_or_none(spark, curated_path, snapshots)
+        if cur_tbl is not None:
+            if hist is None:
+                # store enabled mid-life: build it from the curated
+                # table (the source of truth) before using it
+                boot = dd.doc_signatures(
+                    cur_tbl.select("url", "text"), text_col="text", key_col="url"
+                )
+                _append_store(spark, boot, store_path, snapshots)
+                hist = _read_or_none(spark, store_path, snapshots)
+                healed = -1  # marker: full bootstrap, not a crash heal
             else:
-                # pairwise loser-drop: pairs are id_a < id_b, so each
-                # cluster's min url is never an id_b and always survives —
-                # safe (never empties a cluster), but keeps BOTH a and c
-                # for pairs (a,b),(c,b)
-                drop(NEAR_DUP, pairs.select(F.col("id_b").alias("url")).distinct())
-
-        # --- per-host cap (host-spam guard) -------------------------------
-        # Applied AFTER within-batch dedup (a host's near-dup copies must
-        # not consume its budget) and BEFORE history dedup, which keeps
-        # the history join off the capped-out docs. That order is NOT
-        # accuracy-neutral: a doc that history dedup later drops has
-        # already taken one of its host's K slots, so the host can end
-        # the batch with fewer than K curated docs while fresh docs of it
-        # were capped out. The capped-out docs are quarantined (reason
-        # host_cap) and resume's seen-set bars them from every later
-        # batch, so the under-fill is permanent. Capping after history
-        # dedup would fill the budget at the cost of joining every
-        # survivor against history.
-        if host_cap is not None:
-            from pdf_parser_spark.operators import mixing as mx
-
-            capped = mx.host_cap(survivors, host_cap, url_col="url")
-            drop(HOST_CAP, survivors.join(capped.select("url"), on="url", how="left_anti"))
-
-        # --- dedup against HISTORY (incremental ingest) -------------------
-        # Each new Common-Crawl-style dump repeats earlier dumps heavily;
-        # within-batch dedup alone readmits every cross-batch duplicate.
-        # The fingerprints store holds (url, fp, signature) per curated
-        # doc — a few hundred bytes/doc, so at 10^12 docs the state is
-        # ~1-3% of corpus bytes and new batches join against IT, never
-        # against historical text: exact twins via the md5 fp, near-dups
-        # via banded-LSH bucket join + signature-agreement Jaccard
-        # estimate (operators/dedup.near_dups_vs_history).
-        healed = n_appended = 0
-        if history_dedup:
-            new_sigs = dd.doc_signatures(survivors, text_col="text", key_col="url").persist()
-            caches.append(new_sigs)
-            hist = _read_or_none(spark, store_path, snapshots)
-            cur_tbl = _read_or_none(spark, curated_path, snapshots)
-            if cur_tbl is not None:
-                if hist is None:
-                    # store enabled mid-life: build it from the curated
-                    # table (the source of truth) before using it
-                    boot = dd.doc_signatures(
-                        cur_tbl.select("url", "text"), text_col="text", key_col="url"
-                    )
-                    _append_store(spark, boot, store_path, snapshots)
-                    hist = _read_or_none(spark, store_path, snapshots)
-                    healed = -1  # marker: full bootstrap, not a crash heal
-                else:
-                    hist, healed = _heal_store(
-                        spark, store_path, cur_tbl.select("url", "text"), hist, snapshots
-                    )
-            if hist is not None:
-                hist = hist.select("url", "fp", "signature")
-                exact_hits = drop(
-                    EXACT_DUP_HISTORY,
-                    new_sigs.join(hist.select("fp").distinct(), on="fp", how="left_semi"),
+                hist, healed = _heal_store(
+                    spark, store_path, cur_tbl.select("url", "text"), hist, snapshots
                 )
-                remaining = new_sigs.join(exact_hits, on="url", how="left_anti")
-                drop(
-                    NEAR_DUP_HISTORY,
-                    dd.near_dups_vs_history(
-                        remaining, hist, key_col="url", threshold=near_dup_threshold
-                    ).select("url").distinct(),
-                )
-            # pin the final survivor url set NOW: the curated append below
-            # changes what the resume anti-join sees on re-evaluation, so
-            # any post-write re-derivation of `survivors` silently comes
-            # back empty (lazy lineage re-lists the parquet dir). The
-            # store append must read THIS materialized set.
-            survivor_urls = survivors.select("url").persist()
-            caches.append(survivor_urls)
-            survivor_urls.count()
-            t = _mark("history_dedup", t)
+        _mark("history_dedup")
+        if hist is not None:
+            hist = hist.select("url", "fp", "signature")
+            exact_hits = drop(
+                EXACT_DUP_HISTORY,
+                new_sigs.join(hist.select("fp").distinct(), on="fp", how="left_semi"),
+            )
+            remaining = new_sigs.join(exact_hits, on="url", how="left_anti")
+            drop(
+                NEAR_DUP_HISTORY,
+                dd.near_dups_vs_history(
+                    remaining, hist, key_col="url", threshold=near_dup_threshold
+                ).select("url").distinct(),
+            )
 
-        # the drop counts ride the quarantine write, the curated count the
-        # curated write: no separate action re-runs the funnel for metrics
-        dropped = Observation("quarantine")
-        quarantine = reduce(lambda a, b: a.unionByName(b), drops).observe(
-            dropped, *[F.count_if(F.col("reason") == r).alias(r) for r in REASONS]
-        )
-        _append(spark, quarantine, quarantine_path, snapshots,
-                {"table": "quarantine", "resume": resume})
-        t = _mark("quarantine_write", t)
+    # --- per-host cap (host-spam guard) -------------------------------
+    # Applied LAST, after within-batch and history dedup: a host's
+    # duplicates never consume its budget, so a host ends the batch with
+    # min(cap, its deduped docs) curated. Capped-out docs are
+    # quarantined (reason host_cap), and resume bars them from every
+    # later batch.
+    if host_cap is not None:
+        from pdf_parser_spark.operators import mixing as mx
 
-        curated = Observation("curated")
-        snap = _append(
-            spark, survivors.observe(curated, F.count("*").alias("rows")),
-            curated_path, snapshots, {"table": "curated", "resume": resume},
-        )
-        t = _mark("curated_write", t)
-        cur_all = _read_or_none(spark, curated_path, snapshots)
-        n_curated = cur_all.select("url").distinct().count()
+        capped = mx.host_cap(survivors, host_cap, url_col="url")
+        drop(HOST_CAP, survivors.join(capped.select("url"), on="url", how="left_anti"))
 
-        if history_dedup:
-            # the store tracks the CURATED set: append signatures for this
-            # batch's final survivors only (post-history-drop). Appended
-            # after the curated commit, so a crash here under-drops later
-            # batches at worst; _heal_store repairs it on the next run.
-            final_sigs = new_sigs.join(survivor_urls, on="url", how="left_semi")
-            n_appended = _append_store(spark, final_sigs, store_path, snapshots)
-            t = _mark("fingerprint_store", t)
+    # the drop counts ride the quarantine write, the curated count the
+    # curated write: no separate action re-runs the funnel for metrics
+    dropped = Observation("quarantine")
+    quarantine = reduce(lambda a, b: a.unionByName(b), drops).observe(
+        dropped, *[F.count_if(F.col("reason") == r).alias(r) for r in REASONS]
+    )
+    _append(spark, quarantine, quarantine_path, snapshots,
+            {"table": "quarantine", "resume": resume})
+    _mark("quarantine_write")
 
-        metrics = {
-            "input_docs": n_input,
-            "already_curated": already,
-            "new_docs": n_new,
-            **{f"dropped_{r}": dropped.get[r] for r in REASONS},
-            "host_cap": host_cap,
-            "near_dup_mode": (
-                ("transitive" if transitive_near_dups else "pairwise") if near_dups else "off"
-            ),
-            "history_dedup": history_dedup,
-            "store_healed_docs": healed,
-            "store_appended_docs": n_appended,
-            "newly_curated": curated.get["rows"],
-            "total_curated": n_curated,
-            "wall_sec": round(time.perf_counter() - t0, 2),
-            "stage_secs": stage_secs,
-        }
-        if snap is not None:
-            metrics["snapshot_id"] = snap["snapshot_id"]
-        out.mkdir(parents=True, exist_ok=True)
-        (out / "curation_metrics.json").write_text(json.dumps(metrics, indent=2))
-        return metrics
-    finally:
-        for c in caches:
-            try:
-                c.unpersist()
-            except Exception:
-                pass
+    curated = Observation("curated")
+    snap = _append(
+        spark, survivors.observe(curated, F.count("*").alias("rows")),
+        curated_path, snapshots, {"table": "curated", "resume": resume},
+    )
+    _mark("curated_write")
+    n_curated = _read_or_none(spark, curated_path, snapshots).select("url").distinct().count()
+    _mark("curated_count")
+
+    if history_dedup:
+        # the store tracks the CURATED set: append signatures for this
+        # batch's final survivors only (after every drop). Appended
+        # after the curated commit, so a crash here under-drops later
+        # batches at worst; _heal_store repairs it on the next run.
+        final_sigs = new_sigs.join(survivors, on="url", how="left_semi")
+        n_appended = _append_store(spark, final_sigs, store_path, snapshots)
+        _mark("fingerprint_store")
+
+    metrics = {
+        "input_docs": n_input,
+        "already_curated": already,
+        "new_docs": n_new,
+        **{f"dropped_{r}": dropped.get[r] for r in REASONS},
+        "host_cap": host_cap,
+        "near_dup_mode": (
+            ("transitive" if transitive_near_dups else "pairwise") if near_dups else "off"
+        ),
+        "history_dedup": history_dedup,
+        "store_healed_docs": healed,
+        "store_appended_docs": n_appended,
+        "newly_curated": curated.get["rows"],
+        "total_curated": n_curated,
+        "wall_sec": round(time.perf_counter() - t0, 2),
+        "stage_secs": stage_secs,
+    }
+    if snap is not None:
+        metrics["snapshot_id"] = snap["snapshot_id"]
+    out.mkdir(parents=True, exist_ok=True)
+    (out / "curation_metrics.json").write_text(json.dumps(metrics, indent=2))
+    return metrics
 
 
 def main() -> None:

@@ -37,6 +37,14 @@ _LOCAL_DEFAULTS = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
+    # Spark sizes memory pages from heap ÷ cores (64 MiB for a 4 GB heap
+    # on 4 cores), and every string-keyed broadcast hash relation holds at
+    # least one page until the ContextCleaner drops the broadcast after
+    # some later GC. The small broadcast joins of one curate call (256
+    # docs, 2 MB) still pinned 130-330 MB when the call returned, the
+    # amount set by GC timing. 4 MiB pages bound that to a few MB;
+    # records larger than a page still get a page of their own.
+    "spark.buffer.pageSize": "4m",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

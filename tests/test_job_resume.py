@@ -174,30 +174,30 @@ def test_curate_resume_does_not_reprocess_quarantine(spark, tmp_path):
 
 def test_curate_single_materialization_per_stage(spark, tmp_path, monkeypatch):
     """The funnel's heavy lineage (Gopher/dup-line scan, exact-dedup
-    groupBy) must be persisted so the job's many consumers (funnel agg,
-    quarantine table, curated write, near-dup pass) execute each stage
-    ONCE — at corpus scale, re-running the scan per action is the
+    groupBy) must be checkpointed so the job's many consumers (funnel
+    agg, quarantine table, curated write, near-dup pass) execute each
+    stage ONCE — at corpus scale, re-running the scan per action is the
     difference between one pass and ~6 over 100 TB."""
     # Spark 4: concrete frames are classic.dataframe.DataFrame, which
-    # overrides persist — spy on the class the instances actually use
+    # overrides localCheckpoint — spy on the class the instances use
     from pyspark.sql.classic.dataframe import DataFrame
 
     from jobs.curate import run as run_curate
 
-    persisted = []
-    orig = DataFrame.persist
+    checkpointed = []
+    orig = DataFrame.localCheckpoint
 
     def spy(self, *a, **k):
-        persisted.append(self)
+        checkpointed.append(self)
         return orig(self, *a, **k)
 
-    monkeypatch.setattr(DataFrame, "persist", spy)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
     corpus = str(tmp_path / "opdocs.parquet")
     out = str(tmp_path / "opcur")
     write_documents(synthetic_documents(spark, 24, seed=42), corpus)
     m = run_curate(corpus, out, spark=spark, resume=False)
-    # both heavy stages cached, and metrics still add up
-    assert len(persisted) >= 2
+    # both heavy stages checkpointed, and metrics still add up
+    assert len(checkpointed) >= 2
     assert (
         m["dropped_gopher"] + m["dropped_dup_lines"] + m["dropped_exact_dup"]
         + m["dropped_near_dup"] + m["newly_curated"]
@@ -777,6 +777,76 @@ def test_curate_host_cap_stage(spark, tmp_path):
     # resume with the same cap: nothing re-enters
     r2 = run_curate(corpus, out, spark=spark, resume=True, host_cap=3)
     assert r2["newly_curated"] == 0 and r2["dropped_host_cap"] == 0
+
+
+def test_curate_host_cap_follows_history_dedup(spark, tmp_path):
+    """The host cap is taken after history dedup, so history twins on a
+    capped host never use up its budget: the host ends the batch with
+    min(cap, fresh docs) curated. Capping first let twins take slots
+    that history dedup then emptied, while fresh docs of the same host
+    were capped out for good."""
+    from pyspark.sql import functions as F
+
+    from jobs.curate import run as run_curate
+    from pdf_parser_spark.operators.mixing import host_of
+
+    out = str(tmp_path / "capout")
+    batch1 = str(tmp_path / "cb1.parquet")
+    write_documents(synthetic_documents(spark, 16, seed=7), batch1)
+    kw = dict(near_dups=False, history_dedup=True)
+    run_curate(batch1, out, spark=spark, **kw)
+
+    # one host: four exact twins of curated batch-1 docs plus two fresh docs
+    cols = ["url", "warc_ts", "html", "text", "lang"]
+    src = spark.read.parquet(f"{out}/curated").orderBy("url").limit(4)
+    twins = src.select(
+        F.concat(F.lit("https://capped.example/twin/"), F.col("url")).alias("url"), *cols[1:]
+    )
+    fresh = (
+        synthetic_documents(spark, 30, seed=99)
+        .where(F.length("text") >= 600)
+        .limit(2)
+        .select(F.concat(F.lit("https://capped.example/fresh/"), F.col("url")).alias("url"), *cols[1:])
+    )
+    batch2 = str(tmp_path / "cb2.parquet")
+    twins.unionByName(fresh).write.parquet(batch2)
+
+    cap = 3
+    r = run_curate(batch2, out, spark=spark, resume=True, host_cap=cap, **kw)
+    cur = spark.read.parquet(f"{out}/curated")
+    on_host = cur.where(host_of(F.col("url")) == "capped.example")
+    assert on_host.count() == r["newly_curated"] == min(cap, 2)
+    assert r["dropped_exact_dup_history"] == 4
+    assert r["dropped_host_cap"] == 0
+
+
+def test_curate_releases_checkpoints(spark, tmp_path):
+    """A long-lived session runs curate again and again: once the
+    frames of a call are gone, every stage checkpoint is freed, so the
+    persisted RDD set returns to what it was. The release waits on
+    driver and JVM garbage collection, which can take seconds, so the
+    test polls with a bound."""
+    import gc
+    import time
+
+    from jobs.curate import run as run_curate
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    corpus, out = str(tmp_path / "docs.parquet"), str(tmp_path / "out")
+    write_documents(synthetic_documents(spark, 24, seed=42), corpus)
+    before = persisted()
+    kw = dict(host_cap=3, history_dedup=True)
+    run_curate(corpus, out, spark=spark, **kw)
+    run_curate(corpus, out, spark=spark, resume=True, **kw)
+    for _ in range(120):
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+        if not persisted() - before:
+            break
+    assert not persisted() - before
 
 
 def test_curate_all_stages_compose(spark, tmp_path):

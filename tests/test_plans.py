@@ -422,3 +422,48 @@ def test_host_cap_window_group_limit(spark):
     wgl = [l for l in plan.splitlines() if "WindowGroupLimit" in l]
     assert any("Partial" in l for l in wgl), plan
     assert any("Final" in l for l in wgl), plan
+
+
+def test_curate_appends_batch_sized_plans(spark, tmp_path, monkeypatch):
+    """Every frame curate appends (quarantine, curated, fingerprint
+    store) starts at the last stage checkpoint, so its analyzed plan is
+    a few nodes deep however many funnel stages ran. A plan that
+    re-derives the funnel runs to thousands of tree lines on a resumed
+    history-dedup call, and Spark then spends its time comparing those
+    plans."""
+    from pyspark.sql import functions as F
+
+    import jobs.curate as jc
+    from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
+
+    b1, b2 = str(tmp_path / "b1.parquet"), str(tmp_path / "b2.parquet")
+    out = str(tmp_path / "out")
+    write_documents(synthetic_documents(spark, 24, seed=11), b1)
+    kw = dict(near_dups=True, history_dedup=True, host_cap=4)
+    jc.run(b1, out, spark=spark, **kw)
+    fresh = synthetic_documents(spark, 12, seed=12).withColumn("url", F.concat("url", F.lit("/b2")))
+    spark.read.parquet(b1).unionByName(fresh).write.parquet(b2)
+
+    lines = []
+    orig = jc._append
+
+    def spy(spark_, df, *a, **k):
+        lines.append(df._jdf.queryExecution().analyzed().treeString().count("\n"))
+        return orig(spark_, df, *a, **k)
+
+    monkeypatch.setattr(jc, "_append", spy)
+    r = jc.run(b2, out, spark=spark, resume=True, **kw)
+    assert r["new_docs"] == 12
+    assert len(lines) >= 3  # quarantine, curated, fingerprint store
+    assert max(lines) < 200, lines
+
+
+def test_session_page_size_bounds_broadcast_pins(spark):
+    """Each string-keyed broadcast hash relation holds at least one memory
+    page until the ContextCleaner drops the broadcast after a later GC.
+    Spark's derived page size (64 MiB at a 4 GB heap on 4 cores) made a
+    curate call's small anti-joins pin hundreds of MB by GC timing;
+    get_spark fixes the page at 4 MiB. Checked on the running memory
+    manager, so a default set too late to take effect also fails."""
+    mm = spark.sparkContext._jsc.sc().env().memoryManager()
+    assert mm.pageSizeBytes() == 4 * 1024 * 1024
