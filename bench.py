@@ -36,9 +36,9 @@ HEADLINE = sorted(ALL_QUERIES)
 
 
 def _prev_round_record(sf_dir: str) -> dict:
-    """Latest BENCH_r*.json record — queries dict plus whatever extra
-    (calibration) it carried (driver wraps our line in {'tail': ...};
-    the JSON line is embedded at the end of tail)."""
+    """Latest BENCH_r*.json record with a queries dict (a record may
+    wrap this script's line in {'tail': ...}, with the JSON line at
+    the end of tail)."""
     import re
 
     here = Path(__file__).resolve().parent
@@ -74,70 +74,8 @@ def _prev_round_record(sf_dir: str) -> dict:
     return {}
 
 
-def _prev_round_timings(sf_dir: str) -> dict[str, float]:
-    return _prev_round_record(sf_dir).get("queries", {})
-
-
-def _calibration(spark, cpus: int) -> dict:
-    """Standing hardware-calibration probe (VERDICT r4 #4): the r4 box
-    swap showed a uniform per-task overhead jump (~5-10 ms → ~30-35 ms)
-    that confounded every cross-round per-query delta until a manual
-    control experiment attributed it. Record the control EVERY round:
-    two engine-independent jobs — an identity mapInPandas (Python
-    worker + Arrow round-trip cost) and a plain RDD count (bare
-    JVM task-scheduling cost) — over cpus×4 near-empty tasks, min of 3
-    timed runs after one warmup. ms/task from these normalizes raw
-    suite deltas mechanically (see the calibrated delta table)."""
-    n_tasks = cpus * 4
-
-    def ident(batches):
-        yield from batches
-
-    df = spark.range(n_tasks).repartition(n_tasks)
-    _force(df.mapInPandas(ident, "id long"))  # warmup
-    mip = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        _force(df.mapInPandas(ident, "id long"))
-        mip = min(mip, time.perf_counter() - t0)
-    sc = spark.sparkContext
-    sc.parallelize(range(n_tasks), n_tasks).count()  # warmup
-    rdd = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        sc.parallelize(range(n_tasks), n_tasks).count()
-        rdd = min(rdd, time.perf_counter() - t0)
-    # ms/task = wall × slots / tasks — per-task cost with slots
-    # saturated (×cpus undoes the parallel amortization); the same
-    # formula every round is what makes cross-round division valid
-    return {
-        "n_tasks": n_tasks,
-        "identity_mip_ms_per_task": round(mip * cpus / n_tasks * 1000, 3),
-        "rdd_ms_per_task": round(rdd * cpus / n_tasks * 1000, 3),
-    }
-
-
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def _scaling_evidence() -> dict | None:
-    """Latest two-parallelism measurement (tools/scaling_bench.py
-    sidecar) — folded into the bench line so each BENCH_r{N}.json
-    carries the north-rule N-vs-4N evidence. Not re-measured here:
-    scaling runs need cold processes and an otherwise-idle box."""
-    p = Path(__file__).resolve().parent / "BENCH" / "scaling_last_run.json"
-    try:
-        d = json.loads(p.read_text())
-        return {
-            "low_cores": d["low"]["cores"],
-            "low_docs_per_sec": d["low"]["docs_per_sec"],
-            "high_cores": d["high"]["cores"],
-            "high_docs_per_sec": d["high"]["docs_per_sec"],
-            "efficiency": d["scaling_efficiency"],
-        }
-    except (OSError, KeyError, json.JSONDecodeError):
-        return None
 
 
 def main() -> None:
@@ -151,8 +89,6 @@ def main() -> None:
     # so per-query timings measure the plans rather than first-run JIT
     _force(SPARK_QUERIES["q01_pricing_summary"](spark, sf_dir))
     _force(SPARK_QUERIES["q14_toc_parse"](spark, sf_dir))
-
-    calibration = _calibration(spark, cpus)
 
     timings: dict[str, float] = {}
     for name in HEADLINE:
@@ -197,34 +133,16 @@ def main() -> None:
     timings["html_strip_pipeline"] = round(html_sec, 3)
 
     # per-query delta vs the previous round, human table on stderr so
-    # stdout stays the single driver-contract JSON line. Printed RAW
-    # and — when the previous round recorded a calibration probe —
-    # CALIBRATED: now ÷ (rdd_ms_now / rdd_ms_prev), dividing out the
-    # box's per-task overhead shift so only code-level change remains.
-    prev_rec = _prev_round_record(sf_dir)
-    prev = prev_rec.get("queries", {})
-    prev_calib = (prev_rec.get("extra") or {}).get("calibration") or {}
-    factor = None
-    if prev_calib.get("rdd_ms_per_task"):
-        factor = calibration["rdd_ms_per_task"] / prev_calib["rdd_ms_per_task"]
+    # stdout stays one JSON line. Raw seconds
+    # only: a record from another host is not comparable, and
+    # perfbench/compare.py is the tool for same-host comparisons.
+    prev = _prev_round_record(sf_dir).get("queries", {})
     if prev:
-        hdr = f"{'query':<34}{'prev':>8}{'now':>8}{'delta':>8}"
-        if factor:
-            hdr += f"{'calib':>8}{'cdelta':>8}"
-        print(hdr, file=sys.stderr)
+        print(f"{'query':<34}{'prev':>8}{'now':>8}{'delta':>8}", file=sys.stderr)
         for name in HEADLINE + ["extract_pipeline"]:
             if name in timings and name in prev:
                 d = timings[name] - prev[name]
-                line = f"{name:<34}{prev[name]:>8.3f}{timings[name]:>8.3f}{d:>+8.3f}"
-                if factor:
-                    cal = timings[name] / factor
-                    line += f"{cal:>8.3f}{cal - prev[name]:>+8.3f}"
-                print(line, file=sys.stderr)
-        if factor:
-            print(
-                f"calibration factor (rdd ms/task now/prev): {factor:.3f}",
-                file=sys.stderr,
-            )
+                print(f"{name:<34}{prev[name]:>8.3f}{timings[name]:>8.3f}{d:>+8.3f}", file=sys.stderr)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     total = round(sum(timings.values()), 3)
@@ -239,8 +157,6 @@ def main() -> None:
             "extract_docs": n_docs,
             "extract_docs_per_sec": round(n_docs / extract_sec, 2),
             "html_strip_docs_per_sec": round(n_docs / html_sec, 2),
-            "scaling": _scaling_evidence(),
-            "calibration": calibration,
         },
     }
     # full record (all 70+ per-query timings + delta map) goes to a FILE;

@@ -12,13 +12,19 @@ not data size. This job rewrites a table into ~target-sized files:
                                        stats become useful for later
                                        key-range pruning; plain
                                        repartition(n) when no key)
-      → write to <path>__compact_tmp
-      → row-count invariant check      (abort + keep original on loss)
-      → swap directories               (original kept at <path>__old
-                                       until the swap completes)
 
-On Iceberg this is `rewrite_data_files`; the dataflow here is the
-parquet stand-in with the same shape.
+A snapshot table (one with a `_snapshots/` log, as every job's output
+is) is compacted by ONE overwrite commit of the current snapshot — the
+shape of Iceberg's `rewrite_data_files`. Its summary carries no
+batch_id, so extract's heal pass skips it, and older snapshots keep
+their files for time travel until `expire_snapshots`. If the new
+snapshot's row count differs from its parent's, the table is rolled
+back to the parent and the job raises.
+
+Any other directory (a streaming sink) is rewritten to
+<path>__compact_tmp, row-count checked (abort + keep original on
+loss), and swapped in (original kept at <path>__old until the swap
+completes).
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pdf_parser_spark.plans.session import get_spark  # noqa: E402
+from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 
 
 def run(path: str, key: str | None = None, target_mb: int = 128, spark=None) -> dict:
@@ -50,13 +57,48 @@ def run(path: str, key: str | None = None, target_mb: int = 128, spark=None) -> 
     spark = spark or get_spark(app_name="compact")
     t0 = time.perf_counter()
     p = Path(path)
-    files_before = [f for f in p.rglob("*.parquet") if f.is_file()]
+
+    def files(*dirs: Path) -> list[Path]:
+        return [f for d in dirs for f in d.rglob("*.parquet") if f.is_file()]
+
+    snap_table = (p / "_snapshots").is_dir()
+    if snap_table:
+        df = sn.read(spark, path)
+        files_before = files(*(p / b for b in sn.current_snapshot(path)["batches"]))
+    else:
+        df = spark.read.parquet(path)
+        files_before = files(p)
     bytes_total = sum(f.stat().st_size for f in files_before)
     n_parts = max(1, math.ceil(bytes_total / (target_mb * 1024 * 1024)))
-
-    df = spark.read.parquet(path)
     out = df.repartitionByRange(n_parts, key) if key else df.repartition(n_parts)
 
+    if snap_table:
+        snap = sn.commit(spark, out, path, operation="overwrite", summary={"job": "compact"})
+        parent = next(s for s in sn.snapshots(path) if s["snapshot_id"] == snap["parent_id"])
+        rows = parent["total_rows"]
+        if snap["batch_rows"] != rows:
+            sn.rollback(path, parent["snapshot_id"])
+            raise RuntimeError(
+                f"compaction row-count mismatch ({rows} -> {snap['batch_rows']}); "
+                f"rolled back to snapshot {parent['snapshot_id']}"
+            )
+        files_after = files(p / snap["new_batches"][0])
+    else:
+        rows = _swap(spark, out, p)
+        files_after = files(p)
+    return {
+        "rows": rows,
+        "files_before": len(files_before),
+        "files_after": len(files_after),
+        "bytes": bytes_total,
+        "target_partitions": n_parts,
+        "wall_sec": round(time.perf_counter() - t0, 2),
+    }
+
+
+def _swap(spark, out, p: Path) -> int:
+    """Rewrite a directory with no snapshot log through a sibling tmp
+    directory; returns the row count."""
     # row-count invariant rides the write itself (observe() metric):
     # one pass over the data instead of a separate count job
     from pyspark.sql import Observation, functions as F
@@ -80,16 +122,7 @@ def run(path: str, key: str | None = None, target_mb: int = 128, spark=None) -> 
     p.rename(old)
     Path(tmp).rename(p)
     shutil.rmtree(old, ignore_errors=True)
-
-    files_after = [f for f in p.rglob("*.parquet") if f.is_file()]
-    return {
-        "rows": rows_before,
-        "files_before": len(files_before),
-        "files_after": len(files_after),
-        "bytes": bytes_total,
-        "target_partitions": n_parts,
-        "wall_sec": round(time.perf_counter() - t0, 2),
-    }
+    return rows_before
 
 
 def main() -> None:

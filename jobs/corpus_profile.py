@@ -3,7 +3,7 @@
     spark-submit --py-files pdf_parser_spark.zip jobs/corpus_profile.py \
         --input  /data/documents.parquet \
         --outdir /data/profile \
-        [--resume] [--snapshots] [--cpus 32]
+        [--resume] [--cpus 32]
 
 One-pass corpus statistics via the mergeable-sketch family
 (operators/sketches.py) — the monitoring side of a 100 TB pipeline:
@@ -18,7 +18,8 @@ One-pass corpus statistics via the mergeable-sketch family
         len_hist      (group, bucket, cnt)   doc-length quantiles/lang
     → MERGE with the stored sketches         (max / sum / ∪ / sum)
     → overwrite-commit the merged state      (tables stay tiny)
-    → append the batch's urls to seen_urls   (the checkpoint)
+    → append-commit the batch's urls to
+      seen_urls                              (the checkpoint)
 
 The point of mergeable sketches is the resume path: profiling a new
 batch costs one scan of THE BATCH — the existing corpus is never
@@ -35,25 +36,21 @@ double-counts. Every run is therefore two-phase, keyed by a batch_id:
   stage:  batch sketches + batch urls land under _staging/<batch_id>/
           first, sealed by a _READY marker (no sketch table touched);
   apply:  each table merges FROM THE STAGED FRAMES and records the
-          batch_id it last absorbed (snapshot summary, or a
-          _batch_id.json inside the table directory committed by the
-          same atomic rename as the data). Re-applying is a per-table
-          no-op when the recorded id matches — a crash between table
-          commits resumes exactly where it stopped, never re-merging.
+          batch_id it last absorbed in the summary of the snapshot
+          that commits it. Re-applying is a per-table no-op when the
+          recorded id matches — a crash between table commits resumes
+          exactly where it stopped, never re-merging.
 
 The next run (any flags) first completes a sealed pending batch from
 its staged frames — the INPUT is not consulted for recovery — then
 clears staging and profiles new documents. Unsealed staging (crash
-mid-stage) is discarded; no sketch table saw the batch. Plain-mode
-table swaps are also self-healing: the merged state is fully written
-to <table>.tmp (sealed by _COMMIT_READY) before the old directory is
-replaced, and _recover_plain_swaps finishes or discards interrupted
-swaps on the next run.
+mid-stage) is discarded; no sketch table saw the batch.
 
-`--snapshots` commits each sketch table through the snapshot-manifest
-layer (sinks/snapshots.py): every profiling run is one atomic,
-time-travelable overwrite commit per table — `read(spark, tbl, i)`
-gives the corpus statistics as of batch i.
+Every table is a snapshot table (sinks/snapshots.py): each profiling
+run is one atomic, time-travelable overwrite commit per sketch table,
+so `sn.read(spark, tbl, i)` gives the corpus statistics as of batch i.
+A raw parquet read of a sketch table sees every past version; read it
+through `sn.read`.
 
 Sketch parameters are pinned in <outdir>/_profile_meta.json on the
 first run; a resume with different parameters ABORTS (registers built
@@ -81,6 +78,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pdf_parser_spark.functions.text_metrics import fingerprint, word_array  # noqa: E402
 from pdf_parser_spark.operators import sketches as sk  # noqa: E402
 from pdf_parser_spark.plans.session import get_spark  # noqa: E402
+from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 from pdf_parser_spark.sources.corpus import read_documents  # noqa: E402
 
 DEFAULT_PARAMS = {
@@ -115,119 +113,45 @@ def _check_params(outdir: Path, params: dict) -> None:
         meta.write_text(json.dumps(params, indent=1, sort_keys=True))
 
 
-def _read_or_none(spark, path: str, snapshots: bool):
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        try:
-            return sn.read(spark, path)
-        except FileNotFoundError:
-            return None
-    return spark.read.parquet(path) if Path(path).exists() else None
-
-
 # -------------------------------------------------------- two-phase commit
 
 
-def _table_batch_id(path: str, snapshots: bool) -> str | None:
+def _table_batch_id(path: str) -> str | None:
     """The batch_id a table last absorbed — the apply-phase idempotence
-    key. Underscore-prefixed files inside a parquet directory are
-    invisible to Spark readers (Hadoop hidden-file convention)."""
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        snap = sn.current_snapshot(path)
-        return snap["summary"].get("batch_id") if snap else None
-    marker = Path(path) / "_batch_id.json"
-    if marker.exists():
-        return json.loads(marker.read_text())["batch_id"]
-    return None
+    key, kept in the summary of the table's current snapshot."""
+    snap = sn.current_snapshot(path)
+    return snap["summary"].get("batch_id") if snap else None
 
 
-def _swap_plain(spark, df, path: str, batch_id: str) -> None:
-    """Overwrite a plain-parquet sketch table. The merged plan READS
-    the current table, so the new state is fully materialized to a
-    sibling .tmp (with the batch_id marker INSIDE, so one rename
-    commits data + idempotence key atomically) before the old
-    directory is replaced. _COMMIT_READY seals the tmp: recovery
-    finishes a sealed swap and discards an unsealed one."""
-    tmp = Path(f"{path}.tmp")
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    # sketch tables are bounded at |groups|*m rows by construction —
-    # one output file, not shuffle.partitions' worth of tiny tasks
-    df.coalesce(1).write.mode("error").parquet(str(tmp))
-    (tmp / "_batch_id.json").write_text(json.dumps({"batch_id": batch_id}))
-    (tmp / "_COMMIT_READY").write_text("")
-    if Path(path).exists():
-        shutil.rmtree(path)
-    tmp.rename(path)
-
-
-def _recover_plain_swaps(outdir: Path) -> list[str]:
-    """Finish or discard swaps interrupted between materialize and
-    rename. A sealed tmp is strictly newer than the directory it was
-    about to replace (the writer seals only after the full merged
-    state is on disk), so promoting it is always correct."""
-    healed = []
-    for tmp in sorted(outdir.glob("*.tmp")):
-        final = outdir / tmp.name[: -len(".tmp")]
-        if (tmp / "_COMMIT_READY").exists():
-            if final.exists():
-                shutil.rmtree(final)
-            tmp.rename(final)
-            healed.append(final.name)
-        else:
-            shutil.rmtree(tmp)
-    return healed
-
-
-def _apply_table(
-    spark, staged: str, table: str, merge_fn, batch_id: str, snapshots: bool
-) -> None:
+def _apply_table(spark, staged: str, table: str, merge_fn, batch_id: str) -> None:
     """Merge one staged batch sketch into its table — idempotent: a
     table that already recorded this batch_id is left untouched, so a
     crash between table commits never double-merges the SUM sketches
-    on re-apply."""
-    if _table_batch_id(table, snapshots) == batch_id:
+    on re-apply. Sketch tables are bounded at |groups|*m rows by
+    construction, so each commit writes one file."""
+    if _table_batch_id(table) == batch_id:
         return
     batch_df = spark.read.parquet(staged)
-    stored = _read_or_none(spark, table, snapshots)
+    stored = sn.read_or_none(spark, table)
     merged = merge_fn(stored, batch_df) if stored is not None else batch_df
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        sn.commit(
-            spark, merged.coalesce(1), table, operation="overwrite",
-            summary={"job": "profile", "batch_id": batch_id},
-        )
-    else:
-        _swap_plain(spark, merged, table, batch_id)
+    sn.commit(
+        spark, merged.coalesce(1), table, operation="overwrite",
+        summary={"job": "profile", "batch_id": batch_id},
+    )
 
 
-def _apply_seen(spark, staged_urls: str, seen_path: str, batch_id: str, snapshots: bool) -> None:
-    """Append the staged batch's urls to the checkpoint. The anti-join
-    reads seen_urls as a distinct set, so the worst crash outcome here
-    (marker write lost after a plain append) is duplicate url rows —
-    benign, unlike a double sketch merge."""
-    if _table_batch_id(seen_path, snapshots) == batch_id:
+def _apply_seen(spark, staged_urls: str, seen_path: str, batch_id: str) -> None:
+    """Append the staged batch's urls to the checkpoint, once per
+    batch_id."""
+    if _table_batch_id(seen_path) == batch_id:
         return
-    urls = spark.read.parquet(staged_urls)
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        sn.commit(
-            spark, urls, seen_path, operation="append",
-            summary={"job": "profile", "batch_id": batch_id},
-        )
-    else:
-        urls.write.mode("append").parquet(seen_path)
-        (Path(seen_path) / "_batch_id.json").write_text(
-            json.dumps({"batch_id": batch_id})
-        )
+    sn.commit(
+        spark, spark.read.parquet(staged_urls), seen_path,
+        summary={"job": "profile", "batch_id": batch_id},
+    )
 
 
-def _apply_pending(spark, out: Path, snapshots: bool) -> str | None:
+def _apply_pending(spark, out: Path) -> str | None:
     """Complete a sealed staged batch (idempotent per table), then
     clear staging. Unsealed staging is a crash mid-stage: no sketch
     table saw the batch, so it is safely discarded."""
@@ -242,11 +166,8 @@ def _apply_pending(spark, out: Path, snapshots: bool) -> str | None:
             continue
         batch_id = json.loads(ready.read_text())["batch_id"]
         for name in _TABLES:
-            _apply_table(
-                spark, str(batch_dir / name), str(out / name),
-                _MERGE[name], batch_id, snapshots,
-            )
-        _apply_seen(spark, str(batch_dir / "urls"), str(out / "seen_urls"), batch_id, snapshots)
+            _apply_table(spark, str(batch_dir / name), str(out / name), _MERGE[name], batch_id)
+        _apply_seen(spark, str(batch_dir / "urls"), str(out / "seen_urls"), batch_id)
         shutil.rmtree(batch_dir)
         applied = batch_id
     return applied
@@ -279,7 +200,6 @@ def run(
     outdir: str,
     spark=None,
     resume: bool = False,
-    snapshots: bool = False,
     params: dict | None = None,
 ) -> dict:
     from pdf_parser_spark.fsutil import ensure_local_path
@@ -292,15 +212,14 @@ def run(
     out = Path(outdir)
     seen_path = str(out / "seen_urls")
 
-    # heal first: interrupted plain swaps, then any sealed pending
-    # batch (from its staged frames — the input is not consulted)
-    healed = [] if snapshots else _recover_plain_swaps(out)
-    recovered = _apply_pending(spark, out, snapshots)
+    # heal first: complete any sealed pending batch (from its staged
+    # frames — the input is not consulted)
+    recovered = _apply_pending(spark, out)
 
     docs = read_documents(spark, input_path)
     n_input = docs.count()
 
-    seen = _read_or_none(spark, seen_path, snapshots)
+    seen = sn.read_or_none(spark, seen_path)
     # The anti-join is UNCONDITIONAL whenever seen_urls exists (ADVICE
     # r4): re-running on an existing outdir WITHOUT --resume used to
     # skip it, merging the same documents again under a fresh batch_id
@@ -344,28 +263,25 @@ def run(
                 json.dumps({"batch_id": batch_id, "tables": list(_TABLES)})
             )
             for name in _TABLES:
-                _apply_table(
-                    spark, str(batch_dir / name), str(out / name),
-                    _MERGE[name], batch_id, snapshots,
-                )
-            _apply_seen(spark, str(batch_dir / "urls"), seen_path, batch_id, snapshots)
+                _apply_table(spark, str(batch_dir / name), str(out / name), _MERGE[name], batch_id)
+            _apply_seen(spark, str(batch_dir / "urls"), seen_path, batch_id)
             shutil.rmtree(batch_dir)
 
         table_rows: dict[str, int] = {}
         for name in _TABLES:
-            stored = _read_or_none(spark, str(out / name), snapshots)
+            stored = sn.read_or_none(spark, str(out / name))
             table_rows[name] = stored.count() if stored is not None else 0
         t_sketch = time.perf_counter()
 
         # headline estimates from the merged state (all bounded reads)
         estimates: dict[str, dict] = {}
-        hll = _read_or_none(spark, str(out / "hll_distinct"), snapshots)
+        hll = sn.read_or_none(spark, str(out / "hll_distinct"))
         if hll is not None:
             estimates["distinct_fp_est"] = {
                 r["group"]: r["est"]
                 for r in sk.hll_estimate(hll, p=params["hll_p"]).collect()
             }
-        hist = _read_or_none(spark, str(out / "len_hist"), snapshots)
+        hist = sn.read_or_none(spark, str(out / "len_hist"))
         if hist is not None:
             estimates["p50_chars_est"] = {
                 r["group"]: r["estimate"]
@@ -376,7 +292,6 @@ def run(
             "input_docs": n_input,
             "newly_profiled": n_new,
             "recovered_batch": recovered,
-            "healed_swaps": healed,
             "sketch_rows": table_rows,
             "estimates": estimates,
             "wall_sec_scan": round(t_scan - t0, 2),
@@ -392,18 +307,10 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--outdir", required=True)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--snapshots", action="store_true")
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args()
     spark = get_spark(app_name="profile", cpus=args.cpus)
-    result = run(
-        args.input,
-        args.outdir,
-        spark=spark,
-        resume=args.resume,
-        snapshots=args.snapshots,
-    )
-    print(json.dumps(result))
+    print(json.dumps(run(args.input, args.outdir, spark=spark, resume=args.resume)))
 
 
 if __name__ == "__main__":

@@ -3,7 +3,7 @@
     spark-submit --py-files pdf_parser_spark.zip jobs/curate.py \
         --input  /data/documents.parquet \
         --outdir /data/curated \
-        [--resume] [--no-near-dups] [--snapshots] [--cpus 32]
+        [--resume] [--no-near-dups] [--cpus 32]
 
 The standard pre-training data hygiene pass, end to end:
 
@@ -49,11 +49,12 @@ host_cap, quarantine_write, curated_write, curated_count and
 fingerprint_store — each only when its stage runs. `wall_sec` covers
 the whole call.
 
-`--snapshots` commits the curated AND quarantine tables through the
-snapshot-manifest layer (sinks/snapshots.py): each run is one atomic,
-time-travelable commit per table, resume anti-joins the CURRENT
-snapshots' url sets, and a corrupt manifest ABORTS the resume instead
-of silently re-running the funnel (the jobs/extract.py contract).
+The curated, quarantine and fingerprints tables are snapshot tables
+(sinks/snapshots.py): each run is one atomic, time-travelable commit
+per table, resume anti-joins the CURRENT snapshots' url sets, and a
+corrupt manifest or a plain-parquet table with no snapshot log ABORTS
+the resume instead of silently re-running the funnel (the
+jobs/extract.py contract).
 """
 
 from __future__ import annotations
@@ -73,6 +74,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pdf_parser_spark.operators import dedup as dd  # noqa: E402
 from pdf_parser_spark.operators import webtext_filters as wf  # noqa: E402
 from pdf_parser_spark.plans.session import get_spark  # noqa: E402
+from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 from pdf_parser_spark.sources.corpus import read_documents  # noqa: E402
 
 MAX_DUP_LINE_FRAC = 0.3
@@ -95,32 +97,12 @@ REASONS = (
 ) = REASONS
 
 
-def _read_or_none(spark, path: str, snapshots: bool):
-    """Current table state, or None if nothing committed yet. Missing
-    table → None in both layouts; a CORRUPT snapshot manifest raises
-    (resume must abort, not silently re-adjudicate + re-append)."""
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        try:
-            return sn.read(spark, path)
-        except FileNotFoundError:
-            return None
-    return spark.read.parquet(path) if Path(path).exists() else None
+def _append(spark, df, path: str, summary: dict) -> dict:
+    """Commit df as one appended snapshot of a table."""
+    return sn.commit(spark, df, path, summary={"job": "curate", **summary})
 
 
-def _append(spark, df, path: str, snapshots: bool, summary: dict):
-    """Append df to a table; the snapshot commit record, or None for a
-    plain parquet append."""
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        return sn.commit(spark, df, path, summary={"job": "curate", **summary})
-    df.write.mode("append").parquet(path)
-    return None
-
-
-def _heal_store(spark, store_path: str, cur_tbl, store_tbl, snapshots: bool):
+def _heal_store(spark, store_path: str, cur_tbl, store_tbl):
     """Make the fingerprint store catch up to the curated table.
 
     The store is appended AFTER the curated commit, so a crash in the
@@ -137,18 +119,17 @@ def _heal_store(spark, store_path: str, cur_tbl, store_tbl, snapshots: bool):
     if n_missing == 0:
         return store_tbl, 0
     healed = dd.doc_signatures(missing, text_col="text", key_col="url")
-    _append_store(spark, healed, store_path, snapshots)
-    # re-read rather than union: the append invalidated/extended the
-    # path, and unioning the pre-append read on top of a re-listed
-    # scan would double the healed rows
-    return _read_or_none(spark, store_path, snapshots), n_missing
+    _append_store(spark, healed, store_path)
+    # re-read rather than union: the commit extended the snapshot, and
+    # the new head holds the pre-heal rows and the healed ones
+    return sn.read_or_none(spark, store_path), n_missing
 
 
-def _append_store(spark, sigs, store_path: str, snapshots: bool) -> int:
+def _append_store(spark, sigs, store_path: str) -> int:
     rows = sigs.select("url", "fp", "signature")
     n = rows.count()
     if n:
-        _append(spark, rows, store_path, snapshots, {"table": "fingerprints"})
+        _append(spark, rows, store_path, {"table": "fingerprints"})
     return n
 
 
@@ -159,7 +140,6 @@ def run(
     resume: bool = False,
     near_dups: bool = True,
     near_dup_threshold: float = 0.8,
-    snapshots: bool = False,
     input_format: str = "parquet",
     transitive_near_dups: bool = False,
     history_dedup: bool = False,
@@ -187,7 +167,7 @@ def run(
 
     # Every stage ends in an eager localCheckpoint: later plans start at a
     # batch-sized LogicalRDD leaf instead of re-planning the whole funnel,
-    # and a write to the curated/quarantine dirs cannot re-derive an
+    # and a commit to the curated/quarantine tables cannot re-derive an
     # earlier stage. Nothing is released by hand: once the frames go out
     # of scope, the next garbage collection lets Spark's ContextCleaner
     # free the checkpoint blocks, so a long-lived session does not
@@ -225,20 +205,19 @@ def run(
         # re-runs the full funnel on previously-dropped docs and
         # re-appends duplicate (url, reason) quarantine rows
         seen = None
-        cur_tbl = _read_or_none(spark, curated_path, snapshots)
+        cur_tbl = sn.read_or_none(spark, curated_path)
         if cur_tbl is not None:
             done = cur_tbl.select("url").distinct()
             already = done.count()
             seen = done
-        q_tbl = _read_or_none(spark, quarantine_path, snapshots)
+        q_tbl = sn.read_or_none(spark, quarantine_path)
         if q_tbl is not None:
             q_seen = q_tbl.select("url")
             seen = q_seen if seen is None else seen.unionByName(q_seen)
         if seen is not None:
-            # the checkpoint cuts the parquet-path lineage: this run
-            # APPENDS to the curated/quarantine dirs below, and a
-            # re-evaluated anti-join against the re-listed dirs, which
-            # then contain this very batch, would come back EMPTY
+            # checkpointed like every stage: later plans start at the
+            # seen set instead of re-scanning the tables this run
+            # commits to
             seen = seen.distinct().localCheckpoint()
             docs = docs.join(seen, on="url", how="left_anti")
 
@@ -324,8 +303,8 @@ def run(
     healed = n_appended = 0
     if history_dedup:
         new_sigs = dd.doc_signatures(survivors, text_col="text", key_col="url").localCheckpoint()
-        hist = _read_or_none(spark, store_path, snapshots)
-        cur_tbl = _read_or_none(spark, curated_path, snapshots)
+        hist = sn.read_or_none(spark, store_path)
+        cur_tbl = sn.read_or_none(spark, curated_path)
         if cur_tbl is not None:
             if hist is None:
                 # store enabled mid-life: build it from the curated
@@ -333,12 +312,12 @@ def run(
                 boot = dd.doc_signatures(
                     cur_tbl.select("url", "text"), text_col="text", key_col="url"
                 )
-                _append_store(spark, boot, store_path, snapshots)
-                hist = _read_or_none(spark, store_path, snapshots)
+                _append_store(spark, boot, store_path)
+                hist = sn.read_or_none(spark, store_path)
                 healed = -1  # marker: full bootstrap, not a crash heal
             else:
                 hist, healed = _heal_store(
-                    spark, store_path, cur_tbl.select("url", "text"), hist, snapshots
+                    spark, store_path, cur_tbl.select("url", "text"), hist
                 )
         _mark("history_dedup")
         if hist is not None:
@@ -373,17 +352,16 @@ def run(
     quarantine = reduce(lambda a, b: a.unionByName(b), drops).observe(
         dropped, *[F.count_if(F.col("reason") == r).alias(r) for r in REASONS]
     )
-    _append(spark, quarantine, quarantine_path, snapshots,
-            {"table": "quarantine", "resume": resume})
+    _append(spark, quarantine, quarantine_path, {"table": "quarantine", "resume": resume})
     _mark("quarantine_write")
 
     curated = Observation("curated")
     snap = _append(
         spark, survivors.observe(curated, F.count("*").alias("rows")),
-        curated_path, snapshots, {"table": "curated", "resume": resume},
+        curated_path, {"table": "curated", "resume": resume},
     )
     _mark("curated_write")
-    n_curated = _read_or_none(spark, curated_path, snapshots).select("url").distinct().count()
+    n_curated = sn.read_or_none(spark, curated_path).select("url").distinct().count()
     _mark("curated_count")
 
     if history_dedup:
@@ -392,7 +370,7 @@ def run(
         # after the curated commit, so a crash here under-drops later
         # batches at worst; _heal_store repairs it on the next run.
         final_sigs = new_sigs.join(survivors, on="url", how="left_semi")
-        n_appended = _append_store(spark, final_sigs, store_path, snapshots)
+        n_appended = _append_store(spark, final_sigs, store_path)
         _mark("fingerprint_store")
 
     metrics = {
@@ -411,9 +389,8 @@ def run(
         "total_curated": n_curated,
         "wall_sec": round(time.perf_counter() - t0, 2),
         "stage_secs": stage_secs,
+        "snapshot_id": snap["snapshot_id"],
     }
-    if snap is not None:
-        metrics["snapshot_id"] = snap["snapshot_id"]
     out.mkdir(parents=True, exist_ok=True)
     (out / "curation_metrics.json").write_text(json.dumps(metrics, indent=2))
     return metrics
@@ -433,7 +410,6 @@ def main() -> None:
         "keep one canonical doc per cluster, instead of the pairwise "
         "id_b loser-drop",
     )
-    ap.add_argument("--snapshots", action="store_true")
     ap.add_argument("--input-format", choices=("parquet", "warc"), default="parquet")
     ap.add_argument(
         "--history-dedup",
@@ -472,7 +448,6 @@ def main() -> None:
                 resume=args.resume,
                 near_dups=args.near_dups,
                 near_dup_threshold=args.near_dup_threshold,
-                snapshots=args.snapshots,
                 input_format=args.input_format,
                 transitive_near_dups=args.transitive_near_dups,
                 history_dedup=args.history_dedup,

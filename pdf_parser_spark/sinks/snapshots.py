@@ -9,7 +9,7 @@ and readers pin a snapshot id. This module reproduces exactly that
 dataflow:
 
   <table>/
-    data/<uuid>/part-*.parquet     one directory per committed batch
+    batch=<uuid>/part-*.parquet    one directory per committed batch
     _snapshots/v<N>.json           manifest: batch dirs, row counts,
                                    parent snapshot, operation, summary
 
@@ -20,6 +20,8 @@ dataflow:
   read(spark, table, snapshot_id=None)
                                 -> DataFrame AT a snapshot (time
                                    travel; default = current)
+  read_or_none(spark, table)    -> current snapshot, or None when
+                                   nothing is committed yet
   snapshots(table)              -> the log, oldest→newest
   rollback(table, snapshot_id)  -> new snapshot whose file set is the
                                    old one (history is never erased —
@@ -32,8 +34,23 @@ pruning work unchanged). Writers append new directories only: no
 read-modify-write of data, so commits from a resumed job are
 idempotent at the batch level. Reference anchor: this replaces the
 reference's overwrite-in-place outputs (orchestrate.py) with an
-audit-able append log; jobs/extract.py's anti-join resume composes
-with it (resume reads the CURRENT snapshot's url set).
+audit-able append log; every job (extract, curate, corpus_profile)
+commits its tables here, and their anti-join resume reads the CURRENT
+snapshot's url set.
+
+Batch directories are Hive-style (`batch=<uuid>`), so a raw
+`spark.read.parquet(table)` or pyarrow read of the directory returns
+rows plus a string `batch` column. A raw read is not a snapshot read:
+it sees every past version of an overwritten table, and batches whose
+commit never published until `remove_orphans` deletes them. Manifests
+hold paths relative to the table, so tables written with the earlier
+`data/<uuid>` batch layout still read.
+
+A directory that holds parquet files but no `_snapshots/` log is not a
+snapshot table: read, read_incremental and commit raise ValueError for
+it rather than treat it as empty. A missing or empty directory raises
+FileNotFoundError from the readers, which callers take as "nothing
+committed yet".
 """
 
 from __future__ import annotations
@@ -43,7 +60,8 @@ import os
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 class CommitConflictError(RuntimeError):
@@ -94,6 +112,23 @@ def _publish(snap: dict, table: str) -> None:
         tmp.unlink(missing_ok=True)
 
 
+def _refuse_plain(table: str) -> None:
+    if not _snap_dir(table).exists() and any(Path(table).rglob("*.parquet")):
+        raise ValueError(
+            f"{table} holds parquet files but no _snapshots/ log, so it is not "
+            "a snapshot table; move it aside or use a fresh outdir"
+        )
+
+
+def _log(table: str) -> list[dict]:
+    """The commit log of a table that has at least one snapshot."""
+    log = snapshots(table)
+    if not log:
+        _refuse_plain(table)
+        raise FileNotFoundError(f"no snapshots at {table}")
+    return log
+
+
 def snapshots(table: str) -> list[dict]:
     """Commit log, oldest → newest (empty for a fresh table)."""
     _check_local(table)
@@ -124,12 +159,18 @@ def commit(
     leaves an orphan data directory (invisible to every reader) and
     no new snapshot. Concurrent commits race on the manifest version;
     the loser gets CommitConflictError (see _publish), never a silent
-    clobber."""
+    clobber. The batch's row count is observed on the write itself."""
     _check_local(table)
-    batch = f"data/{uuid.uuid4().hex}"
-    batch_path = str(Path(table) / batch)
-    df.write.mode("error").parquet(batch_path)
-    n_rows = spark.read.parquet(batch_path).count()  # footer-count, cheap
+    _refuse_plain(table)
+    # the log directory exists before any data lands, so a crash inside
+    # a table's first commit leaves an empty (fresh) snapshot table
+    _snap_dir(table).mkdir(parents=True, exist_ok=True)
+    batch = f"batch={uuid.uuid4().hex}"
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("error").parquet(
+        str(Path(table) / batch)
+    )
+    n_rows = obs.get["rows"]
 
     parent = current_snapshot(table)
     if operation == "append" and parent is not None:
@@ -159,10 +200,10 @@ def read(
     spark: SparkSession, table: str, snapshot_id: int | None = None
 ) -> DataFrame:
     """DataFrame at a snapshot (time travel); default = current.
-    Raises for an unknown snapshot or an empty table."""
-    log = snapshots(table)
-    if not log:
-        raise FileNotFoundError(f"no snapshots at {table}")
+    Raises KeyError for an unknown snapshot, FileNotFoundError for an
+    empty table and ValueError for a directory that is not a snapshot
+    table."""
+    log = _log(table)
     if snapshot_id is None:
         snap = log[-1]
     else:
@@ -174,6 +215,16 @@ def read(
     return spark.read.parquet(*paths)
 
 
+def read_or_none(spark: SparkSession, table: str) -> DataFrame | None:
+    """The current snapshot, or None for a table with nothing committed
+    yet. A corrupt manifest or a directory that is not a snapshot table
+    raises, so a resuming job aborts instead of starting over."""
+    try:
+        return read(spark, table)
+    except FileNotFoundError:
+        return None
+
+
 def read_incremental(
     spark: SparkSession, table: str, snapshot_id: int | None = None
 ) -> DataFrame | None:
@@ -181,10 +232,8 @@ def read_incremental(
     incremental scan between a snapshot and its parent). Returns None
     for snapshots that added no data (e.g. rollback). Pre-round-4
     manifests without `new_batches` fall back to the full file set of
-    a first commit, else None."""
-    log = snapshots(table)
-    if not log:
-        raise FileNotFoundError(f"no snapshots at {table}")
+    a first commit, else None. Raises as read() does."""
+    log = _log(table)
     snap = log[-1] if snapshot_id is None else next(
         (s for s in log if s["snapshot_id"] == snapshot_id), None
     )
@@ -237,22 +286,22 @@ def remove_orphans(table: str, min_age_sec: float = 86400.0) -> dict:
     import time as _time
 
     live = {b for s in snapshots(table) for b in s["batches"]}
-    data = Path(table) / "data"
+    root = Path(table)
     removed = 0
     skipped = 0
     cutoff = _time.time() - min_age_sec
-    if data.exists():
-        for d in data.iterdir():
-            if not d.is_dir() or f"data/{d.name}" in live:
+    # batch=<uuid> directories, and data/<uuid> ones of older tables
+    for d in [*root.glob("batch=*"), *root.glob("data/*")]:
+        if not d.is_dir() or d.relative_to(root).as_posix() in live:
+            continue
+        try:
+            if d.stat().st_mtime > cutoff:
+                skipped += 1
                 continue
-            try:
-                if d.stat().st_mtime > cutoff:
-                    skipped += 1
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(d, ignore_errors=True)
-            removed += 1
+        except OSError:
+            continue
+        shutil.rmtree(d, ignore_errors=True)
+        removed += 1
     return {"removed_batches": removed, "skipped_young": skipped}
 
 

@@ -9,6 +9,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from jobs.extract import run as run_job
+from pdf_parser_spark.sinks import snapshots as sn
 from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
 
 
@@ -69,29 +70,6 @@ def test_resume_extracts_only_remainder(spark, tmp_path):
     assert ex.count() == 20
 
 
-def test_bucketed_output_prunes_lookups(spark, tmp_path):
-    """url_buckets=N → bucket(N, url)-style layout: a point lookup's
-    scan carries a PartitionFilters entry on url_bucket and reads one
-    bucket directory; resume still works over the partitioned table."""
-    from pyspark.sql import functions as F
-
-    corpus = str(tmp_path / "docs.parquet")
-    out = str(tmp_path / "outb")
-    write_documents(synthetic_documents(spark, 20, seed=42), corpus)
-    first = run_job(corpus, out, resume=False, spark=spark, url_buckets=8)
-    assert first["newly_extracted"] == 20
-
-    ex = spark.read.parquet(str(Path(out) / "extracted"))
-    url = ex.select("url").first()["url"]
-    bucket = ex.where(F.col("url") == url).select("url_bucket").first()["url_bucket"]
-    lookup = ex.where(F.col("url_bucket") == bucket)
-    plan = lookup._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "url_bucket" in plan.split("PartitionFilters", 1)[1][:200]
-
-    second = run_job(corpus, out, resume=True, spark=spark, url_buckets=8)
-    assert second["newly_extracted"] == 0 and second["total_extracted"] == 20
-
-
 def test_curate_funnel_and_resume(spark, tmp_path):
     from jobs.curate import run as run_curate
 
@@ -117,7 +95,7 @@ def test_curate_funnel_and_resume(spark, tmp_path):
     assert second["newly_curated"] == 0
     assert second["total_curated"] == first["total_curated"]
 
-    curated = spark.read.parquet(str(Path(out) / "curated"))
+    curated = sn.read(spark, str(Path(out) / "curated"))
     # curated rows keep the input_hint schema and PII-redacted text
     assert set(curated.columns) == {"url", "warc_ts", "html", "text", "lang"}
     assert curated.count() == first["total_curated"]
@@ -235,6 +213,40 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     assert not Path(path + "__old").exists()
 
 
+def test_compact_snapshot_table_is_one_overwrite_commit(spark, tmp_path, monkeypatch):
+    """A snapshot table compacts by one overwrite commit: rows kept,
+    the pre-compaction snapshot still readable, and a commit that
+    loses rows is rolled back to its parent."""
+    import pytest
+
+    import jobs.compact as jc
+
+    table = str(tmp_path / "snap_frag")
+    docs = synthetic_documents(spark, 40, seed=42)
+    for i in range(4):
+        sn.commit(spark, docs.where(f"pmod(xxhash64(url), 4) = {i}").repartition(3), table)
+    before = sn.current_snapshot(table)
+
+    m = jc.run(table, key="url", target_mb=64, spark=spark)
+    head = sn.current_snapshot(table)
+    assert m["rows"] == 40 and m["files_after"] == 1 < m["files_before"]
+    assert head["operation"] == "overwrite" and "batch_id" not in head["summary"]
+    assert head["total_rows"] == 40 and len(head["batches"]) == 1
+    assert sn.read(spark, table).select("url").distinct().count() == 40
+    # time travel to the pre-compaction snapshot
+    assert sn.read(spark, table, before["snapshot_id"]).count() == 40
+    assert len(sn.read(spark, table, before["snapshot_id"]).inputFiles()) == m["files_before"]
+
+    # a rewrite that loses a row: rolled back, and the job raises
+    real_commit = sn.commit
+    monkeypatch.setattr(sn, "commit", lambda spark_, df, *a, **k: real_commit(spark_, df.limit(39), *a, **k))
+    with pytest.raises(RuntimeError, match="rolled back"):
+        jc.run(table, spark=spark)
+    rb = sn.current_snapshot(table)
+    assert rb["operation"] == "rollback" and rb["batches"] == head["batches"]
+    assert sn.read(spark, table).count() == 40
+
+
 def test_resume_side_tables_incremental(spark, tmp_path):
     """Round-4 scale fix: a resume run derives side tables from the
     NEW batch only (observe()-counted) and appends — totals unchanged,
@@ -274,12 +286,12 @@ def test_resume_corrupt_checkpoint_aborts(spark, tmp_path):
     write_documents(synthetic_documents(spark, 8, seed=42), corpus)
 
     # snapshots mode: truncated manifest
-    run_job(corpus, out, resume=False, spark=spark, snapshots=True)
+    run_job(corpus, out, resume=False, spark=spark)
     man = next((Path(out) / "extracted" / "_snapshots").glob("v*.json"))
     n_files = len(list(Path(out).rglob("*.parquet")))
     man.write_text(man.read_text()[: len(man.read_text()) // 2])
     with pytest.raises(Exception) as ei:
-        run_job(corpus, out, resume=True, spark=spark, snapshots=True)
+        run_job(corpus, out, resume=True, spark=spark)
     assert not isinstance(ei.value, FileNotFoundError)
     # table unchanged: nothing was re-extracted/appended
     assert len(list(Path(out).rglob("*.parquet"))) == n_files
@@ -294,15 +306,11 @@ def test_resume_corrupt_checkpoint_aborts(spark, tmp_path):
 
 def test_resume_fresh_table_still_full_run(spark, tmp_path):
     """The narrowed except still treats a genuinely missing checkpoint
-    as 'nothing extracted yet' in both modes."""
+    as 'nothing extracted yet'."""
     corpus = str(tmp_path / "fr.parquet")
     write_documents(synthetic_documents(spark, 6, seed=42), corpus)
     m1 = run_job(corpus, str(tmp_path / "fr_out"), resume=True, spark=spark)
     assert m1["newly_extracted"] == 6 and m1["already_extracted"] == 0
-    m2 = run_job(
-        corpus, str(tmp_path / "fr_out_s"), resume=True, spark=spark, snapshots=True
-    )
-    assert m2["newly_extracted"] == 6 and m2["already_extracted"] == 0
 
 
 def test_extract_rejects_remote_outdir(spark):
@@ -313,13 +321,12 @@ def test_extract_rejects_remote_outdir(spark):
 
 
 def test_curate_snapshot_mode_resume(spark, tmp_path):
-    """curate --snapshots: curated AND quarantine are snapshot tables —
-    each run is one atomic commit per table, resume anti-joins the
-    current snapshots, and a corrupt manifest aborts the resume."""
+    """curated AND quarantine are snapshot tables — each run is one
+    atomic commit per table, resume anti-joins the current snapshots,
+    and a corrupt manifest aborts the resume."""
     import pytest
 
     from jobs.curate import run as run_curate
-    from pdf_parser_spark.sinks import snapshots as sn
 
     corpus_half = str(tmp_path / "sh.parquet")
     corpus_full = str(tmp_path / "sf.parquet")
@@ -328,11 +335,11 @@ def test_curate_snapshot_mode_resume(spark, tmp_path):
     write_documents(full.limit(12), corpus_half)
     write_documents(full, corpus_full)
 
-    first = run_curate(corpus_half, out, spark=spark, resume=False, snapshots=True)
+    first = run_curate(corpus_half, out, spark=spark, resume=False)
     assert first["snapshot_id"] == 1
     assert first["new_docs"] == 12
 
-    second = run_curate(corpus_full, out, spark=spark, resume=True, snapshots=True)
+    second = run_curate(corpus_full, out, spark=spark, resume=True)
     assert second["snapshot_id"] == 2
     assert second["new_docs"] == 12  # only the unseen half re-adjudicated
     assert second["already_curated"] == first["total_curated"]
@@ -351,8 +358,25 @@ def test_curate_snapshot_mode_resume(spark, tmp_path):
     man = sorted((Path(out) / "curated" / "_snapshots").glob("v*.json"))[-1]
     man.write_text(man.read_text()[:40])
     with pytest.raises(Exception) as ei:
-        run_curate(corpus_full, out, spark=spark, resume=True, snapshots=True)
+        run_curate(corpus_full, out, spark=spark, resume=True)
     assert not isinstance(ei.value, FileNotFoundError)
+
+
+def test_curate_resume_refuses_plain_parquet_outdir(spark, tmp_path):
+    """An outdir whose curated table is plain parquet with no snapshot
+    log aborts the resume, naming the table, instead of re-curating
+    every document as if the table were empty."""
+    import pytest
+
+    from jobs.curate import run as run_curate
+
+    corpus = str(tmp_path / "pdocs.parquet")
+    out = tmp_path / "plain_cur"
+    write_documents(synthetic_documents(spark, 8, seed=42), corpus)
+    spark.read.parquet(corpus).write.parquet(str(out / "curated"))
+    with pytest.raises(ValueError, match="curated"):
+        run_curate(corpus, str(out), spark=spark, resume=True)
+    assert not (out / "curated" / "_snapshots").exists()
 
 
 def test_curate_rejects_remote_outdir(spark):
@@ -365,12 +389,10 @@ def test_curate_rejects_remote_outdir(spark):
 
 
 def test_side_table_crash_heal(spark, tmp_path):
-    """r4 review finding: a crash between the extracted append and the
+    """r4 review finding: a crash between the extracted commit and the
     side-table appends must not lose the batch's side rows forever.
     Simulate the crash by deleting two side-table batch partitions and
-    demoting the marker to pending; the next run heals them."""
-    import json as _json
-
+    the batch's done marker; the next run heals them."""
     corpus = str(tmp_path / "heal.parquet")
     out = Path(tmp_path / "heal_out")
     write_documents(synthetic_documents(spark, 16, seed=42), corpus)
@@ -378,14 +400,12 @@ def test_side_table_crash_heal(spark, tmp_path):
     first = run_job(corpus, str(out), resume=False, spark=spark)
     bid = first["batch_id"]
     # simulate dying mid-side-writes: some batch partitions landed,
-    # some didn't, marker still pending
+    # some didn't, no done marker
     import shutil
 
     shutil.rmtree(out / "chunks" / f"batch={bid}")
     shutil.rmtree(out / "lineage" / f"batch={bid}")
-    done = out / "_markers" / f"{bid}.done.json"
-    (out / "_markers" / f"{bid}.pending.json").write_text(done.read_text())
-    done.unlink()
+    (out / "_markers" / f"{bid}.done.json").unlink()
 
     second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
     assert second["healed_batches"] == [bid]
@@ -403,13 +423,12 @@ def test_side_table_crash_heal(spark, tmp_path):
 
 
 def test_side_table_heal_snapshot_mode_without_marker(spark, tmp_path):
-    """Snapshot mode closes the residual window: a committed snapshot
-    with NO marker at all (died before the pending marker) is healed
-    from the snapshot log."""
+    """A committed snapshot with NO marker at all (died right after the
+    commit) is healed from the snapshot log."""
     corpus = str(tmp_path / "healsn.parquet")
     out = Path(tmp_path / "healsn_out")
     write_documents(synthetic_documents(spark, 12, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark, snapshots=True)
+    first = run_job(corpus, str(out), resume=False, spark=spark)
     bid = first["batch_id"]
     # simulate: crash right after sn.commit — no side rows, no marker
     import shutil
@@ -418,76 +437,86 @@ def test_side_table_heal_snapshot_mode_without_marker(spark, tmp_path):
         shutil.rmtree(out / name)
     shutil.rmtree(out / "_markers")
 
-    second = run_job(
-        corpus, str(out), resume=True, spark=spark, snapshots=True, heal_min_age_sec=0
-    )
+    second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
     assert second["healed_batches"] == [bid]
     val = spark.read.parquet(str(out / "validation"))
     assert val.count() == 12 and val.select("url").distinct().count() == 12
 
 
 def test_heal_grace_period_skips_fresh_markers(spark, tmp_path):
-    """A fresh pending marker may belong to a LIVE concurrent run on
-    the same outdir — the default grace period must not heal it (the
-    remove_orphans hazard in reverse)."""
+    """A fresh snapshot with no done marker may belong to a LIVE
+    concurrent run on the same outdir — the default grace period must
+    not heal it (the remove_orphans hazard in reverse)."""
     corpus = str(tmp_path / "grace.parquet")
     out = Path(tmp_path / "grace_out")
     write_documents(synthetic_documents(spark, 10, seed=42), corpus)
     first = run_job(corpus, str(out), resume=False, spark=spark)
     bid = first["batch_id"]
     done = out / "_markers" / f"{bid}.done.json"
-    (out / "_markers" / f"{bid}.pending.json").write_text(done.read_text())
     done.unlink()
-    # default heal_min_age_sec (1h): fresh marker untouched
+    # default heal_min_age_sec (1h): fresh snapshot untouched
     second = run_job(corpus, str(out), resume=True, spark=spark)
     assert "healed_batches" not in second
-    assert (out / "_markers" / f"{bid}.pending.json").exists()
+    assert not done.exists()
 
 
 def test_heal_failure_is_isolated_not_fatal(spark, tmp_path):
-    """A stale marker whose recorded files are gone (e.g. compacted
-    away) is surfaced in the summary, not allowed to brick the job."""
-    import json as _json
+    """A snapshot with no done marker whose batch directory is gone
+    (here: compacted into a newer snapshot, then deleted) is surfaced
+    in the summary, not allowed to brick the job."""
+    import shutil
+
+    from jobs.compact import run as run_compact
 
     corpus = str(tmp_path / "stale.parquet")
     out = Path(tmp_path / "stale_out")
     write_documents(synthetic_documents(spark, 10, seed=42), corpus)
     first = run_job(corpus, str(out), resume=False, spark=spark)
-    (out / "_markers" / "deadbatch.pending.json").write_text(
-        _json.dumps({"files": [str(out / "extracted" / "gone.parquet")]})
-    )
+    bid = first["batch_id"]
+    table = str(out / "extracted")
+    run_compact(table, spark=spark)
+    shutil.rmtree(Path(table) / sn.snapshots(table)[0]["new_batches"][0])
+    (out / "_markers" / f"{bid}.done.json").unlink()
+
     second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
     assert second["newly_extracted"] == 0  # the job itself still ran
-    assert second["heal_failures"][0]["batch_id"] == "deadbatch"
-    # marker left for the operator
-    assert (out / "_markers" / "deadbatch.pending.json").exists()
+    assert second["already_extracted"] == 10
+    assert second["heal_failures"][0]["batch_id"] == bid
+    # no done marker: the batch stays listed for the operator
+    assert not (out / "_markers" / f"{bid}.done.json").exists()
 
 
-def test_heal_prewrite_marker_after_append_crash(spark, tmp_path):
-    """Plain mode's pre-write marker closes the crash window AFTER the
-    extracted append but BEFORE the batch file list is recorded: heal
-    re-diffs against the recorded pre-write file set."""
-    import json as _json
-
-    corpus = str(tmp_path / "prew.parquet")
-    out = Path(tmp_path / "prew_out")
-    write_documents(synthetic_documents(spark, 10, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    bid = first["batch_id"]
-    # rewrite history: as if the run died right after the append —
-    # marker still in pre-write form, no side tables at all
+def test_orphan_batch_invisible_to_resume(spark, tmp_path):
+    """A batch directory written without a manifest (a run that died
+    inside its commit) is invisible to the resumed run's snapshot read:
+    the resume extracts exactly the remainder, and every url appears
+    once in the current snapshot."""
     import shutil
 
-    for name in ("toc", "chunks", "validation", "doc_metrics", "lineage"):
-        shutil.rmtree(out / name)
-    (out / "_markers" / f"{bid}.done.json").unlink()
-    (out / "_markers" / f"{bid}.pending.json").write_text(
-        _json.dumps({"before_files": []})
-    )
-    second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
-    assert second["healed_batches"] == [bid]
-    val = spark.read.parquet(str(out / "validation"))
-    assert val.count() == 10 and val.select("url").distinct().count() == 10
+    corpus_half = str(tmp_path / "oh.parquet")
+    corpus_full = str(tmp_path / "of.parquet")
+    out = Path(tmp_path / "orphan_out")
+    full = synthetic_documents(spark, 16, seed=42)
+    write_documents(full.limit(8), corpus_half)
+    write_documents(full, corpus_full)
+
+    run_job(corpus_half, str(out), resume=False, spark=spark)
+    table = out / "extracted"
+    batch = sn.current_snapshot(str(table))["new_batches"][0]
+    shutil.copytree(table / batch, table / "batch=orphan")
+
+    second = run_job(corpus_full, str(out), resume=True, spark=spark, heal_min_age_sec=0)
+    assert second["already_extracted"] == 8
+    assert second["newly_extracted"] == 8
+    assert second["total_extracted"] == 16
+    assert "healed_batches" not in second
+    cur = sn.read(spark, str(table))
+    assert cur.count() == cur.select("url").distinct().count() == 16
+    # a raw directory read is not a snapshot read: it sees the orphan
+    # until remove_orphans deletes it
+    assert spark.read.parquet(str(table)).count() == 24
+    assert sn.remove_orphans(str(table), min_age_sec=0)["removed_batches"] == 1
+    assert spark.read.parquet(str(table)).count() == 16
 
 
 def test_curate_crash_between_quarantine_and_curated_converges(spark, tmp_path):
@@ -603,7 +632,7 @@ def test_curate_history_dedup_across_batches(spark, tmp_path):
         batch1, out, spark=spark, resume=False, near_dups=False, history_dedup=True
     )
     assert first["newly_curated"] > 2
-    store = spark.read.parquet(str(Path(out) / "fingerprints"))
+    store = sn.read(spark, str(Path(out) / "fingerprints"))
     assert store.count() == first["newly_curated"]
     assert set(store.columns) == {"url", "fp", "signature"}
 

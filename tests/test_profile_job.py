@@ -16,15 +16,13 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from jobs.corpus_profile import _TABLES, run as run_profile
+from pdf_parser_spark.sinks import snapshots as sn
 from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
 
 
-def _table(spark, out: str, name: str, snapshots: bool = False):
-    if snapshots:
-        from pdf_parser_spark.sinks import snapshots as sn
-
-        return sn.read(spark, str(Path(out) / name))
-    return spark.read.parquet(str(Path(out) / name))
+def _table(spark, out: str, name: str):
+    # a raw read of a sketch table would see every past version
+    return sn.read(spark, str(Path(out) / name))
 
 
 def _sorted_rows(df):
@@ -95,16 +93,14 @@ def test_profile_incremental_merge_equals_rebuild(spark, tmp_path):
 
 
 def test_profile_snapshots_time_travel(spark, tmp_path):
-    from pdf_parser_spark.sinks import snapshots as sn
-
     a = str(tmp_path / "a.parquet")
     ab = str(tmp_path / "ab.parquet")
     write_documents(synthetic_documents(spark, 24, seed=42), a)
     write_documents(synthetic_documents(spark, 40, seed=42), ab)
 
     out = str(tmp_path / "snap")
-    run_profile(a, out, spark=spark, snapshots=True)
-    run_profile(ab, out, spark=spark, resume=True, snapshots=True)
+    run_profile(a, out, spark=spark)
+    run_profile(ab, out, spark=spark, resume=True)
 
     hll_tbl = str(Path(out) / "hll_distinct")
     log = sn.snapshots(hll_tbl)
@@ -115,15 +111,15 @@ def test_profile_snapshots_time_travel(spark, tmp_path):
     fresh_a = str(tmp_path / "fresh_a")
     run_profile(a, fresh_a, spark=spark)
     assert _sorted_rows(sn.read(spark, hll_tbl, snapshot_id=1)) == _sorted_rows(
-        spark.read.parquet(str(Path(fresh_a) / "hll_distinct"))
+        _table(spark, fresh_a, "hll_distinct")
     )
 
-    # merged current state equals the plain-mode rebuild of A ∪ B
+    # merged current state equals the one-batch rebuild of A ∪ B
     fresh = str(tmp_path / "fresh_ab")
     run_profile(ab, fresh, spark=spark)
     for name in _TABLES:
-        assert _sorted_rows(sn.read(spark, str(Path(out) / name))) == _sorted_rows(
-            spark.read.parquet(str(Path(fresh) / name))
+        assert _sorted_rows(_table(spark, out, name)) == _sorted_rows(
+            _table(spark, fresh, name)
         )
 
 
@@ -212,36 +208,17 @@ def test_profile_unsealed_staging_discarded(spark, tmp_path):
     assert not orphan.exists()
 
 
-def test_recover_plain_swaps(tmp_path):
-    """Filesystem-only healing of interrupted table swaps: a sealed
-    .tmp replaces its table (it is strictly newer); an unsealed .tmp
-    is a partial write and is discarded."""
-    from jobs.corpus_profile import _recover_plain_swaps
-
-    out = tmp_path / "prof"
-    # sealed tmp, table missing (crash between rmtree and rename)
-    sealed = out / "word_cms.tmp"
-    sealed.mkdir(parents=True)
-    (sealed / "part-0.parquet").write_text("data")
-    (sealed / "_COMMIT_READY").write_text("")
-    # sealed tmp beside a (stale) table directory
-    sealed2 = out / "len_hist.tmp"
-    sealed2.mkdir()
-    (sealed2 / "part-0.parquet").write_text("new")
-    (sealed2 / "_COMMIT_READY").write_text("")
-    stale = out / "len_hist"
-    stale.mkdir()
-    (stale / "part-0.parquet").write_text("old")
-    # unsealed tmp (crash mid-write)
-    unsealed = out / "fp_bloom.tmp"
-    unsealed.mkdir()
-    (unsealed / "part-0.parquet").write_text("partial")
-
-    healed = _recover_plain_swaps(out)
-    assert sorted(healed) == ["len_hist", "word_cms"]
-    assert (out / "word_cms" / "part-0.parquet").read_text() == "data"
-    assert (out / "len_hist" / "part-0.parquet").read_text() == "new"
-    assert not unsealed.exists() and not sealed.exists() and not sealed2.exists()
+def test_profile_refuses_plain_parquet_outdir(spark, tmp_path):
+    """A profile outdir whose tables are plain parquet with no snapshot
+    log aborts, naming the table, instead of profiling every document
+    again on top of the stored sketches."""
+    corpus = str(tmp_path / "docs.parquet")
+    out = tmp_path / "plain_prof"
+    write_documents(synthetic_documents(spark, 8, seed=42), corpus)
+    spark.read.parquet(corpus).select("url").write.parquet(str(out / "seen_urls"))
+    with pytest.raises(ValueError, match="seen_urls"):
+        run_profile(corpus, str(out), spark=spark, resume=True)
+    assert not (out / "hll_distinct").exists()
 
 
 def test_profile_rerun_without_resume_never_double_counts(spark, tmp_path):

@@ -89,9 +89,9 @@ def test_snapshot_resume_composition(spark, tmp_path):
 
 
 def test_extract_job_snapshot_mode(spark, tmp_path):
-    """jobs/extract.py --snapshots: each run is an atomic snapshot
-    commit; resume anti-joins the current snapshot and commits only
-    the remainder — the north rule's Iceberg-checkpoint restart."""
+    """jobs/extract.py: each run is an atomic snapshot commit; resume
+    anti-joins the current snapshot and commits only the remainder —
+    the north rule's Iceberg-checkpoint restart."""
     from jobs.extract import run as run_job
     from pdf_parser_spark.sources.corpus import write_documents
 
@@ -102,10 +102,10 @@ def test_extract_job_snapshot_mode(spark, tmp_path):
     write_documents(full.limit(9), corpus_half)
     write_documents(full, corpus_full)
 
-    first = run_job(corpus_half, out, resume=False, spark=spark, snapshots=True)
+    first = run_job(corpus_half, out, resume=False, spark=spark)
     assert first["snapshot_id"] == 1 and first["newly_extracted"] == 9
 
-    second = run_job(corpus_full, out, resume=True, spark=spark, snapshots=True)
+    second = run_job(corpus_full, out, resume=True, spark=spark)
     assert second["snapshot_id"] == 2
     assert second["already_extracted"] == 9
     assert second["newly_extracted"] == 7
@@ -182,3 +182,64 @@ def test_remove_orphans_deletes_only_unreferenced(spark, tmp_path):
     # guard applies here too
     with pytest.raises(ValueError, match="local filesystem"):
         sn.remove_orphans("s3://bucket/t")
+
+
+def test_commit_counts_rows_by_observation(spark, tmp_path):
+    """batch_rows is observed on the commit's own write: exact for an
+    empty frame and for a multi-partition one."""
+    docs = synthetic_documents(spark, 12, seed=42)
+    empty = sn.commit(spark, docs.limit(0), str(tmp_path / "empty"))
+    assert empty["batch_rows"] == empty["total_rows"] == 0
+    assert sn.read(spark, str(tmp_path / "empty")).count() == 0
+
+    table = str(tmp_path / "multi")
+    multi = docs.repartition(5)
+    assert multi.rdd.getNumPartitions() == 5
+    s1 = sn.commit(spark, multi, table)
+    assert s1["batch_rows"] == 12
+    assert len(list((Path(table) / s1["new_batches"][0]).glob("*.parquet"))) > 1
+    s2 = sn.commit(spark, multi.limit(7), table)
+    assert (s2["batch_rows"], s2["total_rows"]) == (7, 19)
+    assert sn.read(spark, table).count() == 19
+
+
+def test_batches_are_hive_style_directories(spark, tmp_path):
+    """Each commit lands in <table>/batch=<uuid>/: a raw directory read
+    returns every row plus a string `batch` column, while a snapshot
+    read adds no column."""
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "hive")
+    docs = synthetic_documents(spark, 9, seed=42).cache()
+    s1 = sn.commit(spark, docs.limit(4), table)
+    sn.commit(spark, docs.subtract(docs.limit(4)), table)
+    assert s1["new_batches"][0].startswith("batch=")
+    assert sn.read(spark, table).columns == docs.columns
+    raw = spark.read.parquet(table)
+    assert raw.columns == docs.columns + ["batch"]
+    assert dict(raw.dtypes)["batch"] == "string"
+    assert raw.count() == 9
+    assert pq.read_table(table, columns=["url"]).num_rows == 9
+    docs.unpersist()
+
+
+def test_plain_parquet_directory_is_not_a_snapshot_table(spark, tmp_path):
+    """A directory of parquet files with no _snapshots/ log is refused by
+    name; a missing or empty directory reads as a fresh table."""
+    plain = str(tmp_path / "plain")
+    synthetic_documents(spark, 3, seed=42).write.parquet(plain)
+    for op in (
+        lambda: sn.read(spark, plain),
+        lambda: sn.read_incremental(spark, plain),
+        lambda: sn.commit(spark, synthetic_documents(spark, 1, seed=1), plain),
+    ):
+        with pytest.raises(ValueError, match="not a snapshot table"):
+            op()
+    assert not (Path(plain) / "_snapshots").exists()
+
+    (tmp_path / "empty").mkdir()
+    for t in (str(tmp_path / "missing"), str(tmp_path / "empty")):
+        with pytest.raises(FileNotFoundError):
+            sn.read(spark, t)
+        with pytest.raises(FileNotFoundError):
+            sn.read_incremental(spark, t)

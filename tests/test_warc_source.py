@@ -166,7 +166,9 @@ def test_curate_job_from_warc(spark, tmp_path):
         m["dropped_gopher"] + m["dropped_dup_lines"] + m["dropped_exact_dup"]
         + m["dropped_near_dup"] + m["newly_curated"]
     ) == m["new_docs"] == 12
-    curated = spark.read.parquet(str(Path(out) / "curated"))
+    from pdf_parser_spark.sinks import snapshots as sn
+
+    curated = sn.read(spark, str(Path(out) / "curated"))
     assert set(curated.columns) == {"url", "warc_ts", "html", "text", "lang"}
     assert curated.count() == m["total_curated"] > 0
 

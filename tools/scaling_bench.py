@@ -94,8 +94,8 @@ def main():
     }
     print(json.dumps(result))
 
-    # machine-readable sidecar: bench.py folds this into its JSON line
-    # so every BENCH_r{N}.json carries the north-rule scaling evidence
+    # machine-readable record of the last scaling run, beside the
+    # human-readable one below
     (REPO / "BENCH").mkdir(exist_ok=True)
     (REPO / "BENCH" / "scaling_last_run.json").write_text(json.dumps(result, indent=2))
 
