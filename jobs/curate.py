@@ -12,15 +12,21 @@ The standard pre-training data hygiene pass, end to end:
     → Gopher quality flags + C4 dup-line stats  (native exprs)
     → PII redaction (text := text_redacted)     (native exprs)
     → exact dedup (min-url keeper per md5 fp)   (1 shuffle)
-    → MinHash-LSH near-dup prune (xxhash64,
-      banded, hot-bucket-capped, optional;
+    → ONE MinHash pass: shingle sets, then
+      xxhash64 signatures, each checkpointed,
+      on an explicit url repartition to
+      spark.sql.shuffle.partitions (adaptive
+      execution would merge the CPU-bound pass
+      into one task by its few bytes)           (url-keyed)
+    → MinHash-LSH near-dup prune from that pass
+      (banded, hot-bucket-capped, optional;
       --transitive-near-dups closes pairs into
       clusters and keeps one canonical doc)     (bucketed, no O(n²))
-    → dedup vs HISTORY (--history-dedup):
-      exact via stored md5 fps, near via
-      banded-LSH join against the stored
-      signature table — historical text is
-      never re-read; the store self-bootstraps
+    → dedup vs HISTORY (--history-dedup), on
+      the same signatures: exact via stored md5
+      fps, near via banded-LSH join against the
+      stored signature table — historical text
+      is never re-read; the store self-bootstraps
       and self-heals from the curated table     (state ∝ docs, tiny)
     → per-host cap (--host-cap)                 (WindowGroupLimit)
     → append (url, reason) drops to
@@ -43,11 +49,15 @@ them. `new_docs` is counted separately (on the quality stage's
 checkpoint), so the accounting identity new_docs = Σ dropped +
 newly_curated compares independent counts. Every stage ends in an eager
 checkpoint, so `stage_secs` holds each stage's own driver wall time, in
-run order: scan_count, quality_funnel, exact_dup, near_dup, history_dedup
-(signatures and store catch-up), exact_dup_history, near_dup_history,
-host_cap, quarantine_write, curated_write, curated_count and
-fingerprint_store — each only when its stage runs. `wall_sec` covers
-the whole call.
+run order: scan_count, quality_funnel, exact_dup, near_dup (the MinHash
+pass included), history_dedup (store catch-up, and the MinHash pass
+when near-dup is off), exact_dup_history, near_dup_history, host_cap,
+quarantine_write, curated_count, curated_write and fingerprint_store —
+each only when its stage runs. `wall_sec` covers the whole call.
+`total_curated` is the curated table's distinct-url count: each curated
+commit records it in its manifest summary (`distinct_urls`), and a
+resumed run adds the batch's distinct urls to the head's figure instead
+of rescanning the table.
 
 The curated, quarantine and fingerprints tables are snapshot tables
 (sinks/snapshots.py): each run is one atomic, time-travelable commit
@@ -126,11 +136,13 @@ def _heal_store(spark, store_path: str, cur_tbl, store_tbl):
 
 
 def _append_store(spark, sigs, store_path: str) -> int:
-    rows = sigs.select("url", "fp", "signature")
-    n = rows.count()
-    if n:
-        _append(spark, rows, store_path, {"table": "fingerprints"})
-    return n
+    """Append (url, fp, signature) rows to the store; returns how many
+    were appended, observed on the write (an empty frame commits
+    nothing)."""
+    obs = Observation("store")
+    rows = sigs.select("url", "fp", "signature").observe(obs, F.count("*").alias("rows"))
+    _append(spark, rows, store_path, {"table": "fingerprints"})
+    return obs.get["rows"]
 
 
 def run(
@@ -207,9 +219,13 @@ def run(
         seen = None
         cur_tbl = sn.read_or_none(spark, curated_path)
         if cur_tbl is not None:
-            done = cur_tbl.select("url").distinct()
-            already = done.count()
-            seen = done
+            seen = cur_tbl.select("url")
+            # each curate commit records the table's distinct-url total;
+            # a manifest without it (an older run, compaction, rollback)
+            # is recounted
+            already = sn.current_snapshot(curated_path)["summary"].get("distinct_urls")
+            if already is None:
+                already = seen.distinct().count()
         q_tbl = sn.read_or_none(spark, quarantine_path)
         if q_tbl is not None:
             q_seen = q_tbl.select("url")
@@ -272,10 +288,24 @@ def run(
         _mark(reason)
         return losers
 
+    # One MinHash pass per batch: the survivors' shingle sets and
+    # signatures are built once, each ending in a checkpoint, and both
+    # near-dup (LSH candidates, signature prefilter, Jaccard verify) and
+    # history dedup start from them. The url repartition count is
+    # explicit, as in salted_repartition: the pass is CPU-bound (explode,
+    # 32 hashes, min-aggregation) over a few hundred KB, and adaptive
+    # execution would size it by those bytes into one task while the
+    # other slots idle. The sets' groupBy reuses that partitioning, and
+    # the signatures hash map-side over the sets' partitions: only one
+    # partial row per url is exchanged to merge them (a checkpoint
+    # forgets its partitioning under adaptive execution).
+    if near_dups or history_dedup:
+        by_url = survivors.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "url")
+        sets = dd.shingle_sets(by_url, text_col="text", key_col="url").localCheckpoint()
+        sigs = dd.set_signatures(sets, key_col="url").localCheckpoint()
+
     if near_dups:
-        pairs = dd.near_dup_pairs_minhash(
-            survivors, text_col="text", key_col="url", threshold=near_dup_threshold
-        )
+        pairs = dd.near_dup_pairs(sets, sigs, key_col="url", threshold=near_dup_threshold)
         if transitive_near_dups:
             # RefinedWeb/SlimPajama cluster semantics: close the pair
             # list transitively (O(log n) star-contraction rounds) and
@@ -302,7 +332,11 @@ def run(
     # estimate (operators/dedup.near_dups_vs_history).
     healed = n_appended = 0
     if history_dedup:
-        new_sigs = dd.doc_signatures(survivors, text_col="text", key_col="url").localCheckpoint()
+        # the batch's signatures from the pass above, restricted to the
+        # survivors of near-dup by the join from their side
+        new_sigs = dd.fingerprints_with_signatures(
+            survivors, sigs, text_col="text", key_col="url"
+        ).localCheckpoint()
         hist = sn.read_or_none(spark, store_path)
         cur_tbl = sn.read_or_none(spark, curated_path)
         if cur_tbl is not None:
@@ -355,14 +389,26 @@ def run(
     _append(spark, quarantine, quarantine_path, {"table": "quarantine", "resume": resume})
     _mark("quarantine_write")
 
+    # the distinct-url total after this batch, without rescanning the
+    # curated table on resume: the anti-join made this batch's urls
+    # disjoint from the curated ones. A non-resume run may repeat
+    # curated urls, so it recounts.
+    batch_urls = survivors.select("url").distinct()
+    if resume:
+        n_curated = already + batch_urls.count()
+    else:
+        prior = sn.read_or_none(spark, curated_path)
+        if prior is not None:
+            batch_urls = prior.select("url").unionByName(batch_urls).distinct()
+        n_curated = batch_urls.count()
+    _mark("curated_count")
+
     curated = Observation("curated")
     snap = _append(
-        spark, survivors.observe(curated, F.count("*").alias("rows")),
-        curated_path, {"table": "curated", "resume": resume},
+        spark, survivors.observe(curated, F.count("*").alias("rows")), curated_path,
+        {"table": "curated", "resume": resume, "distinct_urls": n_curated},
     )
     _mark("curated_write")
-    n_curated = sn.read_or_none(spark, curated_path).select("url").distinct().count()
-    _mark("curated_count")
 
     if history_dedup:
         # the store tracks the CURATED set: append signatures for this
@@ -389,7 +435,8 @@ def run(
         "total_curated": n_curated,
         "wall_sec": round(time.perf_counter() - t0, 2),
         "stage_secs": stage_secs,
-        "snapshot_id": snap["snapshot_id"],
+        # an empty batch commits nothing: the head, if any, is unchanged
+        "snapshot_id": snap["snapshot_id"] if snap else None,
     }
     out.mkdir(parents=True, exist_ok=True)
     (out / "curation_metrics.json").write_text(json.dumps(metrics, indent=2))

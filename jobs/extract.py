@@ -210,7 +210,6 @@ def run(
         spark, extracted, extracted_path,
         summary={"job": "extract", "resume": resume, "batch_id": batch_id},
     )
-    new_batch = sn.read_incremental(spark, extracted_path, snap["snapshot_id"])
     wall = time.perf_counter() - t0
 
     # side tables derive from THIS batch only and APPEND — they are
@@ -220,24 +219,31 @@ def run(
     # Reading the just-committed batch back keeps every stage
     # restartable without re-running the extract UDF; the done marker
     # closes the side writes, so a crash before it is healed
-    # (re-derived, not lost) by the next run.
+    # (re-derived, not lost) by the next run. An empty batch published
+    # no snapshot (the commit returned the unchanged head), so it gets
+    # no side rows and no marker.
     t_side0 = time.perf_counter()
-    n_new, status_counts = _write_side_tables(out, new_batch, batch_id)
-    _finish_marker(out, batch_id, snap["snapshot_id"])
+    n_new, status_counts = 0, {}
+    if snap is not None and snap["summary"].get("batch_id") == batch_id:
+        new_batch = sn.read_incremental(spark, extracted_path, snap["snapshot_id"])
+        n_new, status_counts = _write_side_tables(out, new_batch, batch_id)
+        _finish_marker(out, batch_id, snap["snapshot_id"])
+    else:
+        batch_id = None
     side_sec = time.perf_counter() - t_side0
 
     summary = {
         "input_docs": n_input,
         "already_extracted": n_already,
         "newly_extracted": n_new,
-        "total_extracted": snap["total_rows"],
+        "total_extracted": snap["total_rows"] if snap else 0,
         "wall_sec_extract": round(wall, 2),
         "wall_sec_side_tables": round(side_sec, 2),
         "docs_per_sec": round(n_new / wall, 2) if wall > 0 else None,
         "status_counts": status_counts,
         "side_table_rows_processed": n_new,
         "batch_id": batch_id,
-        "snapshot_id": snap["snapshot_id"],
+        "snapshot_id": snap["snapshot_id"] if snap else None,
     }
     if healed:
         summary["healed_batches"] = healed

@@ -7,6 +7,8 @@ DataFrame plans (no Python in the hot path):
   minhash_signatures    k-permutation MinHash via xxhash64(shingle, seed)
   lsh_candidate_pairs   banded signature join (classic MinHash-LSH)
   verified_near_dups    candidates re-checked with exact Jaccard
+  near_dup_pairs_minhash  shingle_sets → set_signatures → near_dup_pairs
+                        (doc_signatures shares the first two steps)
   simhash               32-bit sign-of-sum SimHash per document
   blocked_jaccard_pairs SQL-oracle-able near-dup via (lang, n_chars)
                         blocking + distinct-word Jaccard
@@ -83,6 +85,15 @@ def shingles(df: DataFrame, text_col: str = "text", key_col: str = "doc_id", n: 
     )
 
 
+# one hash per seed, as SQL text: the xxhash64 form hashes (shingle,
+# seed) exactly as F.xxhash64(col, F.lit(seed)) does, and the portable
+# form is functions.text_metrics.portable_hash64 spelled out
+_HASH_SQL = {
+    False: "xxhash64(shingle, {i})",
+    True: "CAST(conv(substring(md5(concat(shingle, '#{i}')), 1, 15), 16, 10) AS BIGINT)",
+}
+
+
 def minhash_signatures(
     shingle_df: DataFrame,
     key_col: str = "doc_id",
@@ -92,22 +103,27 @@ def minhash_signatures(
     """(key, signature array<long>) — min over xxhash64(shingle, seed)
     per seed.
 
-    Columnar formulation: num_hashes hash COLUMNS per shingle row and
-    num_hashes `min` aggregates in ONE groupBy — no ×num_hashes row
-    explode (k× less shuffle input than the exploded form), full
-    map-side partial aggregation, seeds constant so every hash stays
-    codegen'd. Same signatures bit-for-bit."""
-    hash_fn = portable_hash64 if portable else (lambda c, seed: F.xxhash64(c, F.lit(seed)))
-    hashed = shingle_df.select(
-        key_col,
-        *[hash_fn(F.col("shingle"), i).alias(f"h{i}") for i in range(num_hashes)],
-    )
-    mins = [F.min(f"h{i}").alias(f"m{i}") for i in range(num_hashes)]
-    return (
-        hashed.groupBy(key_col)
-        .agg(*mins)
-        .select(key_col, F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("signature"))
-    )
+    Columnar formulation: one groupBy whose single aggregate is
+    `array(min(hash_0(shingle)), …, min(hash_{k-1}(shingle)))` — no
+    ×num_hashes row explode, full map-side partial aggregation, seeds
+    constant so every hash stays codegen'd. The signature is built as
+    ONE SQL expression: composing it from 2·num_hashes Column objects
+    cost ~70 Py4J round trips per hash (0.4–0.6 s of driver time per
+    call at k=32), more than the aggregation itself on a small batch."""
+    hashes = ", ".join(f"min({_HASH_SQL[portable].format(i=i)})" for i in range(num_hashes))
+    return shingle_df.groupBy(key_col).agg(F.expr(f"array({hashes})").alias("signature"))
+
+
+def set_signatures(
+    sets_df: DataFrame, key_col: str = "doc_id", num_hashes: int = 32, portable: bool = False
+) -> DataFrame:
+    """(key, signature) from precomputed shingle sets (shingle_sets).
+    The aggregation key is the sets' own key: straight after
+    shingle_sets it adds no exchange, and over materialized sets the
+    hashing still runs map-side, before the one exchange that merges a
+    partial row per key."""
+    exploded = sets_df.select(key_col, F.explode("sh").alias("shingle"))
+    return minhash_signatures(exploded, key_col=key_col, num_hashes=num_hashes, portable=portable)
 
 
 def banded_buckets(
@@ -203,11 +219,16 @@ def verified_near_dups(
     shingle_n: int = 3,
 ) -> DataFrame:
     """Re-check candidate pairs with exact shingle-set Jaccard."""
-    sets_df = (
-        shingles(df, text_col, key_col, n=shingle_n)
-        .groupBy(key_col)
-        .agg(F.collect_set("shingle").alias("sh"))
+    return _jaccard_verify(
+        candidates, shingle_sets(df, text_col, key_col, n=shingle_n), key_col, threshold
     )
+
+
+def _jaccard_verify(
+    candidates: DataFrame, sets_df: DataFrame, key_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate pairs whose exact
+    shingle-set Jaccard reaches the threshold."""
     a = sets_df.select(F.col(key_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sets_df.select(F.col(key_col).alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -257,7 +278,8 @@ def near_dup_pairs_minhash(
     portable: bool = False,
     prefilter_margin: float | None = 0.35,
 ) -> DataFrame:
-    """End-to-end MinHash near-dup pipeline sharing ONE shingle pass.
+    """End-to-end MinHash near-dup pipeline sharing ONE shingle pass:
+    shingle_sets → set_signatures → near_dup_pairs.
 
     `portable=True` swaps xxhash64 for the md5-derived portable hash
     so an ANSI-SQL oracle can replay the whole pipeline value-for-value
@@ -269,7 +291,33 @@ def near_dup_pairs_minhash(
     `shingle_sets`, whose groupBy(key) exchange is the reuse point —
     signatures re-aggregate on the SAME key (no new shuffle: the
     child's hash partitioning already satisfies it), and the verify
-    join reuses the exchange instead of re-scanning the text.
+    join reuses the exchange instead of re-scanning the text. A caller
+    that materializes the sets and signatures itself (jobs/curate.py)
+    calls near_dup_pairs directly.
+    """
+    sets_df = shingle_sets(df, text_col, key_col, n=shingle_n)
+    sigs = set_signatures(sets_df, key_col=key_col, num_hashes=num_hashes, portable=portable)
+    return near_dup_pairs(
+        sets_df, sigs, key_col=key_col, num_hashes=num_hashes, bands=bands,
+        threshold=threshold, max_bucket_size=max_bucket_size, portable=portable,
+        prefilter_margin=prefilter_margin,
+    )
+
+
+def near_dup_pairs(
+    sets_df: DataFrame,
+    sigs: DataFrame,
+    key_col: str = "doc_id",
+    num_hashes: int = 32,
+    bands: int = 8,
+    threshold: float = 0.8,
+    max_bucket_size: int | None = 1000,
+    portable: bool = False,
+    prefilter_margin: float | None = 0.35,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) near-dup pairs from precomputed shingle
+    sets and signatures: banded LSH candidates, the signature
+    prefilter, then exact Jaccard on the sets.
 
     `prefilter_margin` (VERDICT r1 item 8): before shipping full
     shingle-set arrays into the verify join, candidates are screened on
@@ -282,11 +330,6 @@ def near_dup_pairs_minhash(
     sqrt(t(1-t)/k)), so true positives are kept w.p. >~99.9%; None
     disables the screen for exact candidate semantics.
     """
-    sets_df = shingle_sets(df, text_col, key_col, n=shingle_n)
-    exploded = sets_df.select(key_col, F.explode("sh").alias("shingle"))
-    sigs = minhash_signatures(
-        exploded, key_col=key_col, num_hashes=num_hashes, portable=portable
-    )
     cands = lsh_candidate_pairs(
         sigs, key_col=key_col, bands=bands, max_bucket_size=max_bucket_size,
         portable=portable,
@@ -304,16 +347,7 @@ def near_dup_pairs_minhash(
             .where(agree >= min_matches)
             .select("id_a", "id_b")
         )
-    a = sets_df.select(F.col(key_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sets_df.select(F.col(key_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cands.join(a, "id_a").join(b, "id_b")
-        .withColumn("jaccard", F.when(union == 0, F.lit(0.0)).otherwise(inter / union))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(cands, sets_df, key_col, threshold)
 
 
 def doc_signatures(
@@ -330,15 +364,22 @@ def doc_signatures(
     doc (a few hundred bytes — ~1-3% of typical web-page text), which
     is what makes dedup-against-history tractable at 10^12 docs: new
     batches join against this table, never against historical text.
-    Unshingleable documents (empty/whitespace text) keep a NULL
-    signature — NOT a shared sentinel, which would make every such doc
-    a spurious est=1.0 near-dup of every other. Near-dup passes filter
-    NULL signatures out; the exact fp still covers those docs."""
+    Same composition as near_dup_pairs_minhash: shingle_sets →
+    set_signatures, then fingerprints_with_signatures."""
     sets_df = shingle_sets(df, text_col, key_col, n=shingle_n)
-    exploded = sets_df.select(key_col, F.explode("sh").alias("shingle"))
-    sigs = minhash_signatures(
-        exploded, key_col=key_col, num_hashes=num_hashes, portable=portable
-    )
+    sigs = set_signatures(sets_df, key_col=key_col, num_hashes=num_hashes, portable=portable)
+    return fingerprints_with_signatures(df, sigs, text_col=text_col, key_col=key_col)
+
+
+def fingerprints_with_signatures(
+    df: DataFrame, sigs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
+) -> DataFrame:
+    """(key, fp, signature): df's md5 fingerprints left-joined to
+    precomputed signatures. Unshingleable documents (empty/whitespace
+    text) have no signature row and keep a NULL signature — NOT a
+    shared sentinel, which would make every such doc a spurious
+    est=1.0 near-dup of every other. Near-dup passes filter NULL
+    signatures out; the exact fp still covers those docs."""
     return df.select(key_col, fingerprint(F.col(text_col)).alias("fp")).join(
         sigs, on=key_col, how="left"
     )

@@ -16,7 +16,9 @@ dataflow:
   commit(spark, df, table, op)  -> snapshot dict (atomic: data lands
                                    first, the manifest rename IS the
                                    commit — readers never see a
-                                   half-written batch)
+                                   half-written batch; an empty append
+                                   publishes nothing and returns the
+                                   head)
   read(spark, table, snapshot_id=None)
                                 -> DataFrame AT a snapshot (time
                                    travel; default = current)
@@ -57,6 +59,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from pathlib import Path
 
@@ -159,7 +162,9 @@ def commit(
     leaves an orphan data directory (invisible to every reader) and
     no new snapshot. Concurrent commits race on the manifest version;
     the loser gets CommitConflictError (see _publish), never a silent
-    clobber. The batch's row count is observed on the write itself."""
+    clobber. The batch's row count is observed on the write itself; an
+    append that wrote no row removes its batch directory and returns
+    the head snapshot unchanged (None for a fresh table)."""
     _check_local(table)
     _refuse_plain(table)
     # the log directory exists before any data lands, so a crash inside
@@ -173,6 +178,11 @@ def commit(
     n_rows = obs.get["rows"]
 
     parent = current_snapshot(table)
+    if n_rows == 0 and operation == "append":
+        # an empty append publishes nothing: no batch directory, no
+        # manifest, so no-op resumes leave the table as they found it
+        shutil.rmtree(Path(table) / batch, ignore_errors=True)
+        return parent
     if operation == "append" and parent is not None:
         files = list(parent["batches"]) + [batch]
         total = parent["total_rows"] + n_rows
@@ -282,7 +292,6 @@ def remove_orphans(table: str, min_age_sec: float = 86400.0) -> dict:
     older_than to 3 days. Keep the cutoff comfortably above the
     longest batch-write-to-publish gap. Returns {removed_batches,
     skipped_young}."""
-    import shutil
     import time as _time
 
     live = {b for s in snapshots(table) for b in s["batches"]}
@@ -309,8 +318,6 @@ def expire_snapshots(table: str, keep_last: int = 2) -> dict:
     """Iceberg's expire_snapshots: drop manifests older than the last
     `keep_last` and DELETE data directories no surviving snapshot
     references. Returns {removed_snapshots, removed_batches}."""
-    import shutil
-
     log = snapshots(table)
     if len(log) <= keep_last:
         return {"removed_snapshots": 0, "removed_batches": 0}

@@ -985,3 +985,80 @@ def test_curate_all_stages_compose(spark, tmp_path):
     # frame cannot agree with the written rows by accident
     assert all(written["reasons"][k] > 0 for k in REASONS), written["reasons"]
     assert r3["newly_curated"] > 0
+
+
+def test_noop_resumes_publish_no_snapshot(spark, tmp_path):
+    """A resume that finds nothing new commits nothing: extract leaves
+    one batch directory, one manifest, one side-table partition and one
+    done marker after two no-op resumes, and curate's curated and
+    quarantine logs do not grow on a no-op resume."""
+    from jobs.curate import run as run_curate
+
+    corpus = str(tmp_path / "noop.parquet")
+    out = Path(tmp_path / "noop_out")
+    write_documents(synthetic_documents(spark, 12, seed=42), corpus)
+    first = run_job(corpus, str(out), resume=False, spark=spark)
+    for _ in range(2):
+        again = run_job(corpus, str(out), resume=True, spark=spark)
+        assert again["newly_extracted"] == 0 and again["status_counts"] == {}
+        assert again["snapshot_id"] == first["snapshot_id"]
+        assert again["total_extracted"] == 12 and again["batch_id"] is None
+    extracted = out / "extracted"
+    assert len(list(extracted.glob("batch=*"))) == 1
+    assert len(sn.snapshots(str(extracted))) == 1
+    for name in ("toc", "chunks", "validation", "doc_metrics", "lineage"):
+        assert [p.name for p in (out / name).glob("batch=*")] == [f"batch={first['batch_id']}"]
+    assert len(list((out / "_markers").glob("*.done.json"))) == 1
+
+    cur_out = Path(tmp_path / "noop_cur")
+    c1 = run_curate(corpus, str(cur_out), spark=spark)
+    logs = {t: len(sn.snapshots(str(cur_out / t))) for t in ("curated", "quarantine")}
+    c2 = run_curate(corpus, str(cur_out), spark=spark, resume=True)
+    assert c2["new_docs"] == 0 and c2["newly_curated"] == 0
+    assert c2["snapshot_id"] == c1["snapshot_id"]
+    assert c2["total_curated"] == c1["total_curated"]
+    assert {t: len(sn.snapshots(str(cur_out / t))) for t in logs} == logs
+    for t in logs:
+        assert len(list((cur_out / t).glob("batch=*"))) == logs[t]
+
+
+def test_curate_total_from_manifest_matches_recount(spark, tmp_path):
+    """total_curated on resume is the head manifest's distinct-url total
+    plus the batch's distinct urls, with no rescan of the curated table.
+    Over three resumed batches, one of which holds a url twice, every
+    returned total and every recorded total equals a recount; the last
+    resume starts from a manifest without the field and recounts."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from jobs.curate import run as run_curate
+
+    docs = synthetic_documents(spark, 48, seed=5).where(F.length("text") > 600)
+    urls = sorted(r["url"] for r in docs.select("url").collect())
+    assert len(urls) >= 12
+    cuts = [urls[i::4] for i in range(4)]
+    out = Path(tmp_path / "tot")
+    curated = str(out / "curated")
+
+    def recount() -> int:
+        return sn.read(spark, curated).select("url").distinct().count()
+
+    for i, part in enumerate(cuts):
+        batch = docs.where(F.col("url").isin(part))
+        if i == 2:  # the same url twice in one batch
+            batch = batch.unionByName(batch.where(F.col("url") == part[0]))
+        if i == 3:  # a head written before the field existed
+            head = sorted((out / "curated" / "_snapshots").glob("v*.json"))[-1]
+            man = json.loads(head.read_text())
+            del man["summary"]["distinct_urls"]
+            head.write_text(json.dumps(man))
+        path = str(tmp_path / f"tot{i}.parquet")
+        batch.write.parquet(path)
+        before = recount() if i else 0
+        r = run_curate(path, str(out), spark=spark, resume=i > 0, near_dups=False)
+        assert r["already_curated"] == before
+        assert r["total_curated"] == recount()
+        assert sn.current_snapshot(curated)["summary"]["distinct_urls"] == recount()
+    cur = sn.read(spark, curated)
+    assert cur.count() > recount()  # the repeated url was curated twice

@@ -458,6 +458,77 @@ def test_curate_appends_batch_sized_plans(spark, tmp_path, monkeypatch):
     assert max(lines) < 200, lines
 
 
+def test_curate_signature_pass_on_every_slot(spark, tmp_path, monkeypatch):
+    """Curate builds each batch's shingle sets and MinHash signatures
+    once, on an explicit url repartition that adaptive execution leaves
+    alone: the shingling runs in spark.sql.shuffle.partitions tasks, and
+    the signature hashing runs map-side over the same number of set
+    partitions. A checkpoint forgets its partitioning under adaptive
+    execution, so the signature merge re-exchanges one partial row per
+    url; that merge alone may be coalesced. The near-dup candidate,
+    prefilter and verify plan starts at exactly those two checkpoints
+    and never shingles or hashes again."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    import jobs.curate as jc
+    from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    corpus = str(tmp_path / "docs.parquet")
+    write_documents(synthetic_documents(spark, 24, seed=11), corpus)
+
+    ckpts, pairs = {}, []
+    orig_ckpt, orig_pairs = DataFrame.localCheckpoint, jc.dd.near_dup_pairs
+
+    def spy_ckpt(self, *a, **k):
+        out = orig_ckpt(self, *a, **k)
+        ckpts.setdefault(tuple(self.columns), (self, out))
+        return out
+
+    def spy_pairs(*a, **k):
+        pairs.append(orig_pairs(*a, **k))
+        return pairs[-1]
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy_ckpt)
+    monkeypatch.setattr(jc.dd, "near_dup_pairs", spy_pairs)
+    jc.run(corpus, str(tmp_path / "out"), spark=spark, near_dups=True)
+
+    def ckpt_rdd(df):
+        return df._jdf.queryExecution().analyzed().rdd()
+
+    def final_plan(df) -> str:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        return plan.split("== Initial Plan ==")[0]
+
+    sets_src, sets = ckpts[("url", "sh")]
+    plan = final_plan(sets_src)
+    assert "hashpartitioning(url#" in plan and f", {n}), REPARTITION_BY_NUM" in plan, plan
+    assert "AQEShuffleRead" not in plan, plan
+    assert ckpt_rdd(sets).getNumPartitions() == n
+
+    sigs_src, sigs = ckpts[("url", "signature")]
+    plan = final_plan(sigs_src)
+    # everything below the one exchange runs over the n set partitions
+    assert plan.count("Exchange") == 1, plan
+    below = plan.split("Exchange", 1)[1]
+    assert "Generate explode(sh#" in below and "partial_min(xxhash64(shingle#" in below, plan
+
+    def leaf_rdds(df) -> set[int]:
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        found = set()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            assert leaf.getClass().getSimpleName() == "LogicalRDD", leaf.toString()
+            found.add(leaf.rdd().id())
+        return found
+
+    assert leaf_rdds(pairs[0]) == {ckpt_rdd(sets).id(), ckpt_rdd(sigs).id()}
+    optimized = pairs[0]._jdf.queryExecution().optimizedPlan().toString()
+    for marker in ("__ws", "collect_set", "explode(sh", "xxhash64(shingle"):
+        assert marker not in optimized, marker
+
+
 def test_session_page_size_bounds_broadcast_pins(spark):
     """Each string-keyed broadcast hash relation holds at least one memory
     page until the ContextCleaner drops the broadcast after a later GC.

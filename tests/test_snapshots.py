@@ -185,12 +185,15 @@ def test_remove_orphans_deletes_only_unreferenced(spark, tmp_path):
 
 
 def test_commit_counts_rows_by_observation(spark, tmp_path):
-    """batch_rows is observed on the commit's own write: exact for an
-    empty frame and for a multi-partition one."""
+    """batch_rows is observed on the commit's own write: exact for a
+    multi-partition frame, and an empty append publishes nothing — no
+    batch directory and no manifest, the head returned unchanged (None
+    on a fresh table, which stays fresh)."""
     docs = synthetic_documents(spark, 12, seed=42)
-    empty = sn.commit(spark, docs.limit(0), str(tmp_path / "empty"))
-    assert empty["batch_rows"] == empty["total_rows"] == 0
-    assert sn.read(spark, str(tmp_path / "empty")).count() == 0
+    fresh = str(tmp_path / "empty")
+    assert sn.commit(spark, docs.limit(0), fresh) is None
+    assert sn.snapshots(fresh) == [] and not list(Path(fresh).glob("batch=*"))
+    assert sn.read_or_none(spark, fresh) is None
 
     table = str(tmp_path / "multi")
     multi = docs.repartition(5)
@@ -201,6 +204,8 @@ def test_commit_counts_rows_by_observation(spark, tmp_path):
     s2 = sn.commit(spark, multi.limit(7), table)
     assert (s2["batch_rows"], s2["total_rows"]) == (7, 19)
     assert sn.read(spark, table).count() == 19
+    assert sn.commit(spark, multi.limit(0), table) == s2
+    assert len(sn.snapshots(table)) == 2 and len(list(Path(table).glob("batch=*"))) == 2
 
 
 def test_batches_are_hive_style_directories(spark, tmp_path):
