@@ -16,10 +16,9 @@ not data size. This job rewrites a table into ~target-sized files:
 A snapshot table (one with a `_snapshots/` log, as every job's output
 is) is compacted by ONE overwrite commit of the current snapshot — the
 shape of Iceberg's `rewrite_data_files`. Its summary carries no
-batch_id, so extract's heal pass skips it, and older snapshots keep
-their files for time travel until `expire_snapshots`. If the new
-snapshot's row count differs from its parent's, the table is rolled
-back to the parent and the job raises.
+batch_id, and older snapshots keep their files for time travel until
+`expire_snapshots`. If the new snapshot's row count differs from its
+parent's, the table is rolled back to the parent and the job raises.
 
 Any other directory (a streaming sink) is rewritten to
 <path>__compact_tmp, row-count checked (abort + keep original on

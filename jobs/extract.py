@@ -12,20 +12,24 @@ Pipeline (SURVEY §3 lifecycle → north_rule operational contract):
     → salted repartition xxhash64(url, salt)  (host/mega-doc skew)
     → mapInPandas per-document extraction     (zero further shuffles)
     → commit to <outdir>/extracted            (the checkpoint itself)
-    → flat side tables toc/ chunks/ validation/ doc_metrics/ lineage/
-      derived from THIS batch only, appended under a batch=<id>
-      partition (incremental: a resume run's side-table cost ∝ new
-      docs, never corpus size), closed by a done marker so a crash
-      mid-side-writes is HEALED by the next run (the batch's
-      partitions are deleted and re-derived from the committed
-      snapshot — idempotent)
+
+`extracted` is the only table the job writes. The flat tables are
+projections of it, read on demand (operators/extract.py):
+
+  ox.toc_table / chunks_table / validation_table / metrics_table
+      (sn.read(spark, "<outdir>/extracted"))          whole corpus
+  ox.lineage_metrics(sn.read_incremental(spark, "<outdir>/extracted", s))
+                                                       one run's partitions
 
 Checkpoint/resume semantics: the extracted table IS the checkpoint.
 It is a snapshot table (sinks/snapshots.py): each run commits one
 atomic batch of whole documents, and `--resume` anti-joins the CURRENT
 snapshot's url set so a restarted job only processes the remainder.
 On Iceberg this maps 1:1 to snapshot-based restart (the same
-anti-join against the last snapshot). Idempotent per url. A corrupt
+anti-join against the last snapshot). Idempotent per url. The commit
+is the whole recovery story: a run that dies before it leaves an
+orphan batch directory no reader sees (`sn.remove_orphans` deletes
+it), and one that dies after it has nothing left to do. A corrupt
 manifest, or an outdir whose extracted table is plain parquet with no
 snapshot log, aborts the resume instead of re-extracting everything.
 """
@@ -41,113 +45,13 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import Observation, functions as F  # noqa: E402
 
 from pdf_parser_spark.core.pipeline import STATUSES  # noqa: E402
 from pdf_parser_spark.operators import extract as ox  # noqa: E402
 from pdf_parser_spark.plans.session import get_spark  # noqa: E402
 from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 from pdf_parser_spark.sources.corpus import read_documents  # noqa: E402
-
-
-SIDE_TABLES = ("toc", "chunks", "validation", "doc_metrics", "lineage")
-
-
-def _write_side_tables(out: Path, new_batch, batch_id: str) -> tuple[int, dict[str, int]]:
-    """Derive the five side tables from one extracted batch and append,
-    each partitioned by a literal batch column. The partition makes a
-    batch's side rows individually addressable (<side>/batch=<id>/), so
-    a crash mid-way is healed by deleting those directories and
-    re-appending — idempotent, no dedup pass over corpus-sized tables.
-    Returns the batch row count and its per-status counts (zero counts
-    omitted), both observe()d on the toc write: they attest the rows
-    the WRITE itself consumed, not a separate job."""
-    from pyspark.sql import Observation
-
-    for name in SIDE_TABLES:
-        d = out / name
-        if d.exists() and any(d.glob("*.parquet")):
-            # root-level part files = the pre-round-4 unpartitioned
-            # layout; mixing it with batch=<id> dirs makes the table
-            # unreadable ('conflicting directory structures')
-            raise ValueError(
-                f"side table {d} has the legacy unpartitioned layout; "
-                "use a fresh outdir (or move the old files under a "
-                "batch=legacy/ subdirectory) before resuming"
-            )
-
-    tag = F.lit(batch_id).alias("batch")
-    obs = Observation()
-    observed = new_batch.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        *(F.count_if(F.col("status") == s).alias(s) for s in STATUSES),
-    )
-    for name, fn in (
-        ("toc", ox.toc_table),
-        ("chunks", ox.chunks_table),
-        ("validation", ox.validation_table),
-        ("doc_metrics", ox.metrics_table),
-        ("lineage", ox.lineage_metrics),
-    ):
-        src = observed if name == "toc" else new_batch
-        fn(src).select("*", tag).write.mode("append").partitionBy("batch").parquet(
-            str(out / name)
-        )
-    got = obs.get
-    return int(got["rows"]), {s: int(got[s]) for s in STATUSES if got[s]}
-
-
-def _heal_incomplete_batches(
-    spark, out: Path, min_age_sec: float
-) -> tuple[list[str], list[dict]]:
-    """Crash recovery for the extracted-commit → side-table gap: a
-    snapshot whose batch has no done marker died before its side
-    tables were fully appended. Delete that batch's side-table
-    partition dirs (idempotent) and re-derive them from the snapshot's
-    incremental scan — never from the corpus. Snapshots without a
-    batch_id (compaction, rollback) add no extract batch and are
-    skipped.
-
-    `min_age_sec` is the liveness grace (the remove_orphans hazard in
-    reverse): a manifest younger than it may belong to a job still
-    running on this outdir, and healing it would race that job's own
-    side writes. A heal entry that FAILS (its batch directory is gone)
-    is skipped and reported, never allowed to brick every future run.
-
-    Returns (healed_batch_ids, failures)."""
-    import shutil
-
-    table = out / "extracted"
-    cutoff = time.time() - min_age_sec
-    healed: list[str] = []
-    failures: list[dict] = []
-    for snap in sn.snapshots(str(table)):
-        batch_id, snap_id = snap["summary"].get("batch_id"), snap["snapshot_id"]
-        if not batch_id or (out / "_markers" / f"{batch_id}.done.json").exists():
-            continue  # not an extract batch, or already done
-        try:
-            if (table / "_snapshots" / f"v{snap_id}.json").stat().st_mtime > cutoff:
-                continue  # a commit from a possibly-live run
-        except OSError:
-            continue  # its manifest was expired meanwhile
-        try:
-            batch = sn.read_incremental(spark, str(table), snap_id)
-            for name in SIDE_TABLES:
-                shutil.rmtree(out / name / f"batch={batch_id}", ignore_errors=True)
-            if batch is not None:
-                _write_side_tables(out, batch, batch_id)
-            _finish_marker(out, batch_id, snap_id)
-            healed.append(batch_id)
-        except Exception as e:  # isolate: one stale batch must not
-            failures.append({"batch_id": batch_id, "error": str(e)[:300]})
-    return healed, failures
-
-
-def _finish_marker(out: Path, batch_id: str, snapshot_id: int) -> None:
-    markers = out / "_markers"
-    markers.mkdir(parents=True, exist_ok=True)
-    (markers / f"{batch_id}.done.json").write_text(json.dumps({"snapshot_id": snapshot_id}))
 
 
 def run(
@@ -157,21 +61,15 @@ def run(
     partitions: int | None = None,
     cpus: int | None = None,
     spark=None,
-    heal_min_age_sec: float = 3600.0,
     input_format: str = "parquet",
 ) -> dict:
     from pdf_parser_spark.fsutil import ensure_local_path
 
-    # side-table batch tracking + the snapshot manifest log use
-    # local-FS semantics; on a cluster, outdir is an Iceberg table
+    # the snapshot manifest log uses local-FS semantics; on a cluster,
+    # outdir is an Iceberg table
     ensure_local_path(outdir, "jobs/extract.py")
     spark = spark or get_spark(app_name="extract-job", cpus=cpus)
-    out = Path(outdir)
-    extracted_path = str(out / "extracted")
-
-    # heal any batch whose previous run died between the extracted
-    # commit and the side-table appends (see _heal_incomplete_batches)
-    healed, heal_failures = _heal_incomplete_batches(spark, out, heal_min_age_sec)
+    extracted_path = str(Path(outdir) / "extracted")
 
     if input_format == "warc":
         # Common Crawl's native container: archives → documents rows
@@ -204,6 +102,14 @@ def run(
         if input_format == "warc"
         else ox.extract_documents(todo)
     )
+    # the batch's row and status counts are observed on the commit's
+    # own write, not recounted by a later action
+    obs = Observation()
+    extracted = extracted.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        *(F.count_if(F.col("status") == s).alias(s) for s in STATUSES),
+    )
     batch_id = uuid.uuid4().hex
     t0 = time.perf_counter()
     snap = sn.commit(
@@ -211,47 +117,24 @@ def run(
         summary={"job": "extract", "resume": resume, "batch_id": batch_id},
     )
     wall = time.perf_counter() - t0
+    got = obs.get
+    n_new = int(got["rows"])
+    if snap is None or snap["summary"].get("batch_id") != batch_id:
+        batch_id = None  # an empty batch published no snapshot
 
-    # side tables derive from THIS batch only and APPEND — they are
-    # row-wise per-url projections, so append composes, and a resume
-    # run that adds 0.1% new docs touches 0.1% of the data instead of
-    # overwrite-rewriting corpus-sized tables (the r3 scale-killer).
-    # Reading the just-committed batch back keeps every stage
-    # restartable without re-running the extract UDF; the done marker
-    # closes the side writes, so a crash before it is healed
-    # (re-derived, not lost) by the next run. An empty batch published
-    # no snapshot (the commit returned the unchanged head), so it gets
-    # no side rows and no marker.
-    t_side0 = time.perf_counter()
-    n_new, status_counts = 0, {}
-    if snap is not None and snap["summary"].get("batch_id") == batch_id:
-        new_batch = sn.read_incremental(spark, extracted_path, snap["snapshot_id"])
-        n_new, status_counts = _write_side_tables(out, new_batch, batch_id)
-        _finish_marker(out, batch_id, snap["snapshot_id"])
-    else:
-        batch_id = None
-    side_sec = time.perf_counter() - t_side0
-
-    summary = {
+    return {
         "input_docs": n_input,
         "already_extracted": n_already,
         "newly_extracted": n_new,
         "total_extracted": snap["total_rows"] if snap else 0,
         "wall_sec_extract": round(wall, 2),
-        "wall_sec_side_tables": round(side_sec, 2),
+        # no side tables are written; the key stays for perfbench
+        "wall_sec_side_tables": 0.0,
         "docs_per_sec": round(n_new / wall, 2) if wall > 0 else None,
-        "status_counts": status_counts,
-        "side_table_rows_processed": n_new,
+        "status_counts": {s: int(got[s]) for s in STATUSES if got[s]},
         "batch_id": batch_id,
         "snapshot_id": snap["snapshot_id"] if snap else None,
     }
-    if healed:
-        summary["healed_batches"] = healed
-    if heal_failures:
-        # surfaced, not fatal: a stale batch (its directory deleted)
-        # needs operator attention but must not brick every future run
-        summary["heal_failures"] = heal_failures
-    return summary
 
 
 def main() -> None:
@@ -273,15 +156,10 @@ def main() -> None:
         help="warc: read Common Crawl-style .warc/.warc.gz archives "
         "(html recovered via the DOM stripper)",
     )
-    ap.add_argument(
-        "--heal-min-age", type=float, default=3600.0,
-        help="seconds a manifest with no done marker must be stale before "
-        "the heal pass claims it (guards against racing a live run)",
-    )
     args = ap.parse_args()
     summary = run(
         args.input, args.outdir, args.resume, args.partitions, args.cpus,
-        heal_min_age_sec=args.heal_min_age, input_format=args.input_format,
+        input_format=args.input_format,
     )
     print(json.dumps(summary))
 

@@ -5,7 +5,7 @@ entries), re-expressed over corpus tables instead of one PDF:
   python -m pdf_parser_spark extract   --input docs.parquet --outdir out/
   python -m pdf_parser_spark toc       --input docs.parquet --out toc/
   python -m pdf_parser_spark chunk     --input docs.parquet --out chunks/
-  python -m pdf_parser_spark validate  --toc out/toc --chunks out/chunks --out out/validation
+  python -m pdf_parser_spark validate  --toc toc/ --chunks chunks/ --out validation/
   python -m pdf_parser_spark metrics   --input docs.parquet --out metrics/
   python -m pdf_parser_spark report    --outdir out/ --out out/final_report.json
   python -m pdf_parser_spark toc-graph --input docs.parquet --out graph/
@@ -17,7 +17,9 @@ entries), re-expressed over corpus tables instead of one PDF:
 Every command is a thin shell over the operators; `extract` is the
 whole lifecycle in one pass (the reference's orchestrate.py), and
 `curate` is the training-data hygiene pass (quality filters, PII
-redaction, exact + near dedup) from jobs/curate.py.
+redaction, exact + near dedup) from jobs/curate.py. `extract` writes
+one table, `out/extracted`; `report` projects its validation and
+metrics columns and rolls them up.
 """
 
 from __future__ import annotations
@@ -90,13 +92,13 @@ def main(argv: list[str] | None = None) -> None:
         v.write.mode("overwrite").parquet(args.out)
         print(json.dumps({"command": "validate", "rows": spark.read.parquet(args.out).count()}))
     elif args.command == "report":
+        from .sinks import snapshots as sn
         from .sinks.reports import final_report, write_report_json
 
-        validation = spark.read.parquet(f"{args.outdir}/validation")
-        metrics = spark.read.parquet(f"{args.outdir}/doc_metrics")
+        extracted = sn.read(spark, f"{args.outdir}/extracted")
         report = final_report(
-            validation.where("toc_section_count is not null"),
-            metrics.where("total_sections is not null"),
+            ox.validation_table(extracted).where("toc_section_count is not null"),
+            ox.metrics_table(extracted).where("total_sections is not null"),
         )
         write_report_json(report, args.out)
         print(json.dumps({"command": "report", "out": args.out}))

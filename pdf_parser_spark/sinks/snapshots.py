@@ -72,8 +72,9 @@ class CommitConflictError(RuntimeError):
 
     Real Iceberg fails the losing compare-and-swap against the catalog;
     here the exclusive hard-link of the manifest is the CAS. Retrying
-    commit() re-reads the new current snapshot and chains onto it (the
-    data batch is already on disk and stays referenced)."""
+    commit() writes the frame again as a new batch and chains it onto
+    the new current snapshot; the losing batch directory is referenced
+    by no manifest, an orphan that `remove_orphans` deletes."""
 
 
 def _check_local(table: str) -> None:
@@ -195,8 +196,8 @@ def commit(
         "operation": operation,
         "batches": files,
         # the batch THIS commit added — Iceberg's incremental-scan
-        # handle: jobs derive per-batch side tables from it without
-        # re-reading the whole table (read_incremental)
+        # handle: one run's rows without re-reading the whole table
+        # (read_incremental)
         "new_batches": [batch],
         "batch_rows": n_rows,
         "total_rows": total,

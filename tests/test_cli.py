@@ -21,8 +21,13 @@ def test_cli_toc_chunk_validate_report(spark, tmp_path, capsys):
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["newly_extracted"] == 20
 
-    cli(["validate", "--toc", str(tmp_path / "out/toc"),
-         "--chunks", str(tmp_path / "out/chunks"), "--out", str(tmp_path / "v")])
+    cli(["toc", "--input", corpus, "--out", str(tmp_path / "toc")])
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows"] > 0
+    cli(["chunk", "--input", corpus, "--out", str(tmp_path / "chunks")])
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows"] > 0
+
+    cli(["validate", "--toc", str(tmp_path / "toc"),
+         "--chunks", str(tmp_path / "chunks"), "--out", str(tmp_path / "v")])
     assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows"] > 0
 
     cli(["report", "--outdir", str(tmp_path / "out"), "--out", str(tmp_path / "r.json")])

@@ -9,6 +9,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from jobs.extract import run as run_job
+from pdf_parser_spark.operators import extract as ox
 from pdf_parser_spark.sinks import snapshots as sn
 from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
 
@@ -27,7 +28,7 @@ def test_resume_skips_already_extracted(spark, tmp_path):
     assert first["newly_extracted"] == 24
     assert first["total_extracted"] == 24
     # reference-faithful per-doc failure accounting reaches the summary:
-    # the counts observed on the side-table write equal the statuses of
+    # the counts observed on the extracted commit equal the statuses of
     # the rows the extracted table holds, zero counts omitted
     assert sum(first["status_counts"].values()) == 24
     assert first["status_counts"] == _status_counts(spark, out)
@@ -39,12 +40,12 @@ def test_resume_skips_already_extracted(spark, tmp_path):
     assert second["total_extracted"] == 24
     assert second["status_counts"] == {}
 
-    # side tables exist and line up with the extracted batch
-    toc = spark.read.parquet(str(Path(out) / "toc"))
-    lineage = spark.read.parquet(str(Path(out) / "lineage"))
-    assert toc.count() > 0
-    rolled = lineage.agg({"docs": "sum"}).collect()[0][0]
+    # the flat tables are projections of extracted and line up with it
+    extracted = sn.read(spark, str(Path(out) / "extracted"))
+    assert ox.toc_table(extracted).count() > 0
+    rolled = ox.lineage_metrics(extracted).agg({"docs": "sum"}).collect()[0][0]
     assert rolled == 24
+    assert [p.name for p in Path(out).iterdir()] == ["extracted"]
 
 
 def test_resume_extracts_only_remainder(spark, tmp_path):
@@ -248,9 +249,9 @@ def test_compact_snapshot_table_is_one_overwrite_commit(spark, tmp_path, monkeyp
 
 
 def test_resume_side_tables_incremental(spark, tmp_path):
-    """Round-4 scale fix: a resume run derives side tables from the
-    NEW batch only (observe()-counted) and appends — totals unchanged,
-    but the side-table write cost is ∝ new docs, not corpus size."""
+    """A resume run commits the NEW batch only (observe()-counted); the
+    flat tables are projections of extracted, over the whole corpus or
+    over one run's incremental scan."""
     corpus_half = str(tmp_path / "ih.parquet")
     corpus_full = str(tmp_path / "if.parquet")
     out = str(tmp_path / "inc_out")
@@ -259,20 +260,28 @@ def test_resume_side_tables_incremental(spark, tmp_path):
     write_documents(full, corpus_full)
 
     first = run_job(corpus_half, out, resume=False, spark=spark)
-    assert first["side_table_rows_processed"] == 10
+    assert first["newly_extracted"] == 10
 
     second = run_job(corpus_full, out, resume=True, spark=spark)
-    # the observed side-table input is exactly the new batch
-    assert second["side_table_rows_processed"] == 10
+    # the observed commit input is exactly the new batch
+    assert second["newly_extracted"] == 10
     assert second["total_extracted"] == 20
+    table = str(Path(out) / "extracted")
+    batch = sn.read_incremental(spark, table, second["snapshot_id"])
+    assert ox.lineage_metrics(batch).agg({"docs": "sum"}).collect()[0][0] == 10
 
-    # appended side tables still cover the WHOLE corpus, disjointly
-    validation = spark.read.parquet(str(Path(out) / "validation"))
+    # the projections cover the WHOLE corpus, disjointly
+    extracted = sn.read(spark, table)
+    validation = ox.validation_table(extracted)
     assert validation.count() == 20
     assert validation.select("url").distinct().count() == 20
-    lineage = spark.read.parquet(str(Path(out) / "lineage"))
+    per_run = [
+        ox.lineage_metrics(sn.read_incremental(spark, table, s["snapshot_id"]))
+        for s in sn.snapshots(table)
+    ]
+    lineage = per_run[0].unionByName(per_run[1])
     assert lineage.agg({"docs": "sum"}).collect()[0][0] == 20
-    toc = spark.read.parquet(str(Path(out) / "toc"))
+    toc = ox.toc_table(extracted)
     assert toc.select("url").distinct().count() > 10  # both batches present
 
 
@@ -388,104 +397,6 @@ def test_curate_rejects_remote_outdir(spark):
         run_curate("/tmp/in.parquet", "s3://bucket/out", spark=spark)
 
 
-def test_side_table_crash_heal(spark, tmp_path):
-    """r4 review finding: a crash between the extracted commit and the
-    side-table appends must not lose the batch's side rows forever.
-    Simulate the crash by deleting two side-table batch partitions and
-    the batch's done marker; the next run heals them."""
-    corpus = str(tmp_path / "heal.parquet")
-    out = Path(tmp_path / "heal_out")
-    write_documents(synthetic_documents(spark, 16, seed=42), corpus)
-
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    bid = first["batch_id"]
-    # simulate dying mid-side-writes: some batch partitions landed,
-    # some didn't, no done marker
-    import shutil
-
-    shutil.rmtree(out / "chunks" / f"batch={bid}")
-    shutil.rmtree(out / "lineage" / f"batch={bid}")
-    (out / "_markers" / f"{bid}.done.json").unlink()
-
-    second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
-    assert second["healed_batches"] == [bid]
-    assert second["newly_extracted"] == 0
-    # every side table holds the batch exactly once (heal deleted the
-    # survivors' partitions before re-appending — no duplicates)
-    for name in ("toc", "chunks", "validation", "doc_metrics", "lineage"):
-        df = spark.read.parquet(str(out / name))
-        assert df.where(df.batch == bid).count() > 0, name
-    val = spark.read.parquet(str(out / "validation"))
-    assert val.count() == 16
-    assert val.select("url").distinct().count() == 16
-    lineage = spark.read.parquet(str(out / "lineage"))
-    assert lineage.agg({"docs": "sum"}).collect()[0][0] == 16
-
-
-def test_side_table_heal_snapshot_mode_without_marker(spark, tmp_path):
-    """A committed snapshot with NO marker at all (died right after the
-    commit) is healed from the snapshot log."""
-    corpus = str(tmp_path / "healsn.parquet")
-    out = Path(tmp_path / "healsn_out")
-    write_documents(synthetic_documents(spark, 12, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    bid = first["batch_id"]
-    # simulate: crash right after sn.commit — no side rows, no marker
-    import shutil
-
-    for name in ("toc", "chunks", "validation", "doc_metrics", "lineage"):
-        shutil.rmtree(out / name)
-    shutil.rmtree(out / "_markers")
-
-    second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
-    assert second["healed_batches"] == [bid]
-    val = spark.read.parquet(str(out / "validation"))
-    assert val.count() == 12 and val.select("url").distinct().count() == 12
-
-
-def test_heal_grace_period_skips_fresh_markers(spark, tmp_path):
-    """A fresh snapshot with no done marker may belong to a LIVE
-    concurrent run on the same outdir — the default grace period must
-    not heal it (the remove_orphans hazard in reverse)."""
-    corpus = str(tmp_path / "grace.parquet")
-    out = Path(tmp_path / "grace_out")
-    write_documents(synthetic_documents(spark, 10, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    bid = first["batch_id"]
-    done = out / "_markers" / f"{bid}.done.json"
-    done.unlink()
-    # default heal_min_age_sec (1h): fresh snapshot untouched
-    second = run_job(corpus, str(out), resume=True, spark=spark)
-    assert "healed_batches" not in second
-    assert not done.exists()
-
-
-def test_heal_failure_is_isolated_not_fatal(spark, tmp_path):
-    """A snapshot with no done marker whose batch directory is gone
-    (here: compacted into a newer snapshot, then deleted) is surfaced
-    in the summary, not allowed to brick the job."""
-    import shutil
-
-    from jobs.compact import run as run_compact
-
-    corpus = str(tmp_path / "stale.parquet")
-    out = Path(tmp_path / "stale_out")
-    write_documents(synthetic_documents(spark, 10, seed=42), corpus)
-    first = run_job(corpus, str(out), resume=False, spark=spark)
-    bid = first["batch_id"]
-    table = str(out / "extracted")
-    run_compact(table, spark=spark)
-    shutil.rmtree(Path(table) / sn.snapshots(table)[0]["new_batches"][0])
-    (out / "_markers" / f"{bid}.done.json").unlink()
-
-    second = run_job(corpus, str(out), resume=True, spark=spark, heal_min_age_sec=0)
-    assert second["newly_extracted"] == 0  # the job itself still ran
-    assert second["already_extracted"] == 10
-    assert second["heal_failures"][0]["batch_id"] == bid
-    # no done marker: the batch stays listed for the operator
-    assert not (out / "_markers" / f"{bid}.done.json").exists()
-
-
 def test_orphan_batch_invisible_to_resume(spark, tmp_path):
     """A batch directory written without a manifest (a run that died
     inside its commit) is invisible to the resumed run's snapshot read:
@@ -505,11 +416,11 @@ def test_orphan_batch_invisible_to_resume(spark, tmp_path):
     batch = sn.current_snapshot(str(table))["new_batches"][0]
     shutil.copytree(table / batch, table / "batch=orphan")
 
-    second = run_job(corpus_full, str(out), resume=True, spark=spark, heal_min_age_sec=0)
+    second = run_job(corpus_full, str(out), resume=True, spark=spark)
     assert second["already_extracted"] == 8
     assert second["newly_extracted"] == 8
     assert second["total_extracted"] == 16
-    assert "healed_batches" not in second
+    assert [p.name for p in out.iterdir()] == ["extracted"]
     cur = sn.read(spark, str(table))
     assert cur.count() == cur.select("url").distinct().count() == 16
     # a raw directory read is not a snapshot read: it sees the orphan
@@ -517,6 +428,45 @@ def test_orphan_batch_invisible_to_resume(spark, tmp_path):
     assert spark.read.parquet(str(table)).count() == 24
     assert sn.remove_orphans(str(table), min_age_sec=0)["removed_batches"] == 1
     assert spark.read.parquet(str(table)).count() == 16
+
+
+def test_resume_after_compaction_and_expiry(spark, tmp_path):
+    """Compacting extracted and expiring every older snapshot between
+    two runs leaves a table the resume reads like any other: it
+    extracts exactly the remainder, every url appears once, and the
+    report over the outdir succeeds."""
+    import json
+
+    from jobs.compact import run as run_compact
+    from pdf_parser_spark.__main__ import main as cli
+
+    corpus_half = str(tmp_path / "ch.parquet")
+    corpus_full = str(tmp_path / "cf.parquet")
+    out = tmp_path / "compact_out"
+    full = synthetic_documents(spark, 20, seed=42)
+    write_documents(full.limit(8), corpus_half)
+    write_documents(full, corpus_full)
+
+    run_job(corpus_half, str(out), resume=False, spark=spark)
+    table = str(out / "extracted")
+    run_compact(table, spark=spark)
+    assert sn.expire_snapshots(table, keep_last=1)["removed_snapshots"] == 1
+    assert sn.snapshots(table)[0]["operation"] == "overwrite"
+
+    second = run_job(corpus_full, str(out), resume=True, spark=spark)
+    assert second["already_extracted"] == 8
+    assert second["newly_extracted"] == 12
+    assert second["total_extracted"] == 20
+    assert sum(second["status_counts"].values()) == 12
+    cur = sn.read(spark, table)
+    assert cur.count() == cur.select("url").distinct().count() == 20
+    assert [p.name for p in out.iterdir()] == ["extracted"]
+
+    cli(["report", "--outdir", str(out), "--out", str(tmp_path / "r.json")])
+    report = json.loads((tmp_path / "r.json").read_text())
+    assert report["summary"]["docs"] == ox.validation_table(cur).where(
+        "toc_section_count is not null"
+    ).count() > 0
 
 
 def test_curate_crash_between_quarantine_and_curated_converges(spark, tmp_path):
@@ -989,8 +939,8 @@ def test_curate_all_stages_compose(spark, tmp_path):
 
 def test_noop_resumes_publish_no_snapshot(spark, tmp_path):
     """A resume that finds nothing new commits nothing: extract leaves
-    one batch directory, one manifest, one side-table partition and one
-    done marker after two no-op resumes, and curate's curated and
+    one batch directory and one manifest, and nothing beside the
+    extracted table, after two no-op resumes, and curate's curated and
     quarantine logs do not grow on a no-op resume."""
     from jobs.curate import run as run_curate
 
@@ -1006,9 +956,7 @@ def test_noop_resumes_publish_no_snapshot(spark, tmp_path):
     extracted = out / "extracted"
     assert len(list(extracted.glob("batch=*"))) == 1
     assert len(sn.snapshots(str(extracted))) == 1
-    for name in ("toc", "chunks", "validation", "doc_metrics", "lineage"):
-        assert [p.name for p in (out / name).glob("batch=*")] == [f"batch={first['batch_id']}"]
-    assert len(list((out / "_markers").glob("*.done.json"))) == 1
+    assert [p.name for p in out.iterdir()] == ["extracted"]
 
     cur_out = Path(tmp_path / "noop_cur")
     c1 = run_curate(corpus, str(cur_out), spark=spark)

@@ -6,14 +6,22 @@ source file is absent from the tree, SURVEY §2.8 A3). 3.12 bytecode
 cannot execute in this 3.11 interpreter, so the reference side runs in
 a pinned 3.12 subprocess with a models stub; both sides consume the
 same loaded records produced by our pipeline.
+
+The live comparison needs that .pyc and skips without it. Its twin,
+test_compute_metrics_frozen_cases, replays the same seed-7 cases from
+tests/golden/metrics_cases.jsonl (compute_metrics inputs and outputs
+frozen from this engine), so compute_metrics stays pinned where the
+reference is absent.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -24,6 +32,7 @@ from pdf_parser_spark.sources.synth import generate_corpus
 
 PY312 = "/root/.pyenv/versions/3.12.1/bin/python3.12"
 PYC = "/root/reference/src/reports/__pycache__/metrics.cpython-312.pyc"
+CASES = Path(__file__).parent / "golden" / "metrics_cases.jsonl"
 
 _RUNNER = r"""
 import sys, types, json, marshal
@@ -51,8 +60,16 @@ json.dump(results, open(sys.argv[3], "w"))
 """
 
 
-@pytest.mark.skipif(not shutil.which(PY312) and not __import__("os").path.exists(PY312),
+def test_compute_metrics_frozen_cases():
+    cases = [json.loads(line) for line in CASES.read_text().splitlines()]
+    assert len(cases) > 10
+    for case in cases:
+        assert md.compute_metrics(case["toc"], case["chunks"]) == case["metrics"], case["url"]
+
+
+@pytest.mark.skipif(not shutil.which(PY312) and not os.path.exists(PY312),
                     reason="python3.12 unavailable")
+@pytest.mark.skipif(not os.path.exists(PYC), reason="reference metrics .pyc absent")
 def test_compute_metrics_parity(tmp_path):
     corpus = generate_corpus(40, seed=7)
     cases = []

@@ -111,25 +111,23 @@ def test_aggs_have_partial_phase(spark, name):
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     """Both sides bucketed on the join key → SortMergeJoin with zero
     Exchanges (the Iceberg bucket(N, key) pattern)."""
-    from pdf_parser_spark.plans import bucketing as bk
-
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    bk.write_bucketed(orders, "b_orders", "o_orderkey", buckets=4, path=str(tmp_path / "bo"))
-    bk.write_bucketed(
-        lineitem, "b_lineitem", "l_orderkey", buckets=4, path=str(tmp_path / "bl")
-    )
+    for df, table, key in ((orders, "b_orders", "o_orderkey"), (lineitem, "b_lineitem", "l_orderkey")):
+        df.write.bucketBy(4, key).sortBy(key).format("parquet").mode("overwrite").option(
+            "path", str(tmp_path / table)
+        ).saveAsTable(table)
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = (
-            bk.bucketed(spark, "b_lineitem")
-            .join(bk.bucketed(spark, "b_orders"),
+            spark.table("b_lineitem")
+            .join(spark.table("b_orders"),
                   on=spark.table("b_lineitem").l_orderkey == spark.table("b_orders").o_orderkey)
             .select("l_orderkey", "o_totalprice")
         )
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
-        assert bk.join_is_shuffle_free(joined), plan
+        assert "Exchange" not in plan, plan
         assert joined.count() == lineitem.count()
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
