@@ -70,7 +70,7 @@ def shingles(df: DataFrame, text_col: str = "text", key_col: str = "doc_id", n: 
     transform() lambda. Inlining `split(text)` inside the lambda body
     makes Spark re-split the ENTIRE text once per word — O(W²) chars
     per document, invisible on 300-word pages but a 60× slowdown on
-    15k-word mega-docs (measured; found by the 10× bigscale run).
+    15k-word mega-docs (measured at 50k docs, every 40th a mega-doc).
     CollapseProject keeps the hoist because the non-cheap split is
     referenced more than once."""
     base = df.select(F.col(key_col), word_array(F.col(text_col)).alias("__ws"))
@@ -724,8 +724,8 @@ def winnowed_fingerprints(
     the boundary.
 
     Cost budget: winnowing hashes EVERY character position, so it
-    dominates any funnel that includes it (~91% of the 10x bigscale
-    job: 46.8M fingerprints in 1,007 s at 50k docs). `max_chars=N`
+    dominates any funnel that includes it (~91% of a measured 50k-doc
+    operator run: 46.8M fingerprints in 1,007 s). `max_chars=N`
     is the budgeted opt-in for curation funnels: fingerprint only the
     first N chars per document — cost becomes O(min(len, N)) per doc,
     and within that prefix every selection guarantee is unchanged
@@ -797,7 +797,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list —
     alternating large-star / small-star (Kiveris et al., "Connected
@@ -864,10 +863,8 @@ def connected_components(
 
     e = e.localCheckpoint(eager=True)
     prev = _sig(e)
-    rounds = 0
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        rounds += 1
         cur = _sig(e)
         if cur == prev:
             break
@@ -877,11 +874,6 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds "
             f"(pairs={prev[0]}) — raise max_iter or check the pair generator"
         )
-    if stats is not None:
-        # observability for scale runs: round count is the O(log n)
-        # claim made measurable; final edge count = non-root node count
-        stats["rounds"] = rounds
-        stats["final_edges"] = prev[0]
     # converged state is a star forest (member -> component min); the
     # groupBy-min is an idempotent safety net, not a semantic step
     return e.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("cluster"))

@@ -107,8 +107,8 @@ def line_dup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     # HOIST the line array and its sorted twin into projected columns:
     # referencing `array_sort(split(text))` INSIDE the aggregate lambda
     # below would re-split-and-sort the whole document once per line —
-    # O(L²·log L) per doc (same bug class as dedup.shingles, found by
-    # the 10× bigscale run). CollapseProject keeps the hoist because
+    # O(L²·log L) per doc (same bug class as dedup.shingles, measured
+    # on 50k docs with mega-docs). CollapseProject keeps the hoist because
     # the non-cheap expressions are referenced more than once.
     base = df.withColumn(
         "__ldl", F.filter(F.split(c, r"\n"), lambda x: F.trim(x) != "")

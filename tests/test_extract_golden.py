@@ -9,6 +9,11 @@ validation, metrics, n_pages, toc_start and toc_end. An error row's
 traceback is reduced to its last "Type: message" line, because the
 file paths and line numbers in it move with any edit.
 
+The seed42 and seed7 corpora begin with generate_corpus(60, seed=s),
+the corpora of tests/test_golden_pipeline.py's live comparison against
+the reference, so these digests are that test's fixture twin where the
+reference checkout is absent.
+
 Any rewrite of the core must leave every digest unchanged. Regenerate
 the file (`python tests/test_extract_golden.py`) only for an intended
 output change, and say so in the change's notes.
@@ -20,6 +25,8 @@ import hashlib
 import json
 import sys
 from pathlib import Path
+
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -64,6 +71,11 @@ def test_extract_document_matches_golden_digests():
     assert len(got) == len(want) == 640
     diff = [(g["corpus"], g["url"]) for g, w in zip(got, want) if g != w]
     assert not diff, f"{len(diff)} docs changed, first: {diff[:5]}"
+
+
+@pytest.mark.parametrize("seed", [42, 7])
+def test_golden_pipeline_corpus_is_digested_prefix(seed):
+    assert generate_corpus(60, seed=seed) == generate_corpus(120, seed=seed)[:60]
 
 
 if __name__ == "__main__":

@@ -17,8 +17,10 @@ test_metrics_subprocess.
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
+from conftest import REFERENCE_ROOT
 
 from pdf_parser_spark.core.pipeline import extract_document
 from pdf_parser_spark.sources.synth import generate_corpus
@@ -115,6 +117,10 @@ def corpus():
     return generate_corpus(N_DOCS, seed=SEED)
 
 
+# Without the reference checkout, tests/test_extract_golden.py pins the
+# digests of these same documents: generate_corpus(120, seed) for both
+# seeds begins with this test's corpus.
+@pytest.mark.skipif(not Path(REFERENCE_ROOT).exists(), reason="reference checkout unavailable")
 @pytest.mark.parametrize("seed", [SEED, 7])
 def test_golden_byte_identity(ref, tmp_path, seed):
     """Per url: toc rows, chunk exports (content bytes!), validation.

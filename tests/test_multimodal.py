@@ -137,3 +137,53 @@ def test_image_embeddings_cross_container_invariance(spark):
     assert out["png_a"]["embedding"] != out["png_b"]["embedding"]
     assert out["junk"]["status"] in ("decode_error", "unsupported_codec")
     assert out["junk"]["embedding"] is None
+
+
+def test_semantic_dedup_planted_cross_container_recall(spark):
+    """Decode → embed → SemDeDup end to end: random grayscale images,
+    half PNG and half FIMG, plus planted twins that carry the SAME
+    pixels in the OTHER container. The quantizer is trained with
+    hash-sampled k-means and handed to semantic_dedup as a centroid
+    TABLE. Only a real decode step makes a twin's embedding equal its
+    base's, so every twin must be a loser paired with its base, and
+    nothing else may be."""
+    import random
+    import struct
+
+    import pandas as pd
+
+    from pdf_parser_spark.core.minipng import encode_png_gray
+    from pdf_parser_spark.operators import dedup as dd
+    from pdf_parser_spark.operators import similarity as sim
+
+    n_img, n_plant, w, h = 400, 20, 32, 24
+
+    def gen(batches):
+        for pdf in batches:
+            rows = []
+            for i in pdf["id"]:
+                i = int(i)
+                base = i if i < n_img else i - n_img
+                px = random.Random(base * 9176 + 3).randbytes(w * h)
+                if (base % 2 == 0) == (i < n_img):
+                    data, mime = encode_png_gray(w, h, px), "image/png"
+                else:
+                    data, mime = b"FIMG" + struct.pack(">II", w, h) + px, "image/fake"
+                rows.append({"url": str(i), "kind": "image", "media": data, "mime": mime})
+            yield pd.DataFrame(rows, columns=["url", "kind", "media", "mime"])
+
+    media = spark.range(n_img + n_plant).repartition(4).mapInPandas(gen, mm.MEDIA_SCHEMA)
+    emb = (
+        mm.image_embeddings(media)
+        .where(F.col("status") == "ok")
+        .select(F.col("url").cast("long").alias("vec_id"), "embedding")
+        .cache()
+    )
+    assert emb.count() == n_img + n_plant
+    cents = sim.kmeans_centroids(emb, k=16, iters=2, key_col="vec_id", sample_fraction=0.25)
+    losers = dd.semantic_dedup(
+        emb, sim.centroids_table(spark, cents), threshold=0.999, key_col="vec_id"
+    )
+    got = {(r["vec_id"], r["dup_of"]) for r in losers.collect()}
+    emb.unpersist()
+    assert got == {(n_img + i, i) for i in range(n_plant)}

@@ -219,6 +219,43 @@ def test_minhash_composite_equals_naive_composition(spark):
     assert composite == naive and len(composite) > 0
 
 
+def test_minhash_planted_twin_recall(spark):
+    """Planted-pair recall of near_dup_pairs_minhash on generator docs,
+    mega-docs included. Twins of docs with real text are planted: half
+    exact copies (Jaccard 1.0), half with one appended word (Jaccard
+    just under 1.0 on these multi-page docs). At 32 hashes and 8 bands
+    the miss probability at J >= 0.99 is below 1e-6 per pair, so every
+    planted pair must come back as (base, base + '#twin'). Designed-empty
+    docs have no shingles, so a twin of one is undetectable by design
+    and is not planted."""
+    from pdf_parser_spark.sources.corpus import synthetic_documents_distributed
+
+    docs = synthetic_documents_distributed(spark, 400, seed=42, partitions=4).select("url", "text")
+    src = docs.where(F.length("text") >= 200).orderBy("url").limit(40)
+    twins = src.select(
+        F.concat("url", F.lit("#twin")).alias("url"),
+        F.when(F.crc32("url") % 2 == 0, F.col("text"))
+        .otherwise(F.concat("text", F.lit(" plantedtwin")))
+        .alias("text"),
+    )
+    pairs = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in dd.near_dup_pairs_minhash(
+            docs.unionByName(twins), key_col="url", threshold=0.7
+        ).collect()
+    }
+    planted = {
+        r["url"]: r["exact"]
+        for r in src.select("url", (F.crc32("url") % 2 == 0).alias("exact")).collect()
+    }
+    assert len(planted) == 40 and 0 < sum(planted.values()) < 40
+    missed = [u for u in planted if (u, u + "#twin") not in pairs]
+    assert not missed, f"planted recall {40 - len(missed)}/40, first missed {missed[:3]}"
+    for u, exact in planted.items():
+        j = pairs[(u, u + "#twin")]
+        assert (j == 1.0) if exact else (0.99 <= j < 1.0), (u, j)
+
+
 def test_winnowing_shared_substring_guarantee(spark):
     """Winnowing invariant: texts sharing a substring of length
     >= k + window - 1 share at least one fingerprint."""
