@@ -190,7 +190,7 @@ def run(
     if input_format == "warc":
         # Common Crawl archives: recover text via the DOM stripper so
         # the quality/PII/dedup funnel operates on main content — one
-        # extra mapInPandas pass, still zero shuffles before the funnel
+        # extra mapInArrow pass, still zero shuffles before the funnel
         from pdf_parser_spark.operators.html_extract import html_main_text
         from pdf_parser_spark.sources.warc import warc_to_documents
 

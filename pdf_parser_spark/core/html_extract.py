@@ -5,8 +5,12 @@ text-density ≈ the letters-vs-digits test utils.py:239-241,
 link-density ≈ the brand/footer filters chunk.py:235-238, tag-depth ≈
 heading level toc.py:193) to HTML boilerplate stripping:
 
-  1. segment the document into BLOCKS at block-level tag boundaries
-     (stdlib html.parser — no external dependency);
+  1. segment the document into BLOCKS at block-level tag boundaries:
+     one compiled regex tokenizes pages inside its conservative grammar
+     (plain tags, text, script/style bodies) and stdlib html.parser
+     takes every other page whole; both feed one block builder, and a
+     differential test holds them to equal blocks (no external
+     dependency);
   2. score each block: n_chars, link_chars (chars inside <a>), tag
      depth, ancestor-boilerplate flag (nav/header/footer/aside/script/
      style/form/head subtrees);
@@ -26,7 +30,8 @@ from __future__ import annotations
 
 import codecs
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from html import unescape
 from html.parser import HTMLParser
 
 BLOCK_TAGS = frozenset(
@@ -57,83 +62,75 @@ class Block:
         return (self.n_link_chars / self.n_chars) if self.n_chars else 0.0
 
 
-@dataclass
-class _State:
-    blocks: list[Block] = field(default_factory=list)
-    current: Block | None = None
+class _BlockBuilder:
+    """The block segmenter: start-tag, end-tag and text events in
+    document order become blocks. Text lands in the innermost open
+    block; entering a block-level tag closes the previous block. Both
+    tokenizers drive this one state machine, so the block semantics
+    are written once. Tag names arrive lowercased."""
 
-
-class _BlockParser(HTMLParser):
-    """Streaming block segmenter: text lands in the innermost open
-    block; entering a block-level tag closes the previous block."""
+    __slots__ = ("stack", "boiler_depth", "link_depth", "blocks", "current")
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
         self.stack: list[str] = []
         self.boiler_depth = 0
         self.link_depth = 0
-        self.state = _State()
+        self.blocks: list[Block] = []
+        self.current: Block | None = None
 
-    # -- block lifecycle -------------------------------------------------
     def _open_block(self) -> None:
-        s = self.state
-        s.current = Block(
-            block_no=len(s.blocks),
+        self.current = Block(
+            block_no=len(self.blocks),
             tag_path="/".join(self.stack),
             depth=len(self.stack),
             under_boilerplate=self.boiler_depth > 0,
             open_depth=len(self.stack),
         )
-        s.blocks.append(s.current)
+        self.blocks.append(self.current)
 
-    def _close_block(self) -> None:
-        self.state.current = None
-
-    # -- parser callbacks ------------------------------------------------
-    def handle_starttag(self, tag: str, attrs) -> None:
-        tag = tag.lower()
+    def start(self, tag: str) -> None:
         if tag in VOID_TAGS:
-            if tag == "br" and self.state.current is not None:
-                self.state.current.text += "\n"
+            if tag == "br" and self.current is not None:
+                self.current.text += "\n"
             return
         self.stack.append(tag)
         if tag in BOILERPLATE_TAGS:
             self.boiler_depth += 1
-            self._close_block()  # boilerplate text never merges into a prior block
+            self.current = None  # boilerplate text never merges into a prior block
         if tag == "a":
             self.link_depth += 1
         if tag in BLOCK_TAGS:
             self._open_block()
 
-    def handle_endtag(self, tag: str) -> None:
-        tag = tag.lower()
+    def end(self, tag: str) -> None:
         if tag in VOID_TAGS:
             return
         # pop to the matching open tag (tolerates misnesting)
-        if tag in self.stack:
-            while self.stack:
-                t = self.stack.pop()
+        stack = self.stack
+        if tag in stack:
+            while stack:
+                t = stack.pop()
                 if t in BOILERPLATE_TAGS:
                     self.boiler_depth -= 1
                 if t == "a":
                     self.link_depth -= 1
                 if t in BLOCK_TAGS:
-                    self._close_block()
-                cur = self.state.current
-                if cur is not None and len(self.stack) < cur.open_depth:
-                    self._close_block()  # anonymous block's subtree ended
+                    self.current = None
+                cur = self.current
+                if cur is not None and len(stack) < cur.open_depth:
+                    self.current = None  # anonymous block's subtree ended
                 if t == tag:
                     break
 
-    def handle_data(self, data: str) -> None:
+    def data(self, data: str) -> None:
         if not data:
             return
-        cur = self.state.current
+        cur = self.current
         if cur is None:
             # text outside any block tag (e.g. bare <body> text): open
             # an anonymous block so no content is silently dropped
             self._open_block()
-            cur = self.state.current
+            cur = self.current
         cur.text += data
         n = len(data)
         cur.n_chars += n
@@ -141,18 +138,105 @@ class _BlockParser(HTMLParser):
             cur.n_link_chars += n
 
 
-def segment_blocks(html: str | bytes | None) -> list[Block]:
-    """Parse HTML into scored blocks; tolerant of truncated markup."""
-    if html is None:
-        return []
-    html = decode_html(html)
+class _BlockParser(HTMLParser):
+    """The general tokenizer: stdlib HTMLParser, which lowercases tag
+    names itself, with callbacks that forward to a _BlockBuilder. It
+    runs for pages the fast tokenizer's grammar does not cover
+    (comments, doctypes, stray '<', truncated tags, unclosed scripts,
+    ...)."""
+
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self.builder = _BlockBuilder()
+
+    def handle_starttag(self, tag: str, attrs) -> None:
+        self.builder.start(tag)
+
+    def handle_endtag(self, tag: str) -> None:
+        self.builder.end(tag)
+
+    def handle_data(self, data: str) -> None:
+        self.builder.data(data)
+
+
+def _parser_blocks(html: str) -> _BlockBuilder:
+    """Segment with the stdlib tokenizer; tolerant of any input."""
     parser = _BlockParser()
     try:
         parser.feed(html)
         parser.close()
     except Exception:
         pass  # keep whatever blocks were segmented before the error
-    return [b for b in parser.state.blocks if b.n_chars > 0]
+    return parser.builder
+
+
+# The fast tokenizer: one token per match, anchored at the scan
+# position, in a grammar on which HTMLParser (CPython 3.11) emits the
+# same events — a text run; a start tag whose name, attribute names
+# and unquoted values use narrow ASCII classes, separated by ASCII
+# whitespace only (HTMLParser reads "\x0b", "\xa0", ... as part of a
+# tag name); an end tag. tests/test_html_tokenizers.py holds the two
+# tokenizers to equal blocks.
+_WS = r"[ \t\n\r\f]"
+_TOKEN_RX = re.compile(
+    rf"""
+    ([^<]+)                                         # 1 text run
+  | <([a-zA-Z][-a-zA-Z0-9:_.]*)                     # 2 start tag name
+    (?:{_WS}+[a-zA-Z_:][-a-zA-Z0-9:_.]*
+       (?:{_WS}*={_WS}*(?:"[^"]*"|'[^']*'|[-a-zA-Z0-9:_./;,?#%+@!~*()]+))?
+    )*{_WS}*(/?)>                                   # 3 "/" of <tag/>
+  | </([a-zA-Z][-a-zA-Z0-9:_.]*){_WS}*>             # 4 end tag name
+    """,
+    re.X,
+)
+# HTMLParser's own end-of-raw-text pattern for <script>/<style> bodies
+_RAW_CLOSE = {t: re.compile(r"</\s*%s\s*>" % t, re.I) for t in HTMLParser.CDATA_CONTENT_ELEMENTS}
+
+
+def _fast_blocks(html: str) -> _BlockBuilder | None:
+    """Segment with the compiled tokenizer, or None when some position
+    of the page lies outside its grammar (the caller then falls back
+    to _parser_blocks on the whole page)."""
+    b = _BlockBuilder()
+    start, end, data = b.start, b.end, b.data
+    match = _TOKEN_RX.match
+    pos, n = 0, len(html)
+    while pos < n:
+        m = match(html, pos)
+        if m is None:
+            return None
+        pos = m.end()
+        kind = m.lastindex
+        if kind == 1:
+            data(unescape(m.group(1)))
+        elif kind == 4:
+            end(m.group(4).lower())
+        else:
+            tag = m.group(2).lower()
+            start(tag)
+            if m.group(3):
+                end(tag)
+            elif tag in _RAW_CLOSE:
+                close = _RAW_CLOSE[tag].search(html, pos)
+                # an unclosed body is dropped by HTMLParser; a non-ASCII
+                # match ("</ſcript>" under re.I) is not a close to it
+                if close is None or not close.group().isascii():
+                    return None
+                data(html[pos : close.start()])
+                end(tag)
+                pos = close.end()
+    return b
+
+
+def segment_blocks(html: str | bytes | None) -> list[Block]:
+    """Parse HTML into scored blocks; tolerant of truncated markup."""
+    if html is None:
+        return []
+    html = decode_html(html)
+    b = _fast_blocks(html)
+    if b is None:
+        b = _parser_blocks(html)
+    return [blk for blk in b.blocks if blk.n_chars > 0]
 
 
 # a meta tag's attribute list (quoted values may hold '>'), one

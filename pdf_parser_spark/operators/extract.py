@@ -168,8 +168,9 @@ def extract_documents_from_html(
 
     Because the stripper is byte-identical to the pre-extracted text on
     well-formed pages, this path produces the same toc/chunks/validation
-    as the text path (asserted by tests/test_spark_extract.py). Both
-    passes are mapInPandas — still zero cross-document shuffles.
+    as the text path (asserted by tests/test_spark_extract.py). The
+    strip is one mapInArrow and the extraction one mapInPandas — still
+    zero cross-document shuffles.
     """
     from .html_extract import html_main_text
 

@@ -14,12 +14,16 @@ Two operators over documents(url, html, ...):
                         column byte-identically per url.
 
 Scale notes (10^12 docs):
-  - both are single mapInPandas passes: zero shuffles, the html
-    binary column is the only heavy input and is pruned everywhere
-    else (Catalyst reads it solely on this path);
-  - the stdlib tokenizer is allocation-light and batch-amortized;
-    Arrow batches are small (plans/session caps maxRecordsPerBatch)
-    because html rows are KB-MB scale;
+  - each is a single scan-local pass (html_main_text a mapInArrow
+    that reads and writes Arrow batches with no pandas step, the
+    others mapInPandas): zero shuffles, the html binary column is the
+    only heavy input and is pruned everywhere else (Catalyst reads it
+    solely on this path);
+  - segment_blocks tokenizes a page with one compiled regex and falls
+    back to the stdlib HTMLParser only for pages outside that grammar
+    (comments, doctypes, stray '<', ...); Arrow batches are small
+    (plans/session caps maxRecordsPerBatch) because html rows are
+    KB-MB scale;
   - per-partition failure accounting mirrors operators/extract.py —
     a truncated/hostile page yields its salvageable prefix blocks,
     never a task failure.
@@ -30,7 +34,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.html_extract import (
     METADATA_FIELDS,
@@ -97,24 +103,23 @@ def html_main_text(
     min_chars: int = 1,
 ) -> DataFrame:
     """documents → (url, extracted_text) boilerplate-stripped."""
+    schema = to_arrow_schema(TEXT_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            rows = []
-            for url, html in zip(batch["url"], batch["html"]):
+            texts, n_blocks, n_content_blocks = [], [], []
+            for html in batch.column("html").to_pylist():
                 blocks = segment_blocks(html)
-                kept = [b for b in blocks if classify_block(b, max_link_density, min_chars)]
-                rows.append(
-                    {
-                        "url": url,
-                        "extracted_text": separator.join(b.text for b in kept),
-                        "n_blocks": len(blocks),
-                        "n_content_blocks": len(kept),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in TEXT_SCHEMA.fields])
+                kept = [b.text for b in blocks if classify_block(b, max_link_density, min_chars)]
+                texts.append(separator.join(kept))
+                n_blocks.append(len(blocks))
+                n_content_blocks.append(len(kept))
+            cols = [batch.column("url").to_pylist(), texts, n_blocks, n_content_blocks]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+            )
 
-    return docs.select("url", "html").mapInPandas(run, schema=TEXT_SCHEMA)
+    return docs.select("url", "html").mapInArrow(run, schema=TEXT_SCHEMA)
 
 
 SPAN_SCHEMA = T.StructType(

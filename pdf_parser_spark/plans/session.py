@@ -45,6 +45,11 @@ _LOCAL_DEFAULTS = {
     # amount set by GC timing. 4 MiB pages bound that to a few MB;
     # records larger than a page still get a page of their own.
     "spark.buffer.pageSize": "4m",
+    # Spark lists more than 32 root paths with a Spark job of its own,
+    # and sinks/snapshots.read passes one root per committed batch: a
+    # 40-commit table ran that listing job before any query. Snapshot
+    # tables are local files, which list faster in-process than a job.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

@@ -3772,7 +3772,7 @@ def q89(spark, sf):
     core/html_extract.py), byte-identical extracted text per url.
     Spark side renders Common-Crawl-style HTML from `documents.text`
     and recovers the main content with operators/html_extract
-    .html_main_text (single mapInPandas, zero shuffles); the oracle
+    .html_main_text (single mapInArrow, zero shuffles); the oracle
     reconstructs the expected bytes from the text column alone, so a
     green row proves the whole parse→segment→score→classify→assemble
     chain is byte-exact, including dropping the planted empty page.

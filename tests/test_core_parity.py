@@ -3,12 +3,22 @@
 Every scalar/operator in pdf_parser_spark.core is run side-by-side with
 the corresponding reference function on adversarial + seeded-random
 inputs; outputs must be equal to the byte (SURVEY §5 item 1).
+
+The live comparisons import the reference checkout. test_scalar_parity
+skips without it; its twin, test_scalar_frozen_cases, replays the same
+inputs against outputs frozen from this engine in
+tests/golden/core_scalar_cases.jsonl.
 """
 
 from __future__ import annotations
 
+import json
 import random
 import string
+from pathlib import Path
+
+import pytest
+from conftest import REFERENCE_ROOT
 
 import pdf_parser_spark.core.chunking as mchunk
 import pdf_parser_spark.core.headings as mhead
@@ -58,6 +68,36 @@ def _random_strings(n: int, seed: int) -> list[str]:
     ]
 
 
+SCALAR_CASES = Path(__file__).parent / "golden" / "core_scalar_cases.jsonl"
+
+
+def _scalars(s: str) -> dict:
+    return {
+        "normalize_text": mtext.normalize_text(s),
+        "strip_dot_leaders": mtext.strip_dot_leaders(s),
+        "norm_caption_line": mtext.norm_caption_line(s),
+        "is_running_header": mtext.is_running_header(s),
+        "clean_content": mtext.clean_content(s),
+        "clean_heading_title": mtext.clean_heading_title(s),
+        "normalize_sentences": mtext.normalize_sentences(s),
+        "norm_id": mtext.norm_id(s),
+        "looks_like_heading": mtext.looks_like_heading(s[:3], s),
+        "clean_toc_title": mmatch.clean_toc_title(s),
+    }
+
+
+def test_scalar_frozen_cases():
+    """Fixture twin of test_scalar_parity: its inputs, one per line,
+    with the ten functions' outputs frozen from this engine (which
+    matched the reference on them)."""
+    inputs = HANDPICKED + _random_strings(2000, seed=1)
+    cases = [json.loads(line) for line in SCALAR_CASES.read_text(encoding="utf-8").splitlines()]
+    assert [c.pop("s") for c in cases] == inputs
+    for s, want in zip(inputs, cases):
+        assert _scalars(s) == want, ascii(s)
+
+
+@pytest.mark.skipif(not Path(REFERENCE_ROOT).exists(), reason="reference checkout unavailable")
 def test_scalar_parity(ref):
     cleaner = ref.chunk.Cleaner()
     for s in HANDPICKED + _random_strings(2000, seed=1):

@@ -248,3 +248,22 @@ def test_plain_parquet_directory_is_not_a_snapshot_table(spark, tmp_path):
             sn.read(spark, t)
         with pytest.raises(FileNotFoundError):
             sn.read_incremental(spark, t)
+
+
+def test_read_of_many_commits_runs_no_listing_job(spark, tmp_path):
+    """sn.read passes one root path per committed batch. Past
+    spark.sql.sources.parallelPartitionDiscovery.threshold roots Spark
+    lists them with a job of its own; get_spark raises the threshold,
+    so building the DataFrame of a 40-commit table runs at most the one
+    job that reads the parquet schema."""
+    table = str(tmp_path / "many")
+    for i in range(40):
+        sn.commit(spark, spark.range(i, i + 1), table)
+    sc = spark.sparkContext
+    sc.setJobGroup("sn-read", "sn-read")
+    try:
+        df = sn.read(spark, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("sn-read")) <= 1
+    assert sorted(r.id for r in df.collect()) == list(range(40))
