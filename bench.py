@@ -98,7 +98,7 @@ def main() -> None:
 
     # end-to-end extraction pipeline (the BASELINE.json north metric is
     # docs/sec): distributed synth corpus → parquet → salted repartition
-    # → mapInPandas extract → noop sink; one untimed pass first so the
+    # → mapInArrow extract → noop sink; one untimed pass first so the
     # python-UDF worker spin-up isn't billed to the steady-state number
     from pdf_parser_spark.operators import extract as ox
     from pdf_parser_spark.sources.corpus import (

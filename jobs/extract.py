@@ -10,7 +10,7 @@ Pipeline (SURVEY §3 lifecycle → north_rule operational contract):
   documents(url, warc_ts, html, text, lang)
     → anti-join already-extracted urls        (resume checkpoint)
     → salted repartition xxhash64(url, salt)  (host/mega-doc skew)
-    → mapInPandas per-document extraction     (zero further shuffles)
+    → mapInArrow per-document extraction      (zero further shuffles)
     → commit to <outdir>/extracted            (the checkpoint itself)
 
 `extracted` is the only table the job writes. The flat tables are

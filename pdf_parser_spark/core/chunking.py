@@ -77,7 +77,7 @@ def _gather_lines(
     Spark-native analog: a range join pages⋈bounds on
     page_no BETWEEN pstart AND pend within url (SURVEY W6); kept
     imperative here because the whole document is already local to
-    one extract_document call (the extraction mapInPandas pass).
+    one extract_document call (the extraction mapInArrow pass).
     """
     lines: list[str] = []
     for p in range(pstart, pend + 1):

@@ -9,7 +9,7 @@ Byte-identical to the reference validator:
 
 The greedy fuzzy phase is *stateful and sequential* (earlier ToC rows
 consume chunks) — in Spark it must stay whole-document inside one
-per-document call (extraction's mapInPandas, or the per-url cogroup
+per-document call (extraction's mapInArrow, or the per-url cogroup
 in operators/validate_dist.py); a cross-join + row_number
 approximation is NOT order-equivalent (SURVEY J3).
 

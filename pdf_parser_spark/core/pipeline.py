@@ -7,7 +7,7 @@ One call = the reference's full per-document lifecycle:
   metrics      ↔ metrics.pyc compute_metrics
 
 This function is the unit of work executed per url inside the
-extraction mapInPandas pass (operators/extract.py) — the whole
+extraction mapInArrow pass (operators/extract.py) — the whole
 lifecycle stays document-local, so stages need zero extra shuffles and
 the reference's sequential semantics (greedy fuzzy match, ordered
 caption lists) hold exactly. Per-document exceptions are captured into the result status

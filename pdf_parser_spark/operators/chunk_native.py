@@ -2,7 +2,7 @@
 
 Native re-expressions of the SQL-expressible chunk-stage subset
 (SURVEY §2.3 F3-F5, §2.5 E2-E4, §2.6 W4-W6) — the byte-parity path
-runs the same logic inside core/* within one mapInPandas pass
+runs the same logic inside core/* within one mapInArrow pass
 (operators/extract.py); these exist so the optimizer sees the plan:
 whole-stage-codegen'd regex/filter chains, a window `lead()` for
 chunk bounds, and a url-equi + page-range join for the page gather.

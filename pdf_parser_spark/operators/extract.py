@@ -4,8 +4,8 @@ Design for 10^12-document scale
 -------------------------------
 One document is one row, and the reference pipeline is strictly
 per-document, so extraction is embarrassingly parallel **row-wise**:
-a single `mapInPandas` pass computes toc + chunks + validation +
-metrics per url with ZERO shuffles — no groupBy, no join, no window
+a single mapInArrow pass (plans/rows.map_rows) computes toc + chunks +
+validation + metrics per url with ZERO shuffles — no groupBy, no join, no window
 crosses documents. The only movements are:
 
   1. the initial scan (parquet/Iceberg; url/text column-pruned — the
@@ -30,12 +30,12 @@ operators/toc_native.py for Catalyst-visible plans.
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
-import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..core.pipeline import extract_document
+from ..plans.rows import map_rows
 
 CAPTION = T.StringType()
 
@@ -122,6 +122,19 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> Data
     return df.repartition(n, F.xxhash64(F.col("url"), F.lit(0x5A17)))
 
 
+def _extracted(url: str, text: str | None, min_dots: int, strip_dots: bool) -> dict:
+    """One EXTRACTED row: the per-document pipeline plus its lineage."""
+    t0 = time.perf_counter()
+    r = extract_document(text, doc_title=url, min_dots=min_dots, strip_dots=strip_dots)
+    ctx = TaskContext.get()
+    return {
+        "url": url,
+        **r,
+        "partition_id": ctx.partitionId() if ctx else -1,
+        "extract_secs": time.perf_counter() - t0,
+    }
+
+
 def extract_documents(docs: DataFrame, min_dots: int = 0, strip_dots: bool = False) -> DataFrame:
     """documents(url, text, ...) → one extracted row per document.
 
@@ -129,34 +142,10 @@ def extract_documents(docs: DataFrame, min_dots: int = 0, strip_dots: bool = Fal
     rest (html binary never leaves the scan).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    def run(url, text):
+        yield _extracted(url, text, min_dots, strip_dots)
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for batch in batches:
-            rows = []
-            for url, text in zip(batch["url"], batch["text"]):
-                t0 = time.perf_counter()
-                r = extract_document(text, doc_title=url, min_dots=min_dots, strip_dots=strip_dots)
-                rows.append(
-                    {
-                        "url": url,
-                        "status": r["status"],
-                        "error": r["error"],
-                        "n_pages": r["n_pages"],
-                        "toc_start": r["toc_start"],
-                        "toc_end": r["toc_end"],
-                        "toc": r["toc"],
-                        "chunks": r["chunks"],
-                        "validation": r["validation"],
-                        "metrics": r["metrics"],
-                        "partition_id": pid,
-                        "extract_secs": time.perf_counter() - t0,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return docs.select("url", "text").mapInPandas(run, schema=EXTRACTED)
+    return map_rows(docs.select("url", "text"), run, EXTRACTED)
 
 
 def extract_documents_from_html(
@@ -169,8 +158,8 @@ def extract_documents_from_html(
     Because the stripper is byte-identical to the pre-extracted text on
     well-formed pages, this path produces the same toc/chunks/validation
     as the text path (asserted by tests/test_spark_extract.py). The
-    strip is one mapInArrow and the extraction one mapInPandas — still
-    zero cross-document shuffles.
+    strip and the extraction are one mapInArrow each — still zero
+    cross-document shuffles.
     """
     from .html_extract import html_main_text
 
@@ -198,36 +187,26 @@ def pdf_pages_table(docs: DataFrame, pdf_col: str = "pdf") -> DataFrame:
     pdfplumber take over transparently where installed (reference
     utils.py:171-230). Decode failures become status rows (page_no 0),
     never task failures — same accounting contract as extract_documents.
-    One mapInPandas pass, zero shuffles; rows out ∝ pages."""
+    One mapInArrow pass, zero shuffles; rows out ∝ pages."""
     from ..core.pdf_layout import pdf_to_page_texts
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, data in zip(batch["url"], batch[pdf_col]):
-                try:
-                    pages = pdf_to_page_texts(bytes(data))
-                    for page_no, text in pages:
-                        rows.append(
-                            {"url": url, "status": "ok", "page_no": page_no, "text": text}
-                        )
-                    if not pages:
-                        # one row per input doc, always: a zero-page
-                        # document must not vanish from the accounting
-                        rows.append(
-                            {"url": url, "status": "empty", "page_no": 0, "text": None}
-                        )
-                except NotImplementedError:
-                    rows.append(
-                        {"url": url, "status": "unsupported_codec", "page_no": 0, "text": None}
-                    )
-                except Exception:
-                    rows.append(
-                        {"url": url, "status": "decode_error", "page_no": 0, "text": None}
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in PDF_PAGES.fields])
+    def run(url, data):
+        try:
+            pages = pdf_to_page_texts(bytes(data))
+        except NotImplementedError:
+            yield {"url": url, "status": "unsupported_codec", "page_no": 0}
+            return
+        except Exception:
+            yield {"url": url, "status": "decode_error", "page_no": 0}
+            return
+        for page_no, text in pages:
+            yield {"url": url, "status": "ok", "page_no": page_no, "text": text}
+        if not pages:
+            # one row per input doc, always: a zero-page document must
+            # not vanish from the accounting
+            yield {"url": url, "status": "empty", "page_no": 0}
 
-    return docs.select("url", pdf_col).mapInPandas(run, schema=PDF_PAGES)
+    return map_rows(docs.select("url", pdf_col), run, PDF_PAGES)
 
 
 def extract_documents_from_pdf(
@@ -236,51 +215,24 @@ def extract_documents_from_pdf(
     """Same lifecycle as extract_documents, but the page-marked text is
     recovered from a PDF binary column first: decode → per-page
     reading-order assembly → form-feed page markers → the standard
-    per-document pipeline. Both passes are mapInPandas (zero
-    cross-document shuffles); undecodable rows surface as
-    status='error' rows with the decode reason, keeping the
-    parse-failure accounting unbroken."""
+    per-document pipeline, in one mapInArrow pass (zero shuffles).
+    Undecodable rows surface as status='error' rows with the decode
+    reason, keeping the parse-failure accounting unbroken."""
     from ..core.pages import PAGE_BREAK
     from ..core.pdf_layout import pdf_to_page_texts
 
-    def to_text(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, data in zip(batch["url"], batch[pdf_col]):
-                try:
-                    text = PAGE_BREAK.join(
-                        t for _, t in pdf_to_page_texts(bytes(data))
-                    )
-                    rows.append({"url": url, "text": text, "decode_error": None})
-                except Exception as e:
-                    rows.append({"url": url, "text": None, "decode_error": str(e)[:200]})
-            yield pd.DataFrame(rows, columns=["url", "text", "decode_error"])
+    def run(url, data):
+        try:
+            text = PAGE_BREAK.join(t for _, t in pdf_to_page_texts(bytes(data)))
+        except Exception as e:
+            yield {
+                "url": url, "status": "error", "error": str(e)[:200], "n_pages": 0,
+                "partition_id": -1, "extract_secs": 0.0,
+            }
+        else:
+            yield _extracted(url, text, min_dots, strip_dots)
 
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("decode_error", T.StringType()),
-        ]
-    )
-    texts = docs.select("url", pdf_col).mapInPandas(to_text, schema=schema)
-    ok = texts.where(F.col("decode_error").isNull()).select("url", "text")
-    extracted = extract_documents(ok, min_dots=min_dots, strip_dots=strip_dots)
-    failed = texts.where(F.col("decode_error").isNotNull()).select(
-        "url",
-        F.lit("error").alias("status"),
-        F.col("decode_error").alias("error"),
-        F.lit(0).alias("n_pages"),
-        F.lit(None).cast("int").alias("toc_start"),
-        F.lit(None).cast("int").alias("toc_end"),
-        F.lit(None).cast(EXTRACTED["toc"].dataType).alias("toc"),
-        F.lit(None).cast(EXTRACTED["chunks"].dataType).alias("chunks"),
-        F.lit(None).cast(EXTRACTED["validation"].dataType).alias("validation"),
-        F.lit(None).cast(EXTRACTED["metrics"].dataType).alias("metrics"),
-        F.lit(-1).alias("partition_id"),
-        F.lit(0.0).alias("extract_secs"),
-    )
-    return extracted.unionByName(failed)
+    return map_rows(docs.select("url", pdf_col), run, EXTRACTED)
 
 
 def toc_table(extracted: DataFrame) -> DataFrame:

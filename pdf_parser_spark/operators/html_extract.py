@@ -14,10 +14,8 @@ Two operators over documents(url, html, ...):
                         column byte-identically per url.
 
 Scale notes (10^12 docs):
-  - each is a single scan-local pass (html_main_text a mapInArrow
-    that reads and writes Arrow batches with no pandas step, the
-    others mapInPandas): zero shuffles, the html binary column is the
-    only heavy input and is pruned everywhere else (Catalyst reads it
+  - each is a single scan-local mapInArrow pass (plans/rows.map_rows):
+    zero shuffles, the html binary column is the only heavy input and is pruned everywhere else (Catalyst reads it
     solely on this path);
   - segment_blocks tokenizes a page with one compiled regex and falls
     back to the stdlib HTMLParser only for pages outside that grammar
@@ -31,20 +29,10 @@ Scale notes (10^12 docs):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..core.html_extract import (
-    METADATA_FIELDS,
-    classify_block,
-    extract_main_text,
-    extract_metadata,
-    segment_blocks,
-)
+from ..core.html_extract import METADATA_FIELDS, classify_block, extract_metadata, segment_blocks
+from ..plans.rows import map_rows
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -74,26 +62,20 @@ def html_blocks(
 ) -> DataFrame:
     """documents → one scored row per DOM block (flatMap shape)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, html in zip(batch["url"], batch["html"]):
-                for b in segment_blocks(html):
-                    rows.append(
-                        {
-                            "url": url,
-                            "block_no": b.block_no,
-                            "tag_path": b.tag_path,
-                            "depth": b.depth,
-                            "text": b.text,
-                            "n_chars": b.n_chars,
-                            "link_density": b.link_density,
-                            "is_content": classify_block(b, max_link_density, min_chars),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
+    def run(url, html):
+        for b in segment_blocks(html):
+            yield {
+                "url": url,
+                "block_no": b.block_no,
+                "tag_path": b.tag_path,
+                "depth": b.depth,
+                "text": b.text,
+                "n_chars": b.n_chars,
+                "link_density": b.link_density,
+                "is_content": classify_block(b, max_link_density, min_chars),
+            }
 
-    return docs.select("url", "html").mapInPandas(run, schema=BLOCK_SCHEMA)
+    return map_rows(docs.select("url", "html"), run, BLOCK_SCHEMA)
 
 
 def html_main_text(
@@ -103,23 +85,18 @@ def html_main_text(
     min_chars: int = 1,
 ) -> DataFrame:
     """documents → (url, extracted_text) boilerplate-stripped."""
-    schema = to_arrow_schema(TEXT_SCHEMA)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            texts, n_blocks, n_content_blocks = [], [], []
-            for html in batch.column("html").to_pylist():
-                blocks = segment_blocks(html)
-                kept = [b.text for b in blocks if classify_block(b, max_link_density, min_chars)]
-                texts.append(separator.join(kept))
-                n_blocks.append(len(blocks))
-                n_content_blocks.append(len(kept))
-            cols = [batch.column("url").to_pylist(), texts, n_blocks, n_content_blocks]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
+    def run(url, html):
+        blocks = segment_blocks(html)
+        kept = [b.text for b in blocks if classify_block(b, max_link_density, min_chars)]
+        yield {
+            "url": url,
+            "extracted_text": separator.join(kept),
+            "n_blocks": len(blocks),
+            "n_content_blocks": len(kept),
+        }
 
-    return docs.select("url", "html").mapInArrow(run, schema=TEXT_SCHEMA)
+    return map_rows(docs.select("url", "html"), run, TEXT_SCHEMA)
 
 
 SPAN_SCHEMA = T.StructType(
@@ -146,30 +123,22 @@ def html_content_spans(
     strings. Invariant (tested): extracted_text[char_start:char_end]
     == block text, with `separator` between consecutive blocks."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sep_len = len(separator)
-        for batch in batches:
-            rows = []
-            for url, html in zip(batch["url"], batch["html"]):
-                pos = 0
-                for b in segment_blocks(html):
-                    if not classify_block(b, max_link_density, min_chars):
-                        continue
-                    start = pos if pos == 0 else pos + sep_len
-                    end = start + len(b.text)
-                    rows.append(
-                        {
-                            "url": url,
-                            "block_no": b.block_no,
-                            "char_start": start,
-                            "char_end": end,
-                            "tag_path": b.tag_path,
-                        }
-                    )
-                    pos = end
-            yield pd.DataFrame(rows, columns=[f.name for f in SPAN_SCHEMA.fields])
+    def run(url, html):
+        pos = 0
+        for b in segment_blocks(html):
+            if not classify_block(b, max_link_density, min_chars):
+                continue
+            start = pos if pos == 0 else pos + len(separator)
+            pos = start + len(b.text)
+            yield {
+                "url": url,
+                "block_no": b.block_no,
+                "char_start": start,
+                "char_end": pos,
+                "tag_path": b.tag_path,
+            }
 
-    return docs.select("url", "html").mapInPandas(run, schema=SPAN_SCHEMA)
+    return map_rows(docs.select("url", "html"), run, SPAN_SCHEMA)
 
 
 METADATA_SCHEMA = T.StructType(
@@ -187,20 +156,14 @@ def html_metadata(docs: DataFrame) -> DataFrame:
     crawl dedup (composes with webtext_filters.canonicalize_url),
     declared lang to cross-check the n-gram lang-id (q27/q49).
 
-    Plan shape: one scan-local mapInPandas over (url, html) — zero
+    Plan shape: one scan-local mapInArrow over (url, html) — zero
     shuffles, rows out == rows in, the html binary never leaves the
     task; same scale posture as html_main_text above."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in METADATA_SCHEMA.fields]
-        for batch in batches:
-            rows = [
-                {"url": url, **extract_metadata(html)}
-                for url, html in zip(batch["url"], batch["html"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
+    def run(url, html):
+        yield {"url": url, **extract_metadata(html)}
 
-    return docs.select("url", "html").mapInPandas(run, schema=METADATA_SCHEMA)
+    return map_rows(docs.select("url", "html"), run, METADATA_SCHEMA)
 
 
 def boilerplate_stats(blocks: DataFrame) -> DataFrame:

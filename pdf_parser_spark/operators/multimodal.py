@@ -1,5 +1,6 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
-metadata, processed with Arrow-batched mapInPandas (training-data tier).
+metadata, processed row by row through plans/rows.map_rows, one
+mapInArrow per operator (training-data tier).
 
 The Spark-side plumbing — schemas, batch shapes, UDF signatures,
 flatMap explosion for frame sampling, failure accounting, partition
@@ -10,7 +11,7 @@ raise NotImplementedError for real mime types. Swapping in PIL/ffmpeg
 is a per-function body change; no plan or schema changes.
 
 Scale notes (10^12 rows):
-  - every operator is one mapInPandas pass (zero shuffles); media
+  - every operator is one mapInArrow pass (zero shuffles); media
     binaries are the dominant bytes, so Arrow batches stay small
     (plans/session caps maxRecordsPerBatch) and the media column is
     column-pruned everywhere else;
@@ -26,10 +27,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from ..plans.rows import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -161,6 +162,16 @@ def _video_frame(data: bytes, width: int, height: int, frame_no: int) -> bytes:
     return data[off : off + width * height]
 
 
+def _digest_vector(data: bytes, dim: int) -> list[float]:
+    """`dim` floats in [-1, 1), two digest bytes each: the deterministic
+    stand-in for an encoder's features."""
+    digest = hashlib.blake2s(data, digest_size=dim * 2).digest()
+    return [
+        (int.from_bytes(digest[2 * i : 2 * i + 2], "big") - 32768) / 32768.0
+        for i in range(dim)
+    ]
+
+
 # --- operators --------------------------------------------------------
 
 
@@ -171,34 +182,28 @@ def media_metadata(media: DataFrame) -> DataFrame:
     status='decode_error' rows — accounted, never thrown.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, kind, data in zip(batch["url"], batch["kind"], batch["media"]):
-                row = {
-                    "url": url, "kind": kind, "status": "ok",
-                    "n_bytes": len(data) if data is not None else 0,
-                    "width": None, "height": None, "sample_rate": None,
-                    "n_samples": None, "n_frames": None,
-                    "content_hash": hashlib.blake2s(data or b"", digest_size=16).hexdigest(),
-                }
-                try:
-                    if kind == "image":
-                        row["width"], row["height"], _ = _decode_image(data)
-                    elif kind == "audio":
-                        row["sample_rate"], row["n_samples"], _ = _decode_audio(data)
-                    elif kind == "video":
-                        row["width"], row["height"], row["n_frames"] = _decode_video_header(data)
-                    else:
-                        row["status"] = "unknown_kind"
-                except NotImplementedError:
-                    row["status"] = "unsupported_codec"
-                except Exception:
-                    row["status"] = "decode_error"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in META_SCHEMA.fields])
+    def run(url, kind, data):
+        row = {
+            "url": url, "kind": kind, "status": "ok",
+            "n_bytes": len(data) if data is not None else 0,
+            "content_hash": hashlib.blake2s(data or b"", digest_size=16).hexdigest(),
+        }
+        try:
+            if kind == "image":
+                row["width"], row["height"], _ = _decode_image(data)
+            elif kind == "audio":
+                row["sample_rate"], row["n_samples"], _ = _decode_audio(data)
+            elif kind == "video":
+                row["width"], row["height"], row["n_frames"] = _decode_video_header(data)
+            else:
+                row["status"] = "unknown_kind"
+        except NotImplementedError:
+            row["status"] = "unsupported_codec"
+        except Exception:
+            row["status"] = "decode_error"
+        yield row
 
-    return media.select("url", "kind", "media").mapInPandas(run, schema=META_SCHEMA)
+    return map_rows(media.select("url", "kind", "media"), run, META_SCHEMA)
 
 
 def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -206,30 +211,24 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     nearest-neighbor over the FIMG payload — the real body would call
     PIL; batch shape, error handling and schema are production-real."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, kind, data, mime in zip(
-                batch["url"], batch["kind"], batch["media"], batch["mime"]
-            ):
-                out = data
-                if kind == "image":
-                    try:
-                        w, h, px = _decode_image(data)
-                        resized = bytearray(out_w * out_h)
-                        for y in range(out_h):
-                            sy = min(h - 1, (y * h) // out_h)
-                            base = sy * w
-                            for x in range(out_w):
-                                sx = min(w - 1, (x * w) // out_w)
-                                resized[y * out_w + x] = px[base + sx] if base + sx < len(px) else 0
-                        out = b"FIMG" + struct.pack(">II", out_w, out_h) + bytes(resized)
-                    except Exception:
-                        out = None  # undecodable → null media, kept for accounting
-                rows.append({"url": url, "kind": kind, "media": out, "mime": mime})
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+    def run(url, kind, data, mime):
+        out = data
+        if kind == "image":
+            try:
+                w, h, px = _decode_image(data)
+                resized = bytearray(out_w * out_h)
+                for y in range(out_h):
+                    sy = min(h - 1, (y * h) // out_h)
+                    base = sy * w
+                    for x in range(out_w):
+                        sx = min(w - 1, (x * w) // out_w)
+                        resized[y * out_w + x] = px[base + sx] if base + sx < len(px) else 0
+                out = b"FIMG" + struct.pack(">II", out_w, out_h) + bytes(resized)
+            except Exception:
+                out = None  # undecodable → null media, kept for accounting
+        yield {"url": url, "kind": kind, "media": out, "mime": mime}
 
-    return media.select("url", "kind", "media", "mime").mapInPandas(run, schema=MEDIA_SCHEMA)
+    return map_rows(media.select("url", "kind", "media", "mime"), run, MEDIA_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
@@ -238,29 +237,23 @@ def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
     Emitted rows carry (url, frame_no); repartition downstream on
     xxhash64(url, frame_no) to spread a mega-video's frames."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, kind, data in zip(batch["url"], batch["kind"], batch["media"]):
-                if kind != "video":
-                    continue
-                try:
-                    w, h, nf = _decode_video_header(data)
-                except Exception:
-                    continue
-                for f_no in range(0, nf, every_n):
-                    rows.append(
-                        {
-                            "url": url,
-                            "frame_no": f_no,
-                            "width": w,
-                            "height": h,
-                            "frame": _video_frame(data, w, h, f_no),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def run(url, kind, data):
+        if kind != "video":
+            return
+        try:
+            w, h, nf = _decode_video_header(data)
+        except Exception:
+            return
+        for f_no in range(0, nf, every_n):
+            yield {
+                "url": url,
+                "frame_no": f_no,
+                "width": w,
+                "height": h,
+                "frame": _video_frame(data, w, h, f_no),
+            }
 
-    return media.select("url", "kind", "media").mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(media.select("url", "kind", "media"), run, FRAME_SCHEMA)
 
 
 def media_embeddings(media: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
@@ -270,22 +263,13 @@ def media_embeddings(media: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
     features are seeded from a content digest, so identical bytes →
     identical embedding (supports downstream dedup/ANN testing)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, data in zip(batch["url"], batch["media"]):
-                if data is None:
-                    rows.append({"url": url, "status": "null_media", "embedding": None})
-                    continue
-                digest = hashlib.blake2s(data, digest_size=dim * 2).digest()
-                vec = [
-                    (int.from_bytes(digest[2 * i : 2 * i + 2], "big") - 32768) / 32768.0
-                    for i in range(dim)
-                ]
-                rows.append({"url": url, "status": "ok", "embedding": vec})
-            yield pd.DataFrame(rows, columns=[f.name for f in EMBED_SCHEMA.fields])
+    def run(url, data):
+        if data is None:
+            yield {"url": url, "status": "null_media"}
+        else:
+            yield {"url": url, "status": "ok", "embedding": _digest_vector(data, dim)}
 
-    return media.select("url", "media").mapInPandas(run, schema=EMBED_SCHEMA)
+    return map_rows(media.select("url", "media"), run, EMBED_SCHEMA)
 
 
 def image_embeddings(media: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
@@ -304,34 +288,21 @@ def image_embeddings(media: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
     status='decode_error'/'unsupported_codec' with a null vector,
     accounted, never thrown."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, data in zip(batch["url"], batch["media"]):
-                if data is None:
-                    rows.append({"url": url, "status": "null_media", "embedding": None})
-                    continue
-                try:
-                    w, h, px = _decode_image(bytes(data))
-                except NotImplementedError:
-                    rows.append(
-                        {"url": url, "status": "unsupported_codec", "embedding": None}
-                    )
-                    continue
-                except Exception:
-                    rows.append({"url": url, "status": "decode_error", "embedding": None})
-                    continue
-                digest = hashlib.blake2s(
-                    struct.pack(">II", w, h) + px, digest_size=dim * 2
-                ).digest()
-                vec = [
-                    (int.from_bytes(digest[2 * i : 2 * i + 2], "big") - 32768) / 32768.0
-                    for i in range(dim)
-                ]
-                rows.append({"url": url, "status": "ok", "embedding": vec})
-            yield pd.DataFrame(rows, columns=[f.name for f in EMBED_SCHEMA.fields])
+    def run(url, data):
+        if data is None:
+            yield {"url": url, "status": "null_media"}
+            return
+        try:
+            w, h, px = _decode_image(data)
+        except NotImplementedError:
+            yield {"url": url, "status": "unsupported_codec"}
+        except Exception:
+            yield {"url": url, "status": "decode_error"}
+        else:
+            vec = _digest_vector(struct.pack(">II", w, h) + px, dim)
+            yield {"url": url, "status": "ok", "embedding": vec}
 
-    return media.select("url", "media").mapInPandas(run, schema=EMBED_SCHEMA)
+    return map_rows(media.select("url", "media"), run, EMBED_SCHEMA)
 
 
 def media_summary(meta: DataFrame) -> DataFrame:

@@ -1,6 +1,6 @@
 """Catalyst-visible ToC pipeline over a (url, line) DataFrame.
 
-The byte-parity path runs the core parser inside one mapInPandas pass
+The byte-parity path runs the core parser inside one mapInArrow pass
 (operators/extract.py); this module re-expresses the SQL-expressible
 subset natively so the optimizer can see it — regex extract (E1),
 header filter (F1), min-dots filter (F2), synthetic-parent repair (W3:

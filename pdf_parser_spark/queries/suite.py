@@ -3629,7 +3629,7 @@ def q88(spark, sf):
     (its own title field is DISCARDED and re-derived from
     section_path, the reference's try/except fallback semantics,
     validate.py:204-258). Spark side runs the real core
-    coerce_chunk_record inside Arrow-batched mapInPandas; the oracle
+    coerce_chunk_record inside one mapInArrow; the oracle
     replays the coercion's contract on the same deterministic fixture
     family."""
     from ..plans.session import ship_package
@@ -3869,7 +3869,7 @@ def q91(spark, sf):
     (avg_link_density 68/104 → 0.6538), the footer 12/32 = 0.375, the
     bare link blocks 1.0, content divs 0.0 — so a green row proves the
     segmenter's char/link accounting NUMERICALLY, not just the final
-    keep/drop bit that q89 attests. One mapInPandas + one hash agg."""
+    keep/drop bit that q89 attests. One mapInArrow + one hash agg."""
     from ..operators.html_extract import boilerplate_stats, html_blocks
 
     blocks = html_blocks(_docs_as_rendered_html(spark, sf))

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from .synth import generate_corpus
+from ..plans.rows import map_rows
+from .synth import generate_corpus, make_document
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -42,25 +43,16 @@ def synthetic_documents_distributed(
 
     Driver-side generation is O(n) single-threaded Python; for scaling
     runs the generator itself must parallelize, so each partition
-    synthesizes its own id range via mapInPandas (doc content depends
-    only on (doc_id, seed) — identical rows to synthetic_documents).
+    synthesizes its own id range in one mapInArrow pass (doc content
+    depends only on (doc_id, seed) — identical rows to
+    synthetic_documents).
     """
-    import pandas as pd
-
     mega_every = 40
 
-    def gen(batches):
-        from .synth import make_document
+    def gen(i):
+        yield make_document(i, seed=seed, mega=(i > 0 and i % mega_every == 0))
 
-        for batch in batches:
-            rows = [
-                make_document(int(i), seed=seed, mega=(i > 0 and i % mega_every == 0))
-                for i in batch["id"]
-            ]
-            yield pd.DataFrame(rows)
-
-    ids = spark.range(0, n_docs).repartition(partitions)
-    return ids.mapInPandas(gen, schema=DOCUMENTS_SCHEMA)
+    return map_rows(spark.range(0, n_docs).repartition(partitions), gen, DOCUMENTS_SCHEMA)
 
 
 def write_documents(df: DataFrame, path: str) -> None:

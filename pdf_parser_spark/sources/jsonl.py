@@ -14,7 +14,12 @@ silent drop (the engine-wide parse-failure policy).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from ..core.matching import coerce_chunk_record
+from ..plans.rows import map_rows
 
 CORRUPT_COL = "_corrupt"
 
@@ -87,7 +92,7 @@ def coerce_chunks_column(
     `start_heading`/`section_path` on the first space, stringify the
     two-element page_range list, and re-extract caption ids with the
     validator grammar (`Table 3-2. Foo` → `3-2`). Runs as one
-    Arrow-batched mapInPandas — per-row Python is unavoidable here
+    mapInArrow (plans/rows.map_rows) — per-row Python is unavoidable here
     because the coercion IS reference Python semantics (dict-shape
     dispatch + regex grammar), but batches amortize transfer and the
     operator is embarrassingly parallel (no shuffle, no state).
@@ -110,23 +115,8 @@ def coerce_chunks_column(
             T.StructField("figures", T.ArrayType(T.StringType())),
         ]
     )
-    names = [f.name for f in out_schema.fields]
 
-    def coerce_batches(batches):
-        import json
+    def coerce(value, *kept):
+        yield {**dict(zip(keep, kept)), **coerce_chunk_record(json.loads(value))}
 
-        import pandas as pd
-
-        from pdf_parser_spark.core import matching
-
-        for pdf in batches:
-            recs = []
-            for row in pdf.itertuples(index=False):
-                obj = json.loads(getattr(row, col))
-                c = matching.coerce_chunk_record(obj)
-                rec = {k: getattr(row, k) for k in keep}
-                rec.update(c)
-                recs.append(rec)
-            yield pd.DataFrame(recs, columns=names)
-
-    return df.mapInPandas(coerce_batches, out_schema)
+    return map_rows(df.select(col, *keep), coerce, out_schema)

@@ -6,7 +6,7 @@ concatenated WARC/1.0 records, each usually its own gzip member
 (the Common Crawl layout, which makes records individually seekable).
 This module closes that last mile Spark-first:
 
-  read_warc(spark, path)         binaryFile scan → one mapInPandas
+  read_warc(spark, path)         binaryFile scan → one mapInArrow
                                  splitter → (url, warc_ts, html,
                                  warc_type, status) rows; response
                                  records carry the HTTP payload bytes
@@ -39,10 +39,14 @@ from __future__ import annotations
 import gzip
 import io
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from ..plans.rows import map_rows
 
 WARC_SCHEMA = T.StructType(
     [
@@ -188,31 +192,12 @@ def iter_warc_file(data: bytes) -> Iterator[dict]:
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC file(s) → one row per record. binaryFile scan (one task
-    per archive) → mapInPandas splitter; zero shuffles."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-
-    def split(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # yield per chunk of records, NOT per archive: a ~1 GB .gz
-        # member decompresses to several GB of HTML — holding every
-        # record of the file as Python dicts (plus a pandas copy)
-        # would OOM the executor on exactly the file size that makes
-        # a good task quantum. 256 records ≈ tens of MB in flight.
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        chunk = 256
-        for batch in batches:
-            rows: list[dict] = []
-            for content in batch["content"]:
-                for rec in iter_warc_file(bytes(content)):
-                    rows.append(rec)
-                    if len(rows) >= chunk:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(split, schema=WARC_SCHEMA)
+    per archive) → one mapInArrow splitter; zero shuffles. The
+    splitter yields record by record, so a ~1 GB .gz member that
+    decompresses to several GB of HTML is never held whole: one
+    output batch (256 records, tens of MB) is in flight at a time."""
+    files = spark.read.format("binaryFile").load(path).select("content")
+    return map_rows(files, iter_warc_file, WARC_SCHEMA)
 
 
 def warc_to_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -257,7 +242,9 @@ def _record_bytes(
             + body
         )
         ctype = "application/http; msgtype=response"
-    date = (warc_ts or datetime(2024, 1, 1)).strftime("%Y-%m-%dT%H:%M:%SZ")
+    ts = warc_ts or datetime(2024, 1, 1)
+    # Arrow hands an aware datetime in the session zone; the header is UTC
+    date = (ts.astimezone(timezone.utc) if ts.tzinfo else ts).strftime("%Y-%m-%dT%H:%M:%SZ")
     head = (
         "WARC/1.0\r\n"
         f"WARC-Type: {warc_type}\r\n"
@@ -292,31 +279,29 @@ def write_warc(
         f.write(out.getvalue())
 
 
-def write_warc_table(df: DataFrame, out_dir: str, gzip_members: bool = True) -> DataFrame:
-    """Distributed WARC export: each partition streams its rows into
-    its own `part-<pid>.warc(.gz)` archive — the write parallelism IS
-    the partitioning, no shuffle, no driver collect. Returns a small
-    (path, records) DataFrame; trigger it (e.g. .collect()) to run the
-    export and get the manifest. Local-FS directory (the sandbox
-    stand-in; at scale each task streams to the object store)."""
-    import os
+_MANIFEST = T.StructType(
+    [
+        T.StructField("path", T.StringType()),
+        T.StructField("records", T.LongType()),
+    ]
+)
 
-    import pandas as pd
+
+def _write_archives(
+    df: DataFrame, out_dir: str, ext: str, caller: str, record: Callable[..., bytes]
+) -> DataFrame:
+    """Each partition streams `record(*row)` for its rows into its own
+    `part-<pid>.<ext>` archive; returns the (path, records) manifest,
+    one row per non-empty partition."""
+    import os
 
     from ..fsutil import ensure_local_path
 
-    ensure_local_path(out_dir, "sources/warc.write_warc_table")
+    ensure_local_path(out_dir, caller)
     os.makedirs(out_dir, exist_ok=True)
-    ext = "warc.gz" if gzip_members else "warc"
+    manifest = to_arrow_schema(_MANIFEST)
 
-    manifest_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("records", T.LongType()),
-        ]
-    )
-
-    def dump(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def dump(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
@@ -327,27 +312,34 @@ def write_warc_table(df: DataFrame, out_dir: str, gzip_members: bool = True) -> 
             for batch in batches:
                 if f is None:
                     f = open(path, "wb")
-                for url, ts, html in zip(batch["url"], batch["warc_ts"], batch["html"]):
-                    py_ts = ts.to_pydatetime() if ts is not None and not pd.isna(ts) else None
-                    f.write(
-                        _record_bytes(
-                            url, py_ts,
-                            bytes(html) if html is not None else b"",
-                            gzip_members=gzip_members,
-                        )
-                    )
+                for row in zip(*(c.to_pylist() for c in batch.columns)):
+                    f.write(record(*row))
                     n += 1
         finally:
             if f is not None:
                 f.close()
         # empty partitions write no file and emit no manifest row
-        yield (
-            pd.DataFrame([{"path": path, "records": n}])
-            if n
-            else pd.DataFrame([], columns=["path", "records"])
-        )
+        if n:
+            yield pa.RecordBatch.from_pylist([{"path": path, "records": n}], schema=manifest)
 
-    return df.select("url", "warc_ts", "html").mapInPandas(dump, schema=manifest_schema)
+    return df.mapInArrow(dump, _MANIFEST)
+
+
+def write_warc_table(df: DataFrame, out_dir: str, gzip_members: bool = True) -> DataFrame:
+    """Distributed WARC export: each partition streams its rows into
+    its own `part-<pid>.warc(.gz)` archive — the write parallelism IS
+    the partitioning, no shuffle, no driver collect. Returns a small
+    (path, records) DataFrame; trigger it (e.g. .collect()) to run the
+    export and get the manifest. Local-FS directory (the sandbox
+    stand-in; at scale each task streams to the object store)."""
+
+    def record(url, ts, html):
+        return _record_bytes(url, ts, html, gzip_members=gzip_members)
+
+    ext = "warc.gz" if gzip_members else "warc"
+    return _write_archives(
+        df.select("url", "warc_ts", "html"), out_dir, ext, "sources/warc.write_warc_table", record
+    )
 
 
 # ------------------------------------------------------------------ WET
@@ -378,52 +370,13 @@ def write_wet_table(df: DataFrame, out_dir: str, gzip_members: bool = True) -> D
     records — the format downstream consumers of Common Crawl text
     already read. Same execution shape as write_warc_table (no
     shuffle, manifest DataFrame returned; trigger to run)."""
-    import os
 
-    import pandas as pd
-
-    from ..fsutil import ensure_local_path
-
-    ensure_local_path(out_dir, "sources/warc.write_wet_table")
-    os.makedirs(out_dir, exist_ok=True)
-    ext = "warc.wet.gz" if gzip_members else "warc.wet"
-
-    manifest_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("records", T.LongType()),
-        ]
-    )
-
-    def dump(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        path = os.path.join(out_dir, f"part-{pid:05d}.{ext}")
-        n = 0
-        f = None
-        try:
-            for batch in batches:
-                if f is None:
-                    f = open(path, "wb")
-                for url, ts, text in zip(batch["url"], batch["warc_ts"], batch["text"]):
-                    py_ts = ts.to_pydatetime() if ts is not None and not pd.isna(ts) else None
-                    f.write(
-                        _record_bytes(
-                            url, py_ts,
-                            (text or "").encode("utf-8"),
-                            warc_type="conversion",
-                            gzip_members=gzip_members,
-                        )
-                    )
-                    n += 1
-        finally:
-            if f is not None:
-                f.close()
-        yield (
-            pd.DataFrame([{"path": path, "records": n}])
-            if n
-            else pd.DataFrame([], columns=["path", "records"])
+    def record(url, ts, text):
+        return _record_bytes(
+            url, ts, (text or "").encode("utf-8"), warc_type="conversion", gzip_members=gzip_members
         )
 
-    return df.select("url", "warc_ts", "text").mapInPandas(dump, schema=manifest_schema)
+    ext = "warc.wet.gz" if gzip_members else "warc.wet"
+    return _write_archives(
+        df.select("url", "warc_ts", "text"), out_dir, ext, "sources/warc.write_wet_table", record
+    )

@@ -4,12 +4,12 @@ The reference is batch-only (SURVEY §2.11); the target corpus is a
 continuously-landing Common-Crawl-style feed, so the engine exposes
 the same per-document extraction as an incremental stream:
 
-  readStream(documents dir) → mapInPandas extract → writeStream
+  readStream(documents dir) → mapInArrow extract → writeStream
   (parquet sink + checkpointLocation)
 
 Design for scale:
   - the extraction operator is IDENTICAL to the batch path
-    (operators/extract.py) — mapInPandas is stream-compatible, so
+    (operators/extract.py) — mapInArrow is stream-compatible, so
     batch/stream parity is by construction, not by re-implementation;
   - file-source + parquet-sink + checkpoint gives exactly-once per
     input file (the streaming twin of the batch job's anti-join
@@ -43,7 +43,7 @@ def read_document_stream(
 def stream_extract(
     docs_stream: DataFrame, out_path: str, checkpoint: str, available_now: bool = False
 ):
-    """Incremental extraction: same mapInPandas operator as batch.
+    """Incremental extraction: same mapInArrow operator as batch.
 
     Returns the started StreamingQuery. No shuffle in the stream —
     stateless per-document transform, so watermarks are not needed

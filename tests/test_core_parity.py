@@ -4,10 +4,18 @@ Every scalar/operator in pdf_parser_spark.core is run side-by-side with
 the corresponding reference function on adversarial + seeded-random
 inputs; outputs must be equal to the byte (SURVEY §5 item 1).
 
-The live comparisons import the reference checkout. test_scalar_parity
-skips without it; its twin, test_scalar_frozen_cases, replays the same
-inputs against outputs frozen from this engine in
-tests/golden/core_scalar_cases.jsonl.
+The live comparisons import the reference checkout and skip without
+it. Each has a fixture twin that replays the same inputs against
+outputs frozen from this engine (which matched the reference on them):
+
+  test_scalar_parity          → test_scalar_frozen_cases
+                                (golden/core_scalar_cases.jsonl)
+  test_toc_parse_parity       → test_toc_parse_frozen_cases
+                                (golden/core_toc_cases.jsonl)
+  test_chunking_parity        → test_chunking_frozen_cases
+                                (golden/core_chunking_cases.jsonl)
+  test_match_sections_parity  → test_match_sections_frozen_cases
+                                (golden/core_match_cases.jsonl)
 """
 
 from __future__ import annotations
@@ -68,7 +76,23 @@ def _random_strings(n: int, seed: int) -> list[str]:
     ]
 
 
-SCALAR_CASES = Path(__file__).parent / "golden" / "core_scalar_cases.jsonl"
+GOLDEN = Path(__file__).parent / "golden"
+SCALAR_CASES = GOLDEN / "core_scalar_cases.jsonl"
+TOC_CASES = GOLDEN / "core_toc_cases.jsonl"
+CHUNKING_CASES = GOLDEN / "core_chunking_cases.jsonl"
+MATCH_CASES = GOLDEN / "core_match_cases.jsonl"
+NO_REFERENCE = pytest.mark.skipif(
+    not Path(REFERENCE_ROOT).exists(), reason="reference checkout unavailable"
+)
+
+
+def _frozen(path: Path) -> list:
+    return [json.loads(line) for line in path.read_text(encoding="utf-8").splitlines()]
+
+
+def _as_json(value):
+    """`value` as it reads back from a fixture line (tuples → lists)."""
+    return json.loads(json.dumps(value))
 
 
 def _scalars(s: str) -> dict:
@@ -91,13 +115,13 @@ def test_scalar_frozen_cases():
     with the ten functions' outputs frozen from this engine (which
     matched the reference on them)."""
     inputs = HANDPICKED + _random_strings(2000, seed=1)
-    cases = [json.loads(line) for line in SCALAR_CASES.read_text(encoding="utf-8").splitlines()]
+    cases = _frozen(SCALAR_CASES)
     assert [c.pop("s") for c in cases] == inputs
     for s, want in zip(inputs, cases):
         assert _scalars(s) == want, ascii(s)
 
 
-@pytest.mark.skipif(not Path(REFERENCE_ROOT).exists(), reason="reference checkout unavailable")
+@NO_REFERENCE
 def test_scalar_parity(ref):
     cleaner = ref.chunk.Cleaner()
     for s in HANDPICKED + _random_strings(2000, seed=1):
@@ -139,18 +163,37 @@ def _random_toc_lines(rng: random.Random, n: int) -> list[str]:
     return out
 
 
-def test_toc_parse_parity(ref):
+def _toc_cases():
+    """150 seeded (lines, min_dots, strip_dots) ToC inputs."""
     rng = random.Random(2)
     for _ in range(150):
         lines = _random_toc_lines(rng, rng.randint(0, 40))
         min_dots = rng.choice([0, 0, 1])
         strip_dots = rng.random() < 0.3
+        yield lines, min_dots, strip_dots
+
+
+def _toc(lines, min_dots, strip_dots):
+    return mtoc.parse_toc_lines(lines, doc_title="T", min_dots=min_dots, strip_dots=strip_dots)
+
+
+def test_toc_parse_frozen_cases():
+    """Fixture twin of test_toc_parse_parity."""
+    cases = list(_toc_cases())
+    frozen = _frozen(TOC_CASES)
+    assert len(frozen) == len(cases)
+    for case, want in zip(cases, frozen):
+        assert _as_json(_toc(*case)) == want, case
+
+
+@NO_REFERENCE
+def test_toc_parse_parity(ref):
+    for lines, min_dots, strip_dots in _toc_cases():
         expected = [
             e.model_dump()
             for e in ref.toc.parse_toc_lines(lines, doc_title="T", min_dots=min_dots, strip_dots=strip_dots)
         ]
-        got = mtoc.parse_toc_lines(lines, doc_title="T", min_dots=min_dots, strip_dots=strip_dots)
-        assert got == expected
+        assert _toc(lines, min_dots, strip_dots) == expected
 
 
 def _random_pages(rng: random.Random, n_pages: int) -> list[tuple[int, str]]:
@@ -182,34 +225,58 @@ def _random_pages(rng: random.Random, n_pages: int) -> list[tuple[int, str]]:
     return pages
 
 
-def test_chunking_parity(ref):
+def _chunking_cases():
+    """100 seeded (pages, skip_pages, ToC entry dicts) inputs."""
     rng = random.Random(3)
     for _ in range(100):
         pages = _random_pages(rng, rng.randint(1, 12))
         skip = set(rng.sample(range(1, len(pages) + 1), k=rng.randint(0, min(2, len(pages)))))
-
-        detector = ref.chunk.HeadingDetector(ref.chunk.Cleaner())
-        assert mhead.detect_headings(pages, skip_pages=skip) == detector.detect_headings(
-            pages, skip_pages=skip
-        )
-
         entries = []
         for _ in range(rng.randint(0, 6)):
             sid = ".".join(str(rng.randint(1, 9)) for _ in range(rng.randint(1, 3)))
             entries.append(
-                ref.toc.ToCEntry(
-                    doc_title="D",
-                    section_id=sid,
-                    title=rng.choice(["Introduction", "Power Rules", "Link Layer"]),
-                    page=rng.randint(1, len(pages)),
-                    level=sid.count(".") + 1,
-                    parent_id=None,
-                    full_path="x",
-                )
+                {
+                    "doc_title": "D",
+                    "section_id": sid,
+                    "title": rng.choice(["Introduction", "Power Rules", "Link Layer"]),
+                    "page": rng.randint(1, len(pages)),
+                    "level": sid.count(".") + 1,
+                    "parent_id": None,
+                    "full_path": "x",
+                }
             )
-        expected = ref.chunk.build_chunks_from_toc(pages, entries, skip_pages=skip)
-        got = mchunk.build_chunks_from_toc(pages, [e.model_dump() for e in entries], skip_pages=skip)
-        assert [mchunk.to_export_record(c) for c in got] == [
+        yield pages, skip, entries
+
+
+def _chunk_exports(pages, skip, entries):
+    return [mchunk.to_export_record(c) for c in mchunk.build_chunks_from_toc(pages, entries, skip_pages=skip)]
+
+
+def test_chunking_frozen_cases():
+    """Fixture twin of test_chunking_parity: detect_headings and the
+    build_chunks_from_toc export records."""
+    cases = list(_chunking_cases())
+    frozen = _frozen(CHUNKING_CASES)
+    assert len(frozen) == len(cases)
+    for (pages, skip, entries), want in zip(cases, frozen):
+        got = {
+            "headings": mhead.detect_headings(pages, skip_pages=skip),
+            "chunks": _chunk_exports(pages, skip, entries),
+        }
+        assert _as_json(got) == want, (pages, skip, entries)
+
+
+@NO_REFERENCE
+def test_chunking_parity(ref):
+    for pages, skip, entries in _chunking_cases():
+        detector = ref.chunk.HeadingDetector(ref.chunk.Cleaner())
+        assert mhead.detect_headings(pages, skip_pages=skip) == detector.detect_headings(
+            pages, skip_pages=skip
+        )
+        expected = ref.chunk.build_chunks_from_toc(
+            pages, [ref.toc.ToCEntry(**e) for e in entries], skip_pages=skip
+        )
+        assert _chunk_exports(pages, skip, entries) == [
             {
                 "section_path": c.section_path,
                 "start_heading": f"{c.section_id} {c.title}",
@@ -222,11 +289,9 @@ def test_chunking_parity(ref):
         ]
 
 
-def test_match_sections_parity(ref, tmp_path):
-    import json
-
+def _match_cases():
+    """60 seeded (ToC records, raw chunk records) inputs."""
     rng = random.Random(4)
-    validator = ref.validate.Validator()
     titles = [
         "Introduction",
         "Power Rules",
@@ -235,7 +300,7 @@ def test_match_sections_parity(ref, tmp_path):
         "1.2 Numbered Title",
         "Overview 12 . . . 34",
     ]
-    for trial in range(60):
+    for _ in range(60):
         toc = []
         for _ in range(rng.randint(0, 20)):
             sid = ".".join(str(rng.randint(1, 12)) for _ in range(rng.randint(1, 3)))
@@ -268,15 +333,31 @@ def test_match_sections_parity(ref, tmp_path):
                     "page_range": [e["page"], e["page"] + 1],
                 }
             )
+        yield toc, chunks
+
+
+def _match(toc, chunks):
+    return mmatch.match_sections(
+        mmatch.load_toc_records(toc), [mmatch.coerce_chunk_record(c) for c in chunks]
+    )
+
+
+def test_match_sections_frozen_cases():
+    """Fixture twin of test_match_sections_parity."""
+    cases = list(_match_cases())
+    frozen = _frozen(MATCH_CASES)
+    assert len(frozen) == len(cases)
+    for case, want in zip(cases, frozen):
+        assert _as_json(_match(*case)) == want, case
+
+
+@NO_REFERENCE
+def test_match_sections_parity(ref, tmp_path):
+    validator = ref.validate.Validator()
+    for trial, (toc, chunks) in enumerate(_match_cases()):
         tp = tmp_path / f"t{trial}.jsonl"
         cp = tmp_path / f"c{trial}.jsonl"
         tp.write_text("\n".join(json.dumps(x) for x in toc))
         cp.write_text("\n".join(json.dumps(x) for x in chunks))
-        ref_toc_loaded = validator.load_toc(str(tp))
-        ref_chunks_loaded = validator.load_chunks(str(cp))
-        expected = validator.match_sections(ref_toc_loaded, ref_chunks_loaded)
-
-        got = mmatch.match_sections(
-            mmatch.load_toc_records(toc), [mmatch.coerce_chunk_record(c) for c in chunks]
-        )
-        assert got == expected
+        expected = validator.match_sections(validator.load_toc(str(tp)), validator.load_chunks(str(cp)))
+        assert _match(toc, chunks) == expected

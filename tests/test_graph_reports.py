@@ -115,3 +115,31 @@ def test_lenient_jsonl_reader_accounts_corrupt_lines(spark, tmp_path):
     if os.path.exists(ref):
         g2, b2 = jl.read_toc_jsonl(spark, ref)
         assert g2.count() == 299 and b2.count() == 0
+
+
+def test_coerce_chunks_column_reads_non_identifier_names(spark):
+    """Kept and value columns are read by name, so a name with a space
+    or a leading underscore (which itertuples would rename) works."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from pdf_parser_spark.core.matching import coerce_chunk_record
+    from pdf_parser_spark.sources import jsonl as jl
+
+    rec = json.dumps(
+        {
+            "start_heading": "4.2 deep title",
+            "page_range": [2, 5],
+            "content": "body",
+            "tables": ["Table 3-2. Foo"],
+            "figures": [],
+        }
+    )
+    want = coerce_chunk_record(json.loads(rec))
+    assert want["section_id"] == "4.2" and want["tables"] == ["3-2"]
+    for key, col in (("doc id", "value"), ("url", "_raw")):
+        schema = T.StructType([T.StructField(key, T.StringType()), T.StructField(col, T.StringType())])
+        df = spark.createDataFrame([("d1", rec)], schema)
+        rows = [r.asDict() for r in jl.coerce_chunks_column(df, col, keep=[key]).collect()]
+        assert rows == [{key: "d1", **want}], (key, col)

@@ -73,7 +73,80 @@ def test_column_pruning_extraction_path(spark):
 
     docs = synthetic_documents(spark, 5, seed=42)
     plan = ox.extract_documents(docs)._jdf.queryExecution().optimizedPlan().toString()
-    assert "html" not in plan.split("MapInPandas")[0], "html must be pruned before the UDF"
+    assert "MapInArrow" in plan, plan
+    assert "html" not in plan.split("MapInArrow")[0], "html must be pruned before the UDF"
+
+
+def _docs(spark, tmp_path):
+    from pdf_parser_spark.sources.corpus import synthetic_documents
+
+    return synthetic_documents(spark, 3, seed=42)
+
+
+def _media(spark, tmp_path):
+    from pdf_parser_spark.operators.multimodal import MEDIA_SCHEMA
+
+    return spark.createDataFrame([("u", "image", b"FIMG", "image/x-fimg")], MEDIA_SCHEMA)
+
+
+def _pdfs(spark, tmp_path):
+    return spark.createDataFrame([("u", b"%PDF-1.4")], "url string, pdf binary")
+
+
+def _warc_file(spark, tmp_path):
+    from pdf_parser_spark.sources import warc
+
+    path = str(tmp_path / "a.warc.gz")
+    warc.write_warc(path, [{"url": "http://a/", "warc_ts": None, "html": b"<p>x</p>"}])
+    return path
+
+
+def _row_operator(name):
+    """Every per-row Python operator, called on a tiny input."""
+    from pdf_parser_spark.operators import extract as ox, html_extract as hx, multimodal as mm
+    from pdf_parser_spark.sources import corpus, jsonl, warc
+
+    return {
+        "extract_documents": lambda s, t: ox.extract_documents(_docs(s, t)),
+        "pdf_pages_table": lambda s, t: ox.pdf_pages_table(_pdfs(s, t)),
+        "extract_documents_from_pdf": lambda s, t: ox.extract_documents_from_pdf(_pdfs(s, t)),
+        "html_blocks": lambda s, t: hx.html_blocks(_docs(s, t)),
+        "html_main_text": lambda s, t: hx.html_main_text(_docs(s, t)),
+        "html_content_spans": lambda s, t: hx.html_content_spans(_docs(s, t)),
+        "html_metadata": lambda s, t: hx.html_metadata(_docs(s, t)),
+        "media_metadata": lambda s, t: mm.media_metadata(_media(s, t)),
+        "resize_images": lambda s, t: mm.resize_images(_media(s, t), 2, 2),
+        "sample_frames": lambda s, t: mm.sample_frames(_media(s, t)),
+        "media_embeddings": lambda s, t: mm.media_embeddings(_media(s, t)),
+        "image_embeddings": lambda s, t: mm.image_embeddings(_media(s, t)),
+        "read_warc": lambda s, t: warc.read_warc(s, _warc_file(s, t)),
+        "write_warc_table": lambda s, t: warc.write_warc_table(_docs(s, t), str(t / "w")),
+        "write_wet_table": lambda s, t: warc.write_wet_table(_docs(s, t), str(t / "e")),
+        "synthetic_documents_distributed": lambda s, t: corpus.synthetic_documents_distributed(
+            s, 3, partitions=2
+        ),
+        "coerce_chunks_column": lambda s, t: jsonl.coerce_chunks_column(
+            s.createDataFrame([("u", "{}")], "url string, value string"), "value", keep=["url"]
+        ),
+    }[name]
+
+
+ROW_OPERATORS = [
+    "extract_documents", "pdf_pages_table", "extract_documents_from_pdf",
+    "html_blocks", "html_main_text", "html_content_spans", "html_metadata",
+    "media_metadata", "resize_images", "sample_frames", "media_embeddings", "image_embeddings",
+    "read_warc", "write_warc_table", "write_wet_table",
+    "synthetic_documents_distributed", "coerce_chunks_column",
+]
+
+
+@pytest.mark.parametrize("name", ROW_OPERATORS)
+def test_row_operators_cross_one_arrow_boundary(spark, tmp_path, name):
+    """Per-row Python runs as one mapInArrow; no pandas step remains."""
+    df = _row_operator(name)(spark, tmp_path)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
 
 
 def test_salted_repartition_count_survives_aqe(spark):

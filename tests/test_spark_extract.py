@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from pdf_parser_spark.core.pipeline import extract_document
 from pdf_parser_spark.operators import extract as ox
-from pdf_parser_spark.sources.corpus import synthetic_documents
+from pdf_parser_spark.sources.corpus import synthetic_documents, synthetic_documents_distributed
 from pdf_parser_spark.sources.synth import generate_corpus
 
 N_DOCS = 40
@@ -57,6 +57,17 @@ def test_extract_plan_prunes_columns(spark, tmp_path):
     assert "url" in read_schema[0] and "text" in read_schema[0], read_schema[0]
 
 
+def test_distributed_corpus_equals_driver_corpus(spark):
+    """synthetic_documents_distributed builds each doc on the executors
+    from (doc_id, seed): the same rows as the driver-side corpus,
+    timestamps and html bytes included (1-in-40 mega-docs among them)."""
+    cols = ["url", "warc_ts", "html", "text", "lang"]
+    driver = synthetic_documents(spark, 200, seed=7).select(*cols).collect()
+    dist = synthetic_documents_distributed(spark, 200, seed=7, partitions=4).select(*cols).collect()
+    assert sum(len(r["text"] or "") > 20_000 for r in driver) >= 3
+    assert sorted(map(tuple, dist)) == sorted(map(tuple, driver))
+
+
 def test_validate_distributed_matches_inline_validation(spark):
     """The cogrouped table-level validator must reproduce the one-pass
     extractor's per-document ValidationReport exactly (same core, same
@@ -64,7 +75,7 @@ def test_validate_distributed_matches_inline_validation(spark):
     from pyspark.sql import functions as F
     from pdf_parser_spark.operators import extract as ox
     from pdf_parser_spark.operators.validate_dist import validate_distributed
-    from pdf_parser_spark.sources.corpus import synthetic_documents
+    from pdf_parser_spark.sources.corpus import synthetic_documents, synthetic_documents_distributed
 
     docs = synthetic_documents(spark, 30, seed=42)
     extracted = ox.extract_documents(docs).cache()
@@ -95,7 +106,7 @@ def test_extract_from_html_equals_text_path(spark):
     the same toc/chunks/validation as the pre-extracted text path on
     well-formed pages (the stripper is byte-identical there)."""
     from pdf_parser_spark.operators import extract as ox
-    from pdf_parser_spark.sources.corpus import synthetic_documents
+    from pdf_parser_spark.sources.corpus import synthetic_documents, synthetic_documents_distributed
 
     docs = synthetic_documents(spark, 25, seed=42).where("text != ''")
     via_text = ox.extract_documents(docs)

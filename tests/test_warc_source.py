@@ -257,3 +257,23 @@ def test_warc_date_fractional_and_utc_instant():
     plain = _parse_warc_date("2024-03-01T12:30:00Z")
     assert plain is not None and plain.tzinfo == timezone.utc
     assert _parse_warc_date("not a date") is None
+
+
+def test_warc_export_date_is_utc_in_any_session_zone(spark, tmp_path):
+    """WARC-Date is written as the UTC instant whatever
+    spark.sql.session.timeZone is: the export sees session-zone
+    timestamps and must not print their wall clock with a 'Z'."""
+    from datetime import timezone
+
+    docs = spark.createDataFrame(
+        [("https://a.example/", datetime(2024, 3, 1, 12, 30, tzinfo=timezone.utc), b"<p>x</p>")],
+        "url string, warc_ts timestamp, html binary",
+    )
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        W.write_warc_table(docs, str(tmp_path / "w")).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    (path,) = (tmp_path / "w").glob("*.warc.gz")
+    assert b"WARC-Date: 2024-03-01T12:30:00Z\r\n" in gzip.decompress(path.read_bytes())

@@ -2,7 +2,7 @@
 executors).
 
 Runs the identical end-to-end extraction job — parquet scan → salted
-repartition → mapInPandas extract → noop sink — in two COLD processes
+repartition → mapInArrow extract → noop sink — in two COLD processes
 at local[8] and local[32] over the same on-disk corpus, measures the
 steady-state (second) run, and reports throughput at both plus the
 scaling efficiency  eff = thr_32 / (4 · thr_8).
@@ -105,7 +105,7 @@ def main():
         f"""# BENCH baseline — extraction throughput & scaling
 
 End-to-end job: parquet scan -> salted repartition (xxhash64(url, salt))
--> mapInPandas per-document extraction (toc + chunks + validation +
+-> mapInArrow per-document extraction (toc + chunks + validation +
 metrics, byte-parity core) -> noop sink. Same corpus, two cold
 processes; steady-state (min of runs 2-3) timed, run 1 discarded as
 JVM/codegen/python-worker warmup. Sandbox stand-in for N vs 4N
