@@ -38,7 +38,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pdf_parser_spark.plans.session import get_spark  # noqa: E402
+from pdf_parser_spark.plans.session import CPUS_HELP, get_spark  # noqa: E402
 from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 
 
@@ -129,7 +129,7 @@ def main() -> None:
     ap.add_argument("--path", required=True)
     ap.add_argument("--key", default=None)
     ap.add_argument("--target-mb", type=int, default=128)
-    ap.add_argument("--cpus", type=int, default=None)
+    ap.add_argument("--cpus", type=int, default=None, help=CPUS_HELP)
     args = ap.parse_args()
     spark = get_spark(app_name="compact", cpus=args.cpus)
     print(json.dumps(run(args.path, key=args.key, target_mb=args.target_mb, spark=spark)))

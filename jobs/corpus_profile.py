@@ -3,13 +3,13 @@
     spark-submit --py-files pdf_parser_spark.zip jobs/corpus_profile.py \
         --input  /data/documents.parquet \
         --outdir /data/profile \
-        [--resume] [--cpus 32]
+        [--cpus 32]
 
 One-pass corpus statistics via the mergeable-sketch family
 (operators/sketches.py) — the monitoring side of a 100 TB pipeline:
 
   documents(url, warc_ts, html, text, lang)
-    → anti-join already-profiled urls        (resume checkpoint)
+    → anti-join already-profiled urls        (the checkpoint; every run)
     → ONE cached projection of the new batch (url, lang, fp, text)
     → four sketches from that single scan:
         hll_distinct  (group, idx, rho)      distinct fingerprints/lang
@@ -21,11 +21,13 @@ One-pass corpus statistics via the mergeable-sketch family
     → append-commit the batch's urls to
       seen_urls                              (the checkpoint)
 
-The point of mergeable sketches is the resume path: profiling a new
-batch costs one scan of THE BATCH — the existing corpus is never
-re-read, because merge(stored, batch) == rebuild(full) exactly (all
-four sketches are deterministic; tests/test_profile_job.py asserts
-table-level equality). Sketch tables are bounded at |groups| * m rows
+Every run is incremental: there is no resume flag, because the
+anti-join against seen_urls always runs. That is the point of
+mergeable sketches: profiling a new batch costs one scan of THE
+BATCH — the existing corpus is never re-read, because
+merge(stored, batch) == rebuild(full) exactly (all four sketches are
+deterministic; tests/test_profile_job.py asserts table-level
+equality). Sketch tables are bounded at |groups| * m rows
 at ANY corpus size, so the merged state is always broadcastable and
 the overwrite is O(sketch), not O(corpus).
 
@@ -53,7 +55,7 @@ A raw parquet read of a sketch table sees every past version; read it
 through `sn.read`.
 
 Sketch parameters are pinned in <outdir>/_profile_meta.json on the
-first run; a resume with different parameters ABORTS (registers built
+first run; a later run with different parameters ABORTS (registers built
 at p=12 cannot merge with p=13).
 
 Generalizes the reference's per-run metrics report (SURVEY §2:
@@ -77,7 +79,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from pdf_parser_spark.functions.text_metrics import fingerprint, word_array  # noqa: E402
 from pdf_parser_spark.operators import sketches as sk  # noqa: E402
-from pdf_parser_spark.plans.session import get_spark  # noqa: E402
+from pdf_parser_spark.plans.session import CPUS_HELP, get_spark  # noqa: E402
 from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 from pdf_parser_spark.sources.corpus import read_documents  # noqa: E402
 
@@ -199,7 +201,6 @@ def run(
     input_path: str,
     outdir: str,
     spark=None,
-    resume: bool = False,
     params: dict | None = None,
 ) -> dict:
     from pdf_parser_spark.fsutil import ensure_local_path
@@ -220,16 +221,12 @@ def run(
     n_input = docs.count()
 
     seen = sn.read_or_none(spark, seen_path)
-    # The anti-join is UNCONDITIONAL whenever seen_urls exists (ADVICE
-    # r4): re-running on an existing outdir WITHOUT --resume used to
-    # skip it, merging the same documents again under a fresh batch_id
-    # and silently double-counting every SUM sketch — the exact
-    # corruption the two-phase commit exists to prevent, reachable by
-    # plain operator error. The resume flag now only changes intent
-    # (incremental continuation vs. accident); dedup safety never
-    # depends on it. This also covers the crash-recovery case: a
-    # recovered batch's docs are in seen_urls, so its natural
-    # re-invocation (same command line) can't merge them twice.
+    # The anti-join runs whenever seen_urls exists (ADVICE r4): a run
+    # that skipped it would merge the same documents again under a
+    # fresh batch_id and silently double-count every SUM sketch — the
+    # corruption the two-phase commit exists to prevent. This also
+    # covers crash recovery: a recovered batch's docs are in
+    # seen_urls, so re-running the same command can't merge them twice.
     if seen is not None:
         docs = docs.join(seen.select("url").distinct(), "url", "left_anti")
 
@@ -306,11 +303,10 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
     ap.add_argument("--outdir", required=True)
-    ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--cpus", type=int, default=None)
+    ap.add_argument("--cpus", type=int, default=None, help=CPUS_HELP)
     args = ap.parse_args()
     spark = get_spark(app_name="profile", cpus=args.cpus)
-    print(json.dumps(run(args.input, args.outdir, spark=spark, resume=args.resume)))
+    print(json.dumps(run(args.input, args.outdir, spark=spark)))
 
 
 if __name__ == "__main__":

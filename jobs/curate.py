@@ -83,7 +83,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from pdf_parser_spark.operators import dedup as dd  # noqa: E402
 from pdf_parser_spark.operators import webtext_filters as wf  # noqa: E402
-from pdf_parser_spark.plans.session import get_spark  # noqa: E402
+from pdf_parser_spark.plans.session import CPUS_HELP, get_spark  # noqa: E402
 from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 from pdf_parser_spark.sources.corpus import read_documents  # noqa: E402
 
@@ -483,7 +483,7 @@ def main() -> None:
         "reason host_cap). Compiles to Catalyst's two-phase "
         "WindowGroupLimit — mega-hosts never serialize into one task.",
     )
-    ap.add_argument("--cpus", type=int, default=None)
+    ap.add_argument("--cpus", type=int, default=None, help=CPUS_HELP)
     args = ap.parse_args()
     spark = get_spark(app_name="curate", cpus=args.cpus)
     print(

@@ -49,7 +49,7 @@ from pyspark.sql import Observation, functions as F  # noqa: E402
 
 from pdf_parser_spark.core.pipeline import STATUSES  # noqa: E402
 from pdf_parser_spark.operators import extract as ox  # noqa: E402
-from pdf_parser_spark.plans.session import get_spark  # noqa: E402
+from pdf_parser_spark.plans.session import CPUS_HELP, get_spark  # noqa: E402
 from pdf_parser_spark.sinks import snapshots as sn  # noqa: E402
 from pdf_parser_spark.sources.corpus import read_documents  # noqa: E402
 
@@ -150,7 +150,7 @@ def main() -> None:
         "would otherwise size it by shuffle bytes and merge it into fewer, "
         "longer tasks",
     )
-    ap.add_argument("--cpus", type=int, default=None)
+    ap.add_argument("--cpus", type=int, default=None, help=CPUS_HELP)
     ap.add_argument(
         "--input-format", choices=("parquet", "warc"), default="parquet",
         help="warc: read Common Crawl-style .warc/.warc.gz archives "

@@ -30,6 +30,8 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> None:
+    from .plans.session import CPUS_HELP, get_spark
+
     ap = argparse.ArgumentParser(prog="pdf_parser_spark", description=__doc__)
     ap.add_argument("command", choices=[
         "extract", "toc", "chunk", "validate", "metrics", "report",
@@ -40,7 +42,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--chunks")
     ap.add_argument("--out")
     ap.add_argument("--outdir")
-    ap.add_argument("--cpus", type=int, default=None)
+    ap.add_argument("--cpus", type=int, default=None, help=CPUS_HELP)
     ap.add_argument("--resume", action="store_true")
     # reference run.py / run.pyc knobs (--min-dots, --strip-dot-leaders,
     # --fuzzy-threshold, --prefer-section-id), corpus-level here
@@ -50,9 +52,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--prefer-section-id", action="store_true", default=True)
     ap.add_argument("--no-prefer-section-id", dest="prefer_section_id", action="store_false")
     args = ap.parse_args(argv)
-
-    from .plans.session import get_spark
-
     spark = get_spark(app_name=f"pps-{args.command}", cpus=args.cpus)
 
     if args.command == "extract":

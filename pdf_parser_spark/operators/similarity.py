@@ -8,11 +8,16 @@
   ann_topk            bucketed approximate top-k: probe only vectors
                       sharing the query's bucket (multi-probe via
                       Hamming-1 neighbors optional)
+  kmeans_centroids    deterministic Lloyd's k-means coarse quantizer
+  ivf_assign          nearest-centroid IVF list per row
+  ivf_topk            IVF approximate top-k: probe the nearest lists
 
 Scale notes: brute force is O(n·d) per query — fine as a batch scorer
 (one pass over 10^12 rows, fully parallel), wrong for interactive
-lookups; rhp bucketing cuts the probe set by ~2^bits. All math is
-double-precision native exprs (zip_with/aggregate), no UDFs.
+lookups; rhp bucketing cuts the probe set by ~2^bits. Cosine and LSH
+math is double-precision native exprs (zip_with/aggregate). IVF
+assignment scores k centroids per row, so it is the one Python step:
+an Arrow-batched numpy kernel whose plan stays O(1) in k.
 """
 
 from __future__ import annotations
@@ -170,7 +175,7 @@ def kmeans_centroids(
     """Deterministic Lloyd's k-means coarse quantizer for IVF.
 
     Init = the k rows with smallest keys (deterministic, no RNG).
-    Each iteration is two DataFrame passes: argmin-assign, then
+    Each iteration is two DataFrame passes: `ivf_assign`, then
     posexplode + avg to recompute means. Only the k×dim centroid
     matrix ever reaches the driver.
 
@@ -179,14 +184,7 @@ def kmeans_centroids(
     RNG, stable across runs/partitionings) keeps ~fraction of the
     rows for EVERY training pass — at 10^12 rows train on 1e-6 of the
     corpus and assign the full corpus once with the result via
-    `ivf_assign_table`. Same code path, now actually invocable.
-
-    Assignment inside the loop uses the unrolled literal argmin for
-    k ≤ 64 (whole-stage codegen) and the O(1)-expression table path
-    beyond (the literal tree would blow the JVM 64 KB method limit).
-    The two differ in form only — squared-distance vs the dot
-    identity are argmin-equivalent up to float ties on identical
-    scores, and training is heuristic either way.
+    `ivf_assign`.
 
     Driver-loop bound (VERDICT r2): exactly `iters` synchronous
     rounds — collect volume is iters × k × dim floats total (640
@@ -203,14 +201,10 @@ def kmeans_centroids(
         train = emb.where(F.pmod(F.xxhash64(F.col(key_col)), F.lit(m)) < F.lit(gate))
     seed_rows = train.orderBy(key_col).limit(k).select(vec_col).collect()
     cents = [[float(x) for x in r[vec_col]] for r in seed_rows]
-    spark = emb.sparkSession
     for _ in range(iters):
-        if len(cents) <= 64:
-            assigned = train.withColumn("list_id", _nearest_centroid(F.col(vec_col), cents))
-        else:
-            assigned = ivf_assign_table(train, centroids_table(spark, cents), vec_col)
         new = (
-            assigned.select("list_id", F.posexplode(vec_col).alias("pos", "v"))
+            ivf_assign(train, cents, vec_col)
+            .select("list_id", F.posexplode(vec_col).alias("pos", "v"))
             .groupBy("list_id", "pos")
             .agg(F.avg(F.col("v").cast("double")).alias("m"))
             .groupBy("list_id")
@@ -223,219 +217,92 @@ def kmeans_centroids(
     return cents
 
 
-def _nearest_centroid(vec, cents: list[list[float]]):
-    """Argmin-distance expression over broadcast centroid literals."""
-    best_id = F.lit(0)
-    best_d = None
-    for j, c in enumerate(cents):
-        cl = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(vec, cl, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        if best_d is None:
-            best_d = d
-        else:
-            best_id = F.when(d < best_d, F.lit(j)).otherwise(best_id)
-            best_d = F.least(d, best_d)
-    return best_id
-
-
-def ivf_assign(
-    emb: DataFrame, cents: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Attach the IVF list id (nearest coarse centroid). At scale this
-    column is the partition/cluster key of the stored index."""
-    return emb.withColumn("list_id", _nearest_centroid(F.col(vec_col), cents))
-
-
-def ivf_scores_dot(vec, cents: list[list[float]]) -> list:
-    """Per-centroid scores using the dot-product identity
-    ||v-c||² = ||v||² - 2·v·c + ||c||² with the ||v||² term dropped
-    (argmin-invariant): score_j = -2·v·c_j + ||c_j||². Cheaper than
-    the squared-difference fold (reuses plain dots) and — because
-    ||c_j||² is a PYTHON-computed literal and v·c_j is the same
-    fold/list_dot_product pair q46 proved bit-equal — replayable in an
-    ANSI oracle with identical IEEE results (q66)."""
-    scores = []
-    for c in cents:
-        cl = F.array(*[F.lit(float(x)) for x in c])
-        c2 = 0.0
-        for x in c:
-            c2 += float(x) * float(x)
-        scores.append(F.lit(-2.0) * _dot(vec, cl) + F.lit(c2))
-    return scores
-
-
-def ivf_assign_dot(
-    emb: DataFrame, cents: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """ivf_assign with the oracle-parity scoring form; ties go to the
-    LOWEST centroid index (strict-improvement chain, same rule the
-    SQL CASE chain encodes).
-
-    Expression size is O(k·dim) literals — codegen-friendly at the
-    k≤64 coarse quantizers it's used with, but past that the unrolled
-    tree approaches the JVM 64 KB method limit (silent interpreted
-    fallback) and eventually plan-build cost itself. For large k use
-    `ivf_assign_table` (VERDICT r4 #1): same scoring, O(1) expression
-    size, centroids as data."""
-    scores = ivf_scores_dot(F.col(vec_col), cents)
-    best_id, best_s = F.lit(0), scores[0]
-    for j in range(1, len(scores)):
-        best_id = F.when(scores[j] < best_s, F.lit(j)).otherwise(best_id)
-        best_s = F.least(scores[j], best_s)
-    return emb.withColumn("list_id", best_id)
-
-
 def centroids_table(spark, cents: list[list[float]]) -> DataFrame:
     """Materialize a Python centroid matrix as the (list_id, centroid)
-    table `ivf_assign_table` consumes — the hand-off between
-    `kmeans_centroids` (or any external trainer) and the scale
-    assignment path."""
+    table `ivf_assign` also accepts — the hand-off between
+    `kmeans_centroids` (or any external trainer) and the assignment."""
     rows = [(j, [float(x) for x in c]) for j, c in enumerate(cents)]
     return spark.createDataFrame(rows, "list_id int, centroid array<double>")
 
 
-def ivf_assign_table(
-    emb: DataFrame,
-    cents_df: DataFrame,
-    vec_col: str = "embedding",
-    cent_id: str = "list_id",
-    cent_vec: str = "centroid",
+def ivf_assign(
+    emb: DataFrame, cents: "list[list[float]] | DataFrame", vec_col: str = "embedding"
 ) -> DataFrame:
-    """IVF assignment with centroids supplied AS DATA — the scale path
-    for large k (VERDICT r4 #1).
+    """Attach `list_id`, the IVF list (nearest coarse centroid) of each
+    row's vector. At scale this column is the partition/cluster key of
+    the stored index.
 
-    `ivf_assign_dot` inlines k×dim literals into the plan: fine for a
-    k≤64 coarse quantizer, fatal for the k≈10⁴–10⁵ a 100 TB SemDeDup
-    needs (the unrolled argmin blows the JVM 64 KB codegen method
-    limit, then driver plan-build itself). Here the k-row centroid
-    table is collapsed to ONE row holding an ordered array of
-    (j, c, ||c||²) structs, broadcast (1-row BroadcastNestedLoopJoin,
-    the repo's standard tiny-side idiom), and the argmin runs as TWO
-    higher-order functions whose expression size is O(1) in k — the
-    loop over centroids is data-driven, not unrolled. No shuffle of
-    `emb`, no groupBy-and-join-back.
+    `cents` is a centroid matrix (list ids 0..k-1) or a (list_id,
+    centroid) table, collected on the driver: it holds k×dim floats.
+    The matrix and each ‖c‖² go to the executors once, as a broadcast;
+    the assignment is one mapInArrow of numpy blocks of 512 centroids,
+    so the plan is O(1) in k and memory per batch is bounded.
 
-    Bitwise-identical to `ivf_assign_dot` on the same centroid values:
-    score_j = -2·(fold dot v·c_j) + ||c_j||² with the same sequential
-    fold order per (row, centroid), ||c_j||² itself a left-to-right
-    fold (IEEE-equal to the Python sum the literal path inlines), and
-    the same strict-improvement tie rule (lowest j wins). Proven by
-    tests/test_plans.py (k=4096 plan shape) and the q87 driver oracle
-    (same SQL as q86, table-assigned Spark side).
-    """
-    cv = F.transform(F.col(cent_vec), lambda x: x.cast("double"))
-    packed = cents_df.select(
-        F.struct(
-            F.col(cent_id).cast("int").alias("j"),
-            cv.alias("c"),
-            F.aggregate(
-                F.col(cent_vec), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-            ).alias("c2"),
-        ).alias("_ct")
-    ).agg(F.array_sort(F.collect_list("_ct")).alias("_cents"))
-    joined = emb.crossJoin(F.broadcast(packed))
-    scored = F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            c["j"].alias("j"),
-            (F.lit(-2.0) * _dot(F.col(vec_col), c["c"]) + c["c2"]).alias("s"),
-        ),
-    )
-    best = F.aggregate(
-        scored,
-        F.struct(F.lit(-1).cast("int").alias("j"), F.lit(float("inf")).alias("s")),
-        lambda acc, x: F.when(x["s"] < acc["s"], x).otherwise(acc),
-    )
-    return joined.withColumn("list_id", best["j"]).drop("_cents")
-
-
-def ivf_assign_pandas(
-    emb: DataFrame,
-    cents,
-    vec_col: str = "embedding",
-    cent_id: str = "list_id",
-    cent_vec: str = "centroid",
-    block: int = 512,
-) -> DataFrame:
-    """IVF assignment as a vectorized pandas UDF over a broadcast
-    centroid matrix — the THROUGHPUT path for very large k.
-
-    `ivf_assign_table` keeps the PLAN O(1) in k, but its higher-order
-    functions evaluate interpreted per element: k×dim scalar ops per
-    row. Here the same math runs as numpy matrix blocks (Arrow-batched
-    mapInPandas, centroid matrix shipped once per executor via a Spark
-    broadcast variable), typically two orders of magnitude faster at
-    k≥10³.
-
-    BITWISE-identical to `ivf_assign_table`/`ivf_assign_dot`, not just
-    argmin-equivalent: the dot accumulates per-DIMENSION
-    (`acc += V[:, d] · C[:, d]`), which performs the adds per
-    (row, centroid) in exactly the fold's order; ||c||² accumulates
-    the same way; scores are `-2·dot + c2` with identical float64
-    ops; ties resolve to the lowest centroid id (np.argmin's
-    first-minimum within a block + strict `<` improvement across
-    blocks). Proven by tests comparing list_ids against both other
-    paths. `block` bounds the (batch_rows × block) score matrix, so
-    memory is independent of k.
-
-    `cents` is a (list_id, centroid) DataFrame (collected driver-side:
-    k×dim floats, which the trainer already held) or a Python matrix.
+    Scoring is the dot-product identity with the ‖v‖² term dropped
+    (argmin-invariant): score_j = -2·v·c_j + ‖c_j‖². The dot and ‖c‖²
+    accumulate per dimension in float64, which is the order of a
+    left-to-right SQL fold, so the scores are IEEE-equal to DuckDB's
+    `list_dot_product` replay (the q66/q86/q87 oracles). Ties go to
+    the lowest centroid position. A NULL vector, one of the wrong
+    width, or one whose every score is NaN (as a NULL element makes
+    them) gets a NULL `list_id`.
     """
     import numpy as np
 
     from pyspark.sql import types as T
 
     if isinstance(cents, DataFrame):
-        rows = cents.orderBy(cent_id).collect()
-        ids = np.array([r[cent_id] for r in rows], dtype=np.int64)
-        mat = np.array([[float(x) for x in r[cent_vec]] for r in rows], dtype=np.float64)
+        rows = cents.orderBy("list_id").collect()
+        ids = [r["list_id"] for r in rows]
+        cents = [r["centroid"] for r in rows]
     else:
-        ids = np.arange(len(cents), dtype=np.int64)
-        mat = np.array(cents, dtype=np.float64)
-    k, dim = mat.shape
-    c2 = np.zeros(k)
-    for d in range(dim):  # sequential per-dim adds: the fold's order
+        ids = range(len(cents))
+    dim = len(cents[0]) if len(cents) else 0
+    mat = np.array(cents, dtype=np.float64).reshape(len(cents), dim)
+    c2 = np.zeros(len(cents))
+    for d in range(dim):  # sequential per-dimension adds: the fold's order
         c2 += mat[:, d] * mat[:, d]
-    bc = emb.sparkSession.sparkContext.broadcast((ids, mat, c2))
-    out_schema = T.StructType(
-        [f for f in emb.schema.fields] + [T.StructField("list_id", T.IntegerType())]
-    )
+    bc = emb.sparkSession.sparkContext.broadcast((np.array(ids, dtype=np.int32), mat, c2))
+    schema = T.StructType(emb.schema.fields + [T.StructField("list_id", T.IntegerType())])
 
+    # numpy and pyarrow only: the closure must unpickle in a worker
+    # that has not been shipped this package
     def assign(batches):
-        import numpy as np  # noqa: PLC0415 (worker-side)
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         ids_, mat_, c2_ = bc.value
-        kk, dd = mat_.shape
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                out = pdf.copy()
-                out["list_id"] = np.array([], dtype="int32")
-                yield out
-                continue
-            v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+        k, dim_ = mat_.shape
+        for batch in batches:
+            col = batch.column(vec_col)
+            ok = pc.fill_null(pc.equal(pc.list_value_length(col), dim_), False)
+            vecs = col.filter(ok)
+            n = len(vecs)
+            v = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+            v = v.reshape(n, dim_)
             best_s = np.full(n, np.inf)
-            best_j = np.full(n, -1, dtype=np.int64)
-            for lo in range(0, kk, block):
-                hi = min(kk, lo + block)
-                acc = np.zeros((n, hi - lo))
-                for d in range(dd):
-                    acc += v[:, d : d + 1] * mat_[lo:hi, d][None, :]
-                s = -2.0 * acc + c2_[lo:hi][None, :]
-                jloc = np.argmin(s, axis=1)
-                sloc = s[np.arange(n), jloc]
-                upd = sloc < best_s
-                best_s[upd] = sloc[upd]
-                best_j[upd] = ids_[lo + jloc[upd]]
-            out = pdf.copy()
-            out["list_id"] = best_j.astype("int32")
-            yield out
+            best_j = np.full(n, -1)
+            for lo in range(0, k, 512):
+                c = mat_[lo : lo + 512]
+                acc = np.zeros((n, len(c)))
+                for d in range(dim_):
+                    acc += v[:, d : d + 1] * c[:, d]
+                s = -2.0 * acc + c2_[lo : lo + 512]
+                s[np.isnan(s)] = np.inf
+                j = np.argmin(s, axis=1)  # first minimum: lowest j
+                sj = s[np.arange(n), j]
+                better = sj < best_s
+                best_s[better] = sj[better]
+                best_j[better] = lo + j[better]
+            row_j = np.full(len(batch), -1)
+            row_j[ok.to_numpy(zero_copy_only=False)] = best_j
+            hit = row_j >= 0
+            out = np.zeros(len(batch), dtype=np.int32)
+            out[hit] = ids_[row_j[hit]]
+            yield batch.append_column("list_id", pa.array(out, mask=~hit))
 
-    return emb.mapInPandas(assign, out_schema)
+    return emb.mapInArrow(assign, schema)
 
 
 def ivf_topk(
@@ -448,14 +315,18 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: probe only the n_probe lists whose
-    centroids are nearest the query — prunes the scan to
-    ~n·n_probe/k_lists rows (partition pruning when list_id is the
-    storage partition key)."""
-    dists = [
-        (j, sum((float(q) - c) ** 2 for q, c in zip(query_vec, cj)))
-        for j, cj in enumerate(cents)
-    ]
-    probe = [j for j, _ in sorted(dists, key=lambda t: t[1])[:n_probe]]
+    centroids are nearest the query (ranked by `ivf_assign`'s score) —
+    prunes the scan to ~n·n_probe/k_lists rows (partition pruning when
+    list_id is the storage partition key)."""
+
+    def score(c):
+        dot = c2 = 0.0
+        for q, x in zip(query_vec, c):
+            dot += float(q) * float(x)
+            c2 += float(x) * float(x)
+        return -2.0 * dot + c2
+
+    probe = sorted(range(len(cents)), key=lambda j: score(cents[j]))[:n_probe]
     pruned = ivf_assign(emb, cents, vec_col).where(F.col("list_id").isin(probe))
     return cosine_topk(pruned, query_vec, k=k, key_col=key_col, vec_col=vec_col)
 

@@ -9,9 +9,10 @@ Scale rationale (targets a 1000-executor cluster; local[N] here):
     (operators/extract.salted_repartition, default: shuffle.partitions).
   - Arrow batches capped so a batch of page-text blobs fits executor
     memory (html/text rows are KB-MB scale, unlike typical columns).
-  - shuffle.partitions sized for local test runs; production submit
-    overrides via spark-submit --conf (jobs/extract.py documents the
-    cluster profile).
+  - shuffle.partitions sized for local test runs. Every setting here
+    is a default: what spark-submit passes (--master, --conf) wins, so
+    a submitted job runs on the cluster, with the settings, it was given
+    (docs/RUNBOOK.md documents the cluster profile).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import pathlib
 import tempfile
 import zipfile
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # At 100 TB / ~128 MB splits there are ~800k scan tasks; shuffle
@@ -54,20 +56,41 @@ _LOCAL_DEFAULTS = {
 }
 
 
-def get_spark(app_name: str = "pdf-parser-spark", cpus: int | None = None) -> SparkSession:
-    """local[N] session with the engine's tuned defaults.
+CPUS_HELP = "run on local[N] when the launcher gave no master (spark-submit always gives one)"
 
-    N comes from (in order): explicit arg, $SPARK_GRAFT_CPUS, all cores.
+
+def _launcher_conf() -> SparkConf:
+    """The spark.* settings spark-submit passed this process, read from
+    the JVM it already started; empty in a plain `python` process,
+    whose JVM the builder starts."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return SparkConf(loadDefaults=False)
+    SparkContext._ensure_initialized()
+    return SparkConf()
+
+
+def get_spark(app_name: str = "pdf-parser-spark", cpus: int | None = None) -> SparkSession:
+    """Session with the engine's tuned defaults, each applied only where
+    the launcher left the key unset.
+
+    With no master from the launcher it runs local[N], N from (in
+    order): explicit arg, $SPARK_GRAFT_CPUS, all cores.
     """
     n = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    builder = SparkSession.builder.appName(app_name).master(f"local[{n}]")
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if shuffle is None:
         cores = os.cpu_count() or 8 if n == "*" else int(n)
         shuffle = str(max(8, cores * 2))
-    builder = builder.config("spark.sql.shuffle.partitions", shuffle)
-    for key, value in _LOCAL_DEFAULTS.items():
-        builder = builder.config(key, value)
+    defaults = {
+        "spark.master": f"local[{n}]",
+        "spark.sql.shuffle.partitions": shuffle,
+        **_LOCAL_DEFAULTS,
+    }
+    launcher = _launcher_conf()
+    builder = SparkSession.builder.appName(app_name)
+    for key, value in defaults.items():
+        if not launcher.contains(key):
+            builder = builder.config(key, value)
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark

@@ -2455,11 +2455,13 @@ ORDER BY cos_raw DESC, vec_id LIMIT 10
 def q66(spark, sf):
     """IVF coarse-quantized ANN with fixed centroids: assign each
     vector to its nearest centroid via the dot-product identity
-    (argmin-invariant, oracle-replayable IEEE-exactly), probe only the
-    query's list, exact cosine top-k inside it. At scale list_id is
-    the storage partition key and the probe is partition pruning."""
+    (`sim.ivf_assign`'s numpy kernel, whose per-dimension float64
+    accumulation replays the oracle's list_dot_product IEEE-exactly),
+    probe only the query's list, exact cosine top-k inside it. At
+    scale list_id is the storage partition key and the probe is
+    partition pruning."""
     e = _t(spark, sf, "embeddings")
-    assigned = sim.ivf_assign_dot(e, _IVF_CENTS)
+    assigned = sim.ivf_assign(e, _IVF_CENTS)
     probe = _ivf_probe_id(_QVEC, _IVF_CENTS)
     pruned = assigned.where(F.col("list_id") == probe)
     topk = sim.cosine_topk(pruned, _QVEC, k=10, key_col="vec_id", vec_col="embedding")
@@ -3537,7 +3539,7 @@ FROM r WHERE rn = 1
 def q86(spark, sf):
     """SemDeDup (Abbas et al. 2023) — cluster-then-prune semantic
     dedup: assign every embedding to its nearest fixed coarse centroid
-    (the q66 dot-product identity, bit-replayable), pairwise cosine
+    (q66's `sim.ivf_assign`, centroids as a matrix), pairwise cosine
     ONLY within a cluster, and flag the higher key of every pair at
     cosine >= 0.35 (calibrated to the driver corpus's similarity
     range, like q32's 0.3) with its smallest similar lower key
@@ -3562,19 +3564,14 @@ def q86(spark, sf):
 @register("q87_semantic_dedup_table", _q86_oracle())
 def q87(spark, sf):
     """q86's SemDeDup with centroids supplied AS A TABLE (VERDICT r4
-    #1): assignment routes through `ivf_assign_table` — the packed
-    1-row broadcast + two higher-order functions whose expression size
-    is O(1) in k, the path a 100 TB SemDeDup with k≈10⁴–10⁵ trained
-    centroids must take (the literal argmin blows the JVM 64 KB
-    codegen limit past k≈64; tests/test_plans.py proves the plan shape
-    at k=4096). The oracle is BYTE-FOR-BYTE q86's SQL: passing green
-    here proves the table path's scoring — fold dot, Spark-side ||c||²
-    fold, strict-improvement lowest-j ties — is bitwise-identical to
-    the literal path the driver already attested."""
-    from ..operators.similarity import centroids_table
-
+    #1), the hand-off a trainer of k≈10⁴–10⁵ centroids uses:
+    `sim.ivf_assign` collects the (list_id, centroid) table on the
+    driver and broadcasts it, so the plan stays O(1) in k
+    (tests/test_plans.py checks it at k=4096). The oracle is
+    BYTE-FOR-BYTE q86's SQL, so list input and table input must give
+    the same losers, list ids and cosines."""
     e = _t(spark, sf, "embeddings")
-    cdf = centroids_table(spark, _IVF_CENTS)
+    cdf = sim.centroids_table(spark, _IVF_CENTS)
     out = dedup.semantic_dedup(
         e, cdf, threshold=0.35, key_col="vec_id", vec_col="embedding"
     )

@@ -351,6 +351,60 @@ def test_match_sections_frozen_cases():
         assert _as_json(_match(*case)) == want, case
 
 
+def _band_toc(sid: str, title: str) -> dict:
+    return {
+        "doc_title": "D", "section_id": sid, "title": title, "page": 1,
+        "level": sid.count(".") + 1, "parent_id": None, "full_path": f"{sid} {title}",
+    }
+
+
+def _band_chunk(sid: str, title: str) -> dict:
+    return {
+        "section_path": f"{sid} {title}", "start_heading": f"{sid} {title}",
+        "content": "words", "tables": [], "figures": [], "page_range": [1, 2],
+    }
+
+
+# (ToC rows, chunk rows, outputs this engine gives): no section id
+# matches, so every pairing is fuzzy; the best title ratio of each ToC
+# row lies in (0.80, 0.90) (no match at the 0.90 threshold) or in
+# (0.90, 1.0) (a match). In the last case two chunks tie on the best
+# ratio, and the first one is claimed.
+THRESHOLD_BAND_CASES = [
+    ([("3", "Cable Assemblies")], [("7", "Cable Assembly")],
+     [["3 Cable Assemblies"], ["7 Cable Assembly"], [], []]),
+    ([("2", "State Machines")], [("5", "State Machine Rules")],
+     [["2 State Machines"], ["5 State Machine Rules"], [], []]),
+    ([("1", "Power Delivery Rules")], [("4", "Power Delivery Rule")],
+     [[], [], [], ["1 Power Delivery Rules"]]),
+    ([("1", "Introduction"), ("2", "USB Type-C Connectors")],
+     [("8", "USB Type-C Connector Pins"), ("9", "Introductions")],
+     [[], [], ["2 USB Type-C Connectors"], ["1 Introduction", "2 USB Type-C Connectors"]]),
+    ([("3", "Cable Assemblies"), ("4", "Power Delivery Rules")],
+     [("10", "Power Delivery Rule"), ("11", "Cable Assembly")],
+     [["3 Cable Assemblies"], ["11 Cable Assembly"], [], ["4 Power Delivery Rules"]]),
+    ([("1", "Power Rules")], [("5", "Power Rule"), ("6", "Power Rule")],
+     [[], ["6 Power Rule"], [], ["1 Power Rules"]]),
+]
+
+
+def test_match_sections_fuzzy_threshold_band():
+    """Pins match_sections' default fuzzy_threshold of 0.90: a best
+    ratio in (0.80, 0.90) stays missing and one in (0.90, 1.0)
+    matches, so moving the default either way fails here."""
+    from difflib import SequenceMatcher
+
+    def ratio(a: str, b: str) -> float:
+        return SequenceMatcher(None, *(mmatch.clean_toc_title(t).lower() for t in (a, b))).ratio()
+
+    for toc, chunks, want in THRESHOLD_BAND_CASES:
+        for _, t in toc:
+            best = max(ratio(t, c) for _, c in chunks)
+            assert 0.80 < best < 0.90 or 0.90 < best < 1.0, (t, best)
+        got = _match([_band_toc(*t) for t in toc], [_band_chunk(*c) for c in chunks])
+        assert _as_json(got) == want, toc
+
+
 @NO_REFERENCE
 def test_match_sections_parity(ref, tmp_path):
     validator = ref.validate.Validator()

@@ -852,63 +852,71 @@ def test_sketch_probe_param_validation(spark):
     assert good.where(F.col("maybe_member")).count() == 1
 
 
-def test_ivf_assign_three_way_parity(spark):
-    """literal (ivf_assign_dot), table (ivf_assign_table) and pandas
-    (ivf_assign_pandas) assignment paths agree EXACTLY — same scoring
-    fold order, same lowest-j tie rule — on real embeddings."""
-    from pdf_parser_spark.queries.suite import _IVF_CENTS
+def _brute_force_list_ids(vecs, cents):
+    """Nearest centroid by the IVF score -2·v·c + ‖c‖², each dot a
+    sequential left-to-right float64 sum (np.add.accumulate), lowest
+    index on ties — one vector at a time, no centroid blocks."""
+    import numpy as np
+
+    c = np.asarray(cents, dtype=np.float64)
+    c2 = np.add.accumulate(c * c, axis=1)[:, -1]
+    out = {}
+    for key, v in vecs:
+        dots = np.add.accumulate(np.asarray(v, dtype=np.float64) * c, axis=1)[:, -1]
+        out[key] = int(np.argmin(-2.0 * dots + c2))
+    return out
+
+
+def test_ivf_assign_matches_brute_force(spark):
+    """ivf_assign equals a brute-force argmin on the 500 sf0.01
+    vectors, with k = 700 (two centroid blocks of 512) and k = 4096,
+    for centroids given as a matrix and as a (list_id, centroid)
+    table."""
+    import numpy as np
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    lit_ids = {r["vec_id"]: r["list_id"]
-               for r in sim.ivf_assign_dot(emb, _IVF_CENTS).select("vec_id", "list_id").collect()}
-    cdf = sim.centroids_table(spark, _IVF_CENTS)
-    tab_ids = {r["vec_id"]: r["list_id"]
-               for r in sim.ivf_assign_table(emb, cdf).select("vec_id", "list_id").collect()}
-    pd_ids = {r["vec_id"]: r["list_id"]
-              for r in sim.ivf_assign_pandas(emb, cdf).select("vec_id", "list_id").collect()}
-    assert lit_ids == tab_ids == pd_ids and len(lit_ids) == 500
-
-    # matrix (non-DataFrame) input and k past one block boundary
-    import random
-
-    k, dim = 700, 16  # spans two 512-blocks
-    cents = [[((i * (j + 3) + j) % 29 - 14) / 14.0 for i in range(dim)] for j in range(k)]
-    rows = [(i, [random.Random(i * 31 + d).uniform(-1, 1) for d in range(dim)])
-            for i in range(40)]
-    small = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: r["list_id"]
-           for r in sim.ivf_assign_pandas(small, cents).collect()}
-    c2 = [sum(x * x for x in c) for c in cents]
-    for i, v in rows:
-        best_j, best_s = -1, float("inf")
-        for j in range(k):
-            s = 0.0
-            for d in range(dim):
-                s += v[d] * cents[j][d]
-            s = -2.0 * s + c2[j]
-            if s < best_s:
-                best_j, best_s = j, s
-        assert got[i] == best_j, i
+    vecs = [(r["vec_id"], r["embedding"]) for r in emb.collect()]
+    assert len(vecs) == 500
+    dim = len(vecs[0][1])
+    for k in (700, 4096):
+        cents = np.random.default_rng(k).uniform(-1, 1, (k, dim)).tolist()
+        # the last centroid repeats the first vector's winner: a tie
+        # across blocks, which the lower index must win
+        first = _brute_force_list_ids(vecs[:1], cents)[vecs[0][0]]
+        cents[-1] = cents[first]
+        want = _brute_force_list_ids(vecs, cents)
+        assert want[vecs[0][0]] == first < k - 1
+        assert max(want.values()) >= 512  # some winners lie past the first block
+        for given in (cents, sim.centroids_table(spark, cents)):
+            got = {r["vec_id"]: r["list_id"]
+                   for r in sim.ivf_assign(emb, given).select("vec_id", "list_id").collect()}
+            assert got == want, k
 
 
-def test_semantic_dedup_pandas_assign_parity(spark):
-    """pandas_assign=True (vectorized numpy kernel) produces the
-    byte-same loser set as the HOF table path — scoring is
-    bitwise-identical by construction."""
+def test_ivf_assign_null_or_wrong_width_vector(spark):
+    """A NULL vector or one of the wrong width keeps its row with a
+    NULL list_id: it is neither dropped, nor put in a list, nor a
+    crashed task. SemDeDup never pairs it and never reports a NULL
+    cluster."""
     from pdf_parser_spark.operators import dedup as dd
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    cents = [[((i * (j + 3)) % 17 - 8) / 8.0 for i in range(64)] for j in range(4)]
-    cdf = sim.centroids_table(spark, cents)
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    emb = spark.createDataFrame(
+        [(1, [0.1, 0.9]), (2, None), (3, [0.9, 0.1])], "vec_id long, embedding array<float>"
+    )
+    got = {r["vec_id"]: r["list_id"] for r in sim.ivf_assign(emb, cents).collect()}
+    assert got == {1: 1, 2: None, 3: 0}
 
-    def rows(df):
-        return sorted(
-            (r["vec_id"], r["list_id"], r["dup_of"], r["cosine"]) for r in df.collect()
-        )
-
-    a = rows(dd.semantic_dedup(emb, cdf, threshold=0.35))
-    b = rows(dd.semantic_dedup(emb, cdf, threshold=0.35, pandas_assign=True))
-    assert a == b and len(a) > 0
+    bad = spark.createDataFrame(
+        [(1, [1.0, 0.01]), (2, [1.0, 0.02]), (3, [1.0, 0.0, 0.0]), (4, None), (5, [1.0, None])],
+        "vec_id long, embedding array<double>",
+    )
+    got = {r["vec_id"]: r["list_id"] for r in sim.ivf_assign(bad, cents).collect()}
+    assert got == {1: 0, 2: 0, 3: None, 4: None, 5: None}
+    pairs = {(r["vec_id"], r["dup_of"]) for r in dd.semantic_dedup(bad, cents, threshold=0.9).collect()}
+    assert pairs == {(2, 1)}
+    excl = dd.semantic_dedup_excluded(bad, cents, max_cluster_size=0).collect()
+    assert [(r["list_id"], r["n_members"]) for r in excl] == [(0, 2)]
 
 
 def test_near_dups_vs_history_null_signatures_never_pair(spark):

@@ -75,7 +75,7 @@ def test_profile_incremental_merge_equals_rebuild(spark, tmp_path):
     inc = str(tmp_path / "inc")
     r1 = run_profile(a, inc, spark=spark)
     assert r1["newly_profiled"] == 24
-    r2 = run_profile(ab, inc, spark=spark, resume=True)
+    r2 = run_profile(ab, inc, spark=spark)
     assert r2["newly_profiled"] == 16  # only the new docs were scanned
 
     fresh = str(tmp_path / "fresh")
@@ -86,8 +86,8 @@ def test_profile_incremental_merge_equals_rebuild(spark, tmp_path):
             _table(spark, fresh, name)
         ), f"merge != rebuild for {name}"
 
-    # a second resume with nothing new touches no sketch
-    r3 = run_profile(ab, inc, spark=spark, resume=True)
+    # a second run with nothing new touches no sketch
+    r3 = run_profile(ab, inc, spark=spark)
     assert r3["newly_profiled"] == 0
     assert r3["sketch_rows"] == r2["sketch_rows"]
 
@@ -100,7 +100,7 @@ def test_profile_snapshots_time_travel(spark, tmp_path):
 
     out = str(tmp_path / "snap")
     run_profile(a, out, spark=spark)
-    run_profile(ab, out, spark=spark, resume=True)
+    run_profile(ab, out, spark=spark)
 
     hll_tbl = str(Path(out) / "hll_distinct")
     log = sn.snapshots(hll_tbl)
@@ -130,7 +130,7 @@ def test_profile_param_mismatch_aborts(spark, tmp_path):
     run_profile(corpus, out, spark=spark)
     with pytest.raises(ValueError, match="cannot merge"):
         run_profile(
-            corpus, out, spark=spark, resume=True,
+            corpus, out, spark=spark,
             params={"hll_p": 13, "cms_d": 4, "cms_w": 1024,
                     "bloom_k": 4, "bloom_m": 8192},
         )
@@ -168,14 +168,14 @@ def test_profile_crash_between_table_applies_recovers(spark, tmp_path, monkeypat
 
     monkeypatch.setattr(cp, "_apply_table", flaky)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        run_profile(ab, out, spark=spark, resume=True)
+        run_profile(ab, out, spark=spark)
     monkeypatch.setattr(cp, "_apply_table", real_apply)
 
     # staging survived the crash, sealed
     staged = list((Path(out) / "_staging").iterdir())
     assert len(staged) == 1 and (staged[0] / "_READY.json").exists()
 
-    # re-run WITHOUT --resume (the natural retry): recovery completes
+    # re-run the same command (the natural retry): recovery completes
     # the pending batch and the recovered urls are still anti-joined
     r = run_profile(ab, out, spark=spark)
     assert r["recovered_batch"] is not None
@@ -217,14 +217,14 @@ def test_profile_refuses_plain_parquet_outdir(spark, tmp_path):
     write_documents(synthetic_documents(spark, 8, seed=42), corpus)
     spark.read.parquet(corpus).select("url").write.parquet(str(out / "seen_urls"))
     with pytest.raises(ValueError, match="seen_urls"):
-        run_profile(corpus, str(out), spark=spark, resume=True)
+        run_profile(corpus, str(out), spark=spark)
     assert not (out / "hll_distinct").exists()
 
 
 def test_profile_rerun_without_resume_never_double_counts(spark, tmp_path):
-    """ADVICE r4: re-running the job on an existing outdir WITHOUT
-    --resume must not merge the same documents twice (SUM sketches
-    silently double-counting). The seen_urls anti-join is
+    """ADVICE r4: re-running the job on an existing outdir must not
+    merge the same documents twice (SUM sketches silently
+    double-counting). The seen_urls anti-join is
     unconditional: the second run profiles 0 new docs and every
     sketch table is unchanged."""
     corpus = str(tmp_path / "docs.parquet")

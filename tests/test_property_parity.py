@@ -8,13 +8,26 @@ digits, controls) hunts the corner cases fixed examples miss.
 
 Strategy note: one Spark round-trip per example would be minutes; each
 property instead collects a BATCH of examples into one DataFrame pass.
+
+The four fuzz tests against the reference skip without its checkout.
+Each has a fixture twin that replays a frozen sample of its strategy's
+inputs against the outputs this engine gave on them (it matched the
+reference there); `python tests/test_property_parity.py` rewrites the
+fixtures:
+
+  test_toc_parser_fuzz_matches_reference        → test_toc_parser_frozen_cases
+  test_heading_extractor_fuzz_matches_reference → test_heading_extractor_frozen_cases
+  test_clean_content_fuzz_matches_reference     → test_clean_content_frozen_cases
+  test_matcher_fuzz_matches_reference           → test_matcher_frozen_cases
 """
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 # deterministic examples: the driver's per-round gate must not flake on
@@ -25,8 +38,16 @@ settings.load_profile("gate")
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pdf_parser_spark.core import text as core_text
+from conftest import REFERENCE_ROOT
+
+from pdf_parser_spark.core import matching, text as core_text
 from pdf_parser_spark.core.headings import extract_heading
+from pdf_parser_spark.core.toc import parse_toc_lines
+
+GOLDEN = Path(__file__).parent / "golden"
+NO_REFERENCE = pytest.mark.skipif(
+    not Path(REFERENCE_ROOT).exists(), reason="reference checkout unavailable"
+)
 
 ADVERSARIAL_ALPHABET = (
     "abcdefgXYZ0123456789 .·•․…\t  ‐‑–—−ﬁﬂﬀTtable Figure-_/\\\"'\n()[]"
@@ -125,14 +146,16 @@ toc_noise = st.sampled_from([
 ])
 
 
+toc_lines = st.lists(st.one_of(toc_line, toc_noise), min_size=0, max_size=25)
+
+
+@NO_REFERENCE
 @settings(max_examples=200, deadline=None)
-@given(st.lists(st.one_of(toc_line, toc_noise), min_size=0, max_size=25))
+@given(toc_lines)
 def test_toc_parser_fuzz_matches_reference(ref, lines):
     """core.toc.parse_toc_lines must equal the reference parser on
     arbitrary ToC-shaped input (incl. the []-on-any-error catch-all,
     parent repair, and appendix-aware sort)."""
-    from pdf_parser_spark.core.toc import parse_toc_lines
-
     ours = parse_toc_lines(lines, doc_title="fuzz")
     theirs = [e.model_dump() for e in ref.toc.parse_toc_lines(lines, doc_title="fuzz")]
     assert ours == theirs, lines
@@ -149,13 +172,15 @@ heading_line = st.one_of(
 )
 
 
+heading_lines = st.lists(heading_line, min_size=0, max_size=20)
+
+
+@NO_REFERENCE
 @settings(max_examples=200, deadline=None)
-@given(st.lists(heading_line, min_size=0, max_size=20))
+@given(heading_lines)
 def test_heading_extractor_fuzz_matches_reference(ref, lines):
     """core.headings.extract_heading ≡ the reference detector (grammar,
     title clean, every noise rule incl. the num=title quirk)."""
-    from pdf_parser_spark.core.headings import extract_heading
-
     detector = ref.chunk.HeadingDetector(ref.chunk.Cleaner())
     for line in lines:
         ours = extract_heading(line)
@@ -166,6 +191,7 @@ def test_heading_extractor_fuzz_matches_reference(ref, lines):
 content_text = st.lists(line_strategy, min_size=0, max_size=12).map("\n".join)
 
 
+@NO_REFERENCE
 @settings(max_examples=250, deadline=None)
 @given(content_text)
 def test_clean_content_fuzz_matches_reference(ref, text):
@@ -222,22 +248,19 @@ def matcher_case(draw):
     return toc, chunks
 
 
+@NO_REFERENCE
 @settings(max_examples=120, deadline=None)
 @given(matcher_case())
 def test_matcher_fuzz_matches_reference(ref, tmp_path_factory, case):
     """core matching (J1-J5 exact + greedy fuzzy + W7 order check) ≡
     the reference Validator, fed through the same JSONL load path."""
-    import json as _json
-
-    from pdf_parser_spark.core import matching
-
     toc, chunks = case
     work = tmp_path_factory.mktemp("m")
     (work / "toc.jsonl").write_text(
-        "\n".join(_json.dumps(t, ensure_ascii=False) for t in toc)
+        "\n".join(json.dumps(t, ensure_ascii=False) for t in toc)
     )
     (work / "chunks.jsonl").write_text(
-        "\n".join(_json.dumps(c, ensure_ascii=False) for c in chunks)
+        "\n".join(json.dumps(c, ensure_ascii=False) for c in chunks)
     )
 
     validator = ref.validate.Validator()
@@ -245,15 +268,94 @@ def test_matcher_fuzz_matches_reference(ref, tmp_path_factory, case):
     chunks_v = validator.load_chunks(str(work / "chunks.jsonl"))
     missing, extra, ooo, matched = validator.match_sections(toc_v, chunks_v)
 
-    ours = matching.validation_report(
-        matching.load_toc_records(toc),
-        [matching.coerce_chunk_record(c) for c in chunks],
-        fuzzy_threshold=0.90,
-        prefer_section_id=True,
-    )
+    ours = _matcher_report((toc, chunks))
     assert ours["missing_sections"] == missing, (toc, chunks)
     assert ours["extra_sections"] == extra
     assert ours["out_of_order_sections"] == ooo
     assert ours["matched_sections"] == matched
     assert ours["toc_section_count"] == len(toc_v)
     assert ours["parsed_section_count"] == len(chunks_v)
+
+
+# --- fixture twins of the reference fuzz tests ------------------------
+
+
+def _matcher_report(case):
+    toc, chunks = case
+    return matching.validation_report(
+        matching.load_toc_records(toc),
+        [matching.coerce_chunk_record(c) for c in chunks],
+        fuzzy_threshold=0.90,
+        prefer_section_id=True,
+    )
+
+
+# fixture → (strategy, examples frozen, the engine function it pins)
+FROZEN = {
+    "property_toc_cases.jsonl": (
+        toc_lines, 200, lambda lines: parse_toc_lines(lines, doc_title="fuzz")
+    ),
+    "property_heading_cases.jsonl": (
+        heading_lines, 200, lambda lines: [extract_heading(line) for line in lines]
+    ),
+    "property_clean_content_cases.jsonl": (
+        content_text,
+        250,
+        lambda text: [core_text.clean_content(text), core_text.normalize_sentences(text)],
+    ),
+    "property_matcher_cases.jsonl": (matcher_case(), 120, _matcher_report),
+}
+
+
+def _replay(name: str) -> None:
+    _, n, fn = FROZEN[name]
+    lines = (GOLDEN / name).read_text(encoding="utf-8").splitlines()
+    assert len(lines) == n
+    for line in lines:
+        case = json.loads(line)
+        assert json.loads(json.dumps(fn(case["input"]))) == case["output"], case["input"]
+
+
+def test_toc_parser_frozen_cases():
+    _replay("property_toc_cases.jsonl")
+
+
+def test_heading_extractor_frozen_cases():
+    _replay("property_heading_cases.jsonl")
+
+
+def test_clean_content_frozen_cases():
+    _replay("property_clean_content_cases.jsonl")
+
+
+def test_matcher_frozen_cases():
+    _replay("property_matcher_cases.jsonl")
+
+
+def _freeze() -> None:
+    """Draw each strategy's first `n` derandomized examples and write
+    them with this engine's outputs."""
+    from hypothesis import Phase
+
+    for name, (strategy, n, fn) in FROZEN.items():
+        drawn = []
+
+        @settings(max_examples=n, derandomize=True, database=None, deadline=None,
+                  phases=[Phase.generate])
+        @given(strategy)
+        def draw(example):
+            drawn.append(example)
+
+        draw()
+        assert len(drawn) == n, (name, len(drawn))
+        (GOLDEN / name).write_text(
+            "".join(
+                json.dumps({"input": x, "output": fn(x)}, ensure_ascii=False) + "\n"
+                for x in drawn
+            ),
+            encoding="utf-8",
+        )
+
+
+if __name__ == "__main__":
+    _freeze()

@@ -11,7 +11,11 @@ bin/spark-submit in a scratch directory:
     the driver AND inside executor python workers must resolve from
     the shipped archive, exactly as on a 1000-executor cluster;
   - the job's resume contract is exercised through the same cold
-    entry point (second submit: 0 newly extracted, pure anti-join).
+    entry point (second submit: 0 newly extracted, pure anti-join);
+  - the launcher owns the cluster: under `--master local-cluster[2,1,1024]`
+    (two executor JVMs started from the distribution) the job runs on
+    those executors with the submitted shuffle.partitions, and writes
+    the same `extracted` rows as the local[4] submit.
 
 Reference parity: the reference is launched as `python run.py <pdf>`
 per document (/root/reference/README.md); this is the distributed
@@ -20,6 +24,7 @@ equivalent launch surface.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import pathlib
@@ -52,7 +57,14 @@ def _build_pyfiles_zip(dest: pathlib.Path) -> pathlib.Path:
     return zip_path
 
 
-def _submit(job: pathlib.Path, zip_path: pathlib.Path, cwd: pathlib.Path, *args: str):
+def _submit(
+    job: pathlib.Path,
+    zip_path: pathlib.Path,
+    cwd: pathlib.Path,
+    *args: str,
+    master: str = "local[4]",
+    conf: tuple[str, ...] = ("spark.sql.shuffle.partitions=8",),
+):
     env = {
         k: v
         for k, v in os.environ.items()
@@ -64,9 +76,9 @@ def _submit(job: pathlib.Path, zip_path: pathlib.Path, cwd: pathlib.Path, *args:
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable
     cmd = [
         SPARK_SUBMIT,
-        "--master", "local[4]",
+        "--master", master,
         "--conf", "spark.ui.enabled=false",
-        "--conf", "spark.sql.shuffle.partitions=8",
+        *(arg for c in conf for arg in ("--conf", c)),
         "--py-files", str(zip_path),
         str(job),
         *args,
@@ -85,9 +97,13 @@ def _summary(proc: subprocess.CompletedProcess) -> dict:
     raise AssertionError(f"no JSON summary in stdout:\n{proc.stdout[-2000:]}")
 
 
-def test_spark_submit_pyfiles_extract_and_resume(spark, tmp_path):
+@pytest.fixture(scope="module")
+def local_submit(spark, tmp_path_factory):
+    """One cold local[4] submit of the extraction job over 30 seed-42
+    docs: (work dir, job script, zip, docs, outdir, summary)."""
     from pdf_parser_spark.sources.corpus import synthetic_documents, write_documents
 
+    tmp_path = tmp_path_factory.mktemp("submit")
     docs = tmp_path / "docs.parquet"
     write_documents(synthetic_documents(spark, 30, seed=42), str(docs))
 
@@ -97,10 +113,31 @@ def test_spark_submit_pyfiles_extract_and_resume(spark, tmp_path):
     shutil.copy(REPO / "jobs" / "extract.py", job)
     zip_path = _build_pyfiles_zip(tmp_path)
     outdir = tmp_path / "jobout"
-
     s1 = _summary(
         _submit(job, zip_path, tmp_path, "--input", str(docs), "--outdir", str(outdir))
     )
+    return tmp_path, job, zip_path, docs, outdir, s1
+
+
+def _digests(spark, table: pathlib.Path) -> dict[str, str]:
+    """sha256 per url of an `extracted` row, without the partition
+    stamp and timing that depend on how the run was scheduled. An
+    `error` counts by its exception line: the traceback above it names
+    the directory each executor unpacked the package into."""
+    from pdf_parser_spark.sinks import snapshots as sn
+
+    digests = {}
+    for r in sn.read(spark, str(table)).drop("partition_id", "extract_secs").collect():
+        row = r.asDict(recursive=True)
+        if row["error"]:
+            row["error"] = row["error"].rstrip().splitlines()[-1]
+        canon = json.dumps(row, sort_keys=True, default=str)
+        digests[row["url"]] = hashlib.sha256(canon.encode()).hexdigest()
+    return digests
+
+
+def test_spark_submit_pyfiles_extract_and_resume(local_submit):
+    tmp_path, job, zip_path, docs, outdir, s1 = local_submit
     assert s1["newly_extracted"] == 30
     # golden statuses at seed 42 / 30 docs (see .claude/skills/verify)
     assert s1["status_counts"].get("ok") == 23
@@ -114,3 +151,41 @@ def test_spark_submit_pyfiles_extract_and_resume(spark, tmp_path):
     )
     assert s2["already_extracted"] == 30
     assert s2["newly_extracted"] == 0
+
+
+def test_spark_submit_runs_on_the_launchers_cluster(spark, local_submit):
+    """What spark-submit passes wins over get_spark's local defaults:
+    the job registers the two executors of `local-cluster[2,1,1024]`,
+    its extraction stage runs the submitted 123 partitions, and the
+    `extracted` rows equal the local[4] submit's."""
+    tmp_path, job, zip_path, docs, local_out, _ = local_submit
+    outdir = tmp_path / "clusterout"
+    events = tmp_path / "events"
+    events.mkdir()
+    s = _summary(
+        _submit(
+            job, zip_path, tmp_path, "--input", str(docs), "--outdir", str(outdir),
+            master="local-cluster[2,1,1024]",
+            conf=(
+                "spark.sql.shuffle.partitions=123",
+                "spark.eventLog.enabled=true",
+                f"spark.eventLog.dir={events}",
+                "spark.eventLog.compress=false",
+                "spark.eventLog.rolling.enabled=false",
+            ),
+        )
+    )
+    assert s["newly_extracted"] == 30
+
+    log = [json.loads(line) for f in events.iterdir() for line in f.read_text().splitlines()]
+    executors = {
+        e["Executor ID"] for e in log
+        if e["Event"] == "SparkListenerExecutorAdded" and e["Executor ID"] != "driver"
+    }
+    assert len(executors) == 2, executors
+    task_counts = {
+        e["Stage Info"]["Number of Tasks"] for e in log
+        if e["Event"] == "SparkListenerStageSubmitted"
+    }
+    assert 123 in task_counts, task_counts
+    assert _digests(spark, outdir / "extracted") == _digests(spark, local_out / "extracted")
